@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
@@ -15,16 +14,7 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     // Warm the session so the first measured query is not charged JVM /
@@ -43,13 +33,7 @@ object Bench {
 
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Optional subset run (comma-separated names) for targeted
-    // measurements — e.g. the session-shared discovery trio.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.suite().foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
         val df = fn(spark, sfDir)
@@ -106,9 +90,10 @@ object Bench {
     // to the overall median when controls are absent), and (b) a BURST
     // list — maximal contiguous stretches of >= 3 queries at ratio >= 2
     // (and >= 0.2 s absolute, so sub-second noise can't qualify) while
-    // the median OUTSIDE the stretch stays <= 1.5. A burst run refuses
-    // to overwrite BENCH_LOCAL.json. Reference: BENCH_LOCAL.json for
-    // sf0.1 runs, or SPARK_GRAFT_BENCH_REF for scale snapshots.
+    // the median OUTSIDE the stretch stays <= 1.5; such a run is no
+    // snapshot candidate. Reference: BENCH_LOCAL.json (the committed
+    // sf0.1 snapshot, read only) for sf0.1 runs, or
+    // SPARK_GRAFT_BENCH_REF for scale snapshots.
     val refPath = sys.env.get("SPARK_GRAFT_BENCH_REF").getOrElse(
       if (sfDir.endsWith("sf0.1")) "BENCH_LOCAL.json" else "")
     val refQueries: Map[String, Double] =
@@ -168,8 +153,8 @@ object Bench {
     if (burst.nonEmpty)
       System.err.println(s"BENCH BURST detected (co-tenant signature): " +
         s"${burst.head}..${burst.last} at >=2x vs $refPath with median " +
-        s"elsewhere ~${r3(median(ratios.map(_._2)))}; refusing to " +
-        "overwrite BENCH_LOCAL.json")
+        s"elsewhere ~${r3(median(ratios.map(_._2)))}; rerun before " +
+        "taking this run as a snapshot")
     System.err.println(s"BENCH host_factor=${r3(hostFactor)} " +
       s"(controls ${controls.mkString(",")} vs $refPath)")
 
@@ -202,17 +187,9 @@ object Bench {
     // metric always survives and parses.
     println(
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_ok":${timings.size},"n_err":${errors.size},"sf":${jstr(sfDir)}}""")
-    // BENCH_LOCAL.json is the canonical sf0.1 snapshot the docs cite;
-    // a run against any other input must not clobber it, and neither
-    // must a BURST run (see the protocol above). BENCH_LAST.json
-    // always holds the most recent run (any SF) for scale-snapshot
-    // copying without stdout parsing.
-    // Subset runs (SPARK_GRAFT_ONLY) are measurement probes, never the
-    // canonical snapshot — a 4-query run must not clobber the 190+-row
-    // reference every later burst/host-factor computation keys on.
-    if (sfDir == "/root/testdata/sf0.1" && burst.isEmpty && only.isEmpty)
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LOCAL.json"), line)
-      catch { case _: Throwable => () }
+    // BENCH_LAST.json always holds the most recent run (any SF) for
+    // snapshot copying without stdout parsing; BENCH_LOCAL.json is
+    // never written by a run.
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LAST.json"), line)
     catch { case _: Throwable => () }
     spark.stop()

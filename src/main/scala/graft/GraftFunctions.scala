@@ -4,7 +4,6 @@ import graft.functions.{IsoDurationSecondsExpr, JaccardSimExpr, LshBucketExpr, M
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** SQL surface for graft's custom Catalyst expressions: registers
   * `iso_duration_seconds`, `vec_cosine`, `simhash64`,
@@ -17,10 +16,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * the exact LogicalPlan the Scala DataFrame ops build, composable
   * with ordinary SQL around them.
   *
-  * Two entry points:
-  *  - `spark.sql.extensions=graft.GraftExtensions` (spark-submit path);
-  *  - `GraftFunctions.register(spark)` (imperative, for an already-built
-  *    session).
+  * One entry point, [[GraftExtensions]]: `graft.core.Sessions` applies
+  * it to every session it builds, and a spark-submit deployment sets
+  * `spark.sql.extensions=graft.GraftExtensions`.
   */
 object GraftFunctions {
 
@@ -579,33 +577,14 @@ object GraftFunctions {
         strLit(args(1), "aCol"), strLit(args(2), "bCol"),
         longLit(args(3), "k").toInt))
     })
-
-  /** Imperative registration into an existing session. */
-  def register(spark: SparkSession): Unit = {
-    registry.foreach { case (name, builder) =>
-      Bridge.registerFunction(spark, name, builder)
-    }
-    tableRegistry.foreach { case (name, builder) =>
-      Bridge.registerTableFunction(spark, name, builder)
-    }
-  }
-
-  /** Imperative optimizer-rule registration for an already-built
-    * session (`spark.experimental.extraOptimizations` runs after the
-    * main optimizer batches, where the join patterns are visible).
-    * Idempotent.
-    */
-  def registerOptimizations(spark: SparkSession): Unit = {
-    val rules = Seq(graft.plans.HammingBandJoinRule, graft.plans.CosineBandJoinRule,
-      graft.plans.JaccardPrefixJoinRule, graft.plans.IntervalBinJoinRule)
-    val missing = rules.filterNot(spark.experimental.extraOptimizations.contains)
-    if (missing.nonEmpty)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations ++ missing
-  }
 }
 
-/** `spark.sql.extensions` entry point: functions + optimizer rules. */
+/** graft's functions, table functions and optimizer rules, installed
+  * when a session is created (`graft.core.Sessions`, or
+  * `spark.sql.extensions` under spark-submit). The exact join rules are
+  * always on; CosineBandJoinRule is approximate and does nothing until
+  * `spark.graft.cosineJoin.rewrite` is set.
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.registry.foreach { case (name, builder) =>

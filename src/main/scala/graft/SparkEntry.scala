@@ -234,6 +234,15 @@ object SparkEntry {
       .orderBy(col("q_id"))
   }
 
+  /** The rows Bench and Verify run, in name order: every row, or only
+    * the comma-separated names in `SPARK_GRAFT_ONLY` when it is set.
+    */
+  def suite(): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    queries.toSeq.sortBy(_._1).filter { case (name, _) => only.forall(_.contains(name)) }
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- aggregations (A1-A6) --------------------------------------
     "q01_agg_pricing" -> ((s, d) => {
@@ -849,7 +858,6 @@ object SparkEntry {
       // oracle row (q62 pins operator == brute force, so the chain
       // reaches ground truth); the plan hard-assert keeps the rewrite
       // engaged at every scale the gate/bench runs.
-      GraftFunctions.registerOptimizations(s)
       val docs = documents(s, d)
       val sh = docs.select(col("doc_id"), Dedup.simhash64(col("text")).as("sh"))
       val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
@@ -958,12 +966,12 @@ object SparkEntry {
       // BroadcastNestedLoopJoin; with the opt-in session knob,
       // CosineBandJoinRule re-plans it as the multi-probe bucketed
       // equi-join (q67's hand-built shape, derived automatically).
-      // Runs in a child session so the approximate-rewrite knob can
-      // never leak into any other query's planning; the builder
-      // hard-asserts the nested loop is gone before returning. Same
-      // per-label soundness envelope (and oracle) as q67.
+      // The knob is set on a child session (which carries the same
+      // extensions) so it can never leak into any other query's
+      // planning; the builder hard-asserts the nested loop is gone
+      // before returning. Same per-label soundness envelope (and
+      // oracle) as q67.
       val s2 = s.newSession()
-      GraftFunctions.registerOptimizations(s2)
       s2.conf.set("spark.graft.cosineJoin.rewrite", "true")
       val emb = embeddings(s2, d)
       s2.conf.set("spark.graft.cosineJoin.numPlanes",
@@ -986,7 +994,6 @@ object SparkEntry {
       // re-plans it as the prefix-filtered token equi-join. Because the
       // rewrite is exact this is a FULL-VALUE oracle row: DuckDB
       // recomputes the same pairs and Jaccard values from all-pairs.
-      GraftFunctions.registerOptimizations(s)
       val sets = documents(s, d)
         .select(col("doc_id"), Dedup.shingleHashes(col("text"), 3).as("sh"))
       val a = sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
@@ -1715,11 +1722,8 @@ object SparkEntry {
       // the bin width DERIVED from the interval relation's
       // max(end−start) — no session knobs at all. The rewrite is
       // EXACT, so this is a FULL-VALUE oracle row — same oracle SQL as
-      // q97. Child session keeps the rule registration explicit; the
-      // builder hard-asserts the nested loop is gone.
-      val s2 = s.newSession()
-      GraftFunctions.registerOptimizations(s2)
-      val ev = events(s2, d)
+      // q97. The builder hard-asserts the nested loop is gone.
+      val ev = events(s, d)
       val wins = ev
         .where(col("event_type") === "error" && col("event_id") % 97 === 0)
         .select(col("event_id").as("wid"), col("ts").as("w_start"),

@@ -78,24 +78,3 @@ object Tables {
     total
   }
 }
-
-/** Session factory with the scale-oriented defaults used by tests and
-  * local tools. The driver's Verify/Bench mains build their own session;
-  * this one mirrors their config (UTC, AQE, small shuffle partitions
-  * for local[32]).
-  */
-object Sessions {
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
-    SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", math.max(cores, 4).toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tz-naive parquet timestamps = UTC instants here (reference
-      // semantics); read them as TimestampType so time arithmetic works.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-}

@@ -47,11 +47,11 @@ import org.apache.spark.sql.types.LongType
   * (beyond that the bands get too short to prune anything). All other
   * conjuncts are preserved in the post-join filter.
   *
-  * Registered via `GraftExtensions` (spark.sql.extensions) or
-  * imperatively with `GraftFunctions.registerOptimizations(spark)`
-  * (`spark.experimental.extraOptimizations`, which runs after the main
-  * optimizer batches — by then a crossJoin+where has already been
-  * collapsed into a conditioned Join, so the pattern is visible).
+  * Installed by `GraftExtensions` when `graft.core.Sessions` builds a
+  * session. It runs in the fixed-point operator-optimization batch, so
+  * it must be a fixed point of its own output (see the equi-conjunct
+  * guard); a crossJoin+where reaches it as a conditioned Join once
+  * predicate pushdown has folded the filter in.
   */
 object HammingBandJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 

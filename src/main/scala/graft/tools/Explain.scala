@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the formatted physical plan for the named
   * queries (or a default audit set) so scan pruning / pushdown /
   * broadcast / TakeOrderedAndProject decisions are visible and
@@ -13,13 +11,7 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q02_filter_range", "q03_join_revenue", "q28_cosine_topk",
         "q37_filter_compiler", "q46_catalog", "q58_asof_join")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -39,32 +39,4 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Register a function builder in the session's function registry
-    * (sessionState is private[sql]; this is the imperative counterpart
-    * of a `spark.sql.extensions` injectFunction).
-    */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", name),
-      builder)
-
-  /** Register a TABLE function (TVF) builder — the imperative
-    * counterpart of `injectTableFunction`: `SELECT * FROM name(args)`
-    * resolves through the session's table-function registry to the
-    * LogicalPlan the builder returns.
-    */
-  def registerTableFunction(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
-      builder: Seq[Expression] =>
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit =
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", name),
-      builder)
 }

@@ -330,7 +330,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("custom expressions reject wrong input types at analysis time") {
-    GraftFunctions.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT simhash64('not-an-array')").collect()
     }
@@ -411,7 +410,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("multi_match: Column + codegen and SQL surfaces match the automaton") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val lex = Seq("ab", "abab", "b a", "zz")
     val texts = Seq("abab a", "b ab", "", "zzab", "xyz")
     val viaCol = texts.toDF("t")

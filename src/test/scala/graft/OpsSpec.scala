@@ -339,7 +339,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("ngrams array: space-joined windows, case-folded, SQL-registered") {
-    GraftFunctions.register(spark)
     val out = spark.sql("SELECT ngrams('The quick  brown fox', 2) AS g")
       .as[Seq[String]].head()
     assert(out == Seq("the quick", "quick brown", "brown fox"))

@@ -42,11 +42,12 @@ class PlansSpec extends SparkSpec {
   }
 
   test("banded rewrite returns exactly the naive join's pairs, once each") {
-    // Naive plan first (rule not yet registered on this session path):
-    val naive = hammingJoin(3).collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    // Naive reference: every pair compared on the driver.
+    val keys = fixture().as[(Long, Long)].collect().toSeq
+    val naive = (for { (ia, sa) <- keys; (ib, sb) <- keys
+        if ia < ib && java.lang.Long.bitCount(sa ^ sb) <= 3 } yield (ia, ib)).sorted
     assert(naive.nonEmpty && naive.contains((1L, 4L)) && naive.contains((1L, 2L)))
 
-    GraftFunctions.registerOptimizations(spark)
     val rewritten = hammingJoin(3)
     val got = rewritten.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     // exactly-once: the (1,4) identical pair agrees on all 4 bands but
@@ -61,7 +62,6 @@ class PlansSpec extends SparkSpec {
   }
 
   test("rewrite preserves row multiplicities and extra conjuncts") {
-    GraftFunctions.registerOptimizations(spark)
     // Duplicate left rows must yield duplicate output rows (no distinct
     // smuggled in by the rewrite).
     val a = Seq((1L, 42L), (1L, 42L)).toDF("id_a", "sh_a")
@@ -95,32 +95,63 @@ class PlansSpec extends SparkSpec {
   }
 
   test("spark.sql.extensions path: injected rule optimizes and answers correctly") {
-    import org.apache.spark.sql.SparkSession
-    // Build a sibling session on the same SparkContext with the
-    // extensions applied (getOrCreate only honors withExtensions when
-    // no default session exists).
-    val prev = SparkSession.getDefaultSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions()(_))
-      .getOrCreate()
-    try {
-      import s2.implicits._
-      val a = Seq((1L, 42L), (2L, 43L)).toDF("id_a", "sh_a")
-      val b = Seq((3L, 42L), (4L, ~42L)).toDF("id_b", "sh_b")
-      val q = a.join(b, bit_count(col("sh_a").bitwiseXOR(col("sh_b"))) <= lit(3))
-      // Pre-guard this hung in the optimizer (rule re-fired every
-      // fixed-point iteration); now it must plan and answer promptly.
-      val rows = q.select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      assert(rows == Set((1L, 3L), (2L, 3L)))
-      assert(q.queryExecution.executedPlan.toString.contains("Generate"))
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prev.foreach { p => SparkSession.setDefaultSession(p); SparkSession.setActiveSession(p) }
+    // The factory session carries graft from creation: SQL functions,
+    // table functions and the exact join rules, with no call made here.
+    val cos = spark.sql("SELECT vec_cosine(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS c")
+      .head().getDouble(0)
+    assert(math.abs(cos - 1.0) < 1e-12)
+    Seq((1L, "same"), (2L, "same"), (3L, "other")).toDF("doc_id", "text")
+      .createOrReplaceTempView("ext_docs")
+    assert(spark.sql("SELECT doc_id FROM exact_dedup('ext_docs', 'text', 'doc_id')")
+      .as[Long].collect().toSet == Set(1L, 3L))
+
+    def assertNoNestedLoop(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+        s"$what join still nested-loops:\n$plan")
     }
+    val ham = Seq((1L, 42L), (2L, 43L)).toDF("id_a", "sh_a")
+      .join(Seq((3L, 42L), (4L, ~42L)).toDF("id_b", "sh_b"),
+        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))) <= lit(3))
+    assertNoNestedLoop(ham, "Hamming")
+    assert(ham.select("id_a", "id_b").as[(Long, Long)].collect().toSet == Set((1L, 3L), (2L, 3L)))
+    val sets = Seq((1L, "a b c d"), (2L, "a b c e")).toDF("doc_id", "text")
+      .select(col("doc_id"), graft.ops.Dedup.shingleHashes(col("text"), 1).as("sh"))
+    assertNoNestedLoop(sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
+      .join(sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b")),
+        graft.ops.Dedup.jaccard(col("sh_a"), col("sh_b")) >= lit(0.5)), "Jaccard")
+    val pts = Seq((1L, 100L)).toDF("pid", "sec").select(col("pid"), timestamp_seconds(col("sec")).as("ts"))
+    val ivs = Seq((9L, 50L, 150L)).toDF("wid", "s", "e")
+      .select(col("wid"), timestamp_seconds(col("s")).as("w_start"), timestamp_seconds(col("e")).as("w_end"))
+    assertNoNestedLoop(pts.join(ivs, col("ts") >= col("w_start") && col("ts") < col("w_end")),
+      "point-in-interval")
+    // The approximate cosine rewrite stays off until its conf is set.
+    val emb = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.9f, 0.1f))).toDF("vec_id", "embedding")
+    assert(cosineJoin(emb, 0.6).queryExecution.executedPlan.toString
+      .contains("BroadcastNestedLoopJoin"), "cosine join rewritten without its conf")
+
+    // Building and running the rule rows leaves the shared session as
+    // it found it, so a later row plans the same before and after them.
+    val dir = "/root/testdata/sf0.001"
+    val later = "q97_interval_join"
+    def laterPlan() = SparkEntry.queries(later)(spark, dir).queryExecution.optimizedPlan
+    val planBefore = laterPlan()
+    val confBefore = spark.conf.getAll
+    val rulesBefore = spark.experimental.extraOptimizations
+    for (q <- Seq("q65_hamming_join_rule", "q68_cosine_join_rule",
+        "q69_jaccard_join_rule", "q100_interval_join_rule")) {
+      assert(SparkEntry.queries(q)(spark, dir).count() > 0, q)
+      graft.core.Caches.releaseAll()
+    }
+    assert(spark.conf.getAll == confBefore)
+    assert(spark.experimental.extraOptimizations == rulesBefore)
+    val planAfter = laterPlan()
+    assert(planAfter.sameResult(planBefore),
+      s"$later planned differently after the rule rows:\n$planBefore\n---\n$planAfter")
+  }
+
+  test("every SparkEntry row has oracle SQL and every oracle SQL has a row") {
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
   // ---- CosineBandJoinRule (opt-in approximate rewrite) ----------------
@@ -151,7 +182,6 @@ class PlansSpec extends SparkSpec {
   }
 
   test("cosine-threshold join rule: opt-in, bucketed plan, sound, matches the hand-built operator") {
-    GraftFunctions.registerOptimizations(spark)
     val df = clusteredEmb(nClusters = 8, perCluster = 25, dim = 64)
     df.persist()
     try {
@@ -202,7 +232,6 @@ class PlansSpec extends SparkSpec {
     // at corpus scale. Pin both halves: (a) the filter sits below the
     // Generate in the plan, (b) results on dirty data equal the clean
     // subset's (null rows can never satisfy the cosine predicate).
-    GraftFunctions.registerOptimizations(spark)
     val clean = clusteredEmb(nClusters = 4, perCluster = 10, dim = 64)
     val dirty = clean.unionByName(
       Seq.tabulate(20)(i => (1000L + i, null: Array[Float])).toDF("vec_id", "embedding"))
@@ -242,7 +271,6 @@ class PlansSpec extends SparkSpec {
   // ---- JaccardPrefixJoinRule (always-on EXACT rewrite) ----------------
 
   test("jaccard-threshold join rule: exact rewrite equals the naive join, once each") {
-    GraftFunctions.registerOptimizations(spark)
     import graft.ops.Dedup
     // Sliding-vocabulary corpus (spread of true Jaccard values) plus a
     // duplicated row (multiplicity trap) and empty/short docs.
@@ -347,7 +375,6 @@ class PlansSpec extends SparkSpec {
   }
 
   test("rewrite matches simhashNearDuplicates output on real text") {
-    GraftFunctions.registerOptimizations(spark)
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     val sh = docs.select(col("doc_id"), graft.ops.Dedup.simhash64(col("text")).as("sh"))
     val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))

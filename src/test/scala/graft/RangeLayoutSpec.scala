@@ -50,8 +50,8 @@ class RangeLayoutSpec extends SparkSpec {
   }
 
   test("binned interval join plans as an equi hash join, not a nested loop") {
-    // The always-on rule (if a prior test registered it on this
-    // session) must not silently fix the naive plan under the assert.
+    // The always-on rule must not silently fix the naive plan under
+    // the assert.
     spark.conf.set(graft.plans.IntervalBinJoinRule.EnabledKey, "false")
     val naivePlan = pointsDf.join(intervalsDf,
         col("ts") >= col("w_start") && col("ts") < col("w_end"))
@@ -68,7 +68,6 @@ class RangeLayoutSpec extends SparkSpec {
   }
 
   test("interval join rule: always-on w/ derived width, binned plan, exact incl. multiplicities") {
-    GraftFunctions.registerOptimizations(spark)
     // Duplicate one interval so multiplicity preservation is observable.
     // The fixture's widths are MIXED (60s, 1200s, 60s, degenerate), so
     // the derived bin = ceil(max(end−start)) = 1200s exercises the
@@ -109,7 +108,6 @@ class RangeLayoutSpec extends SparkSpec {
   }
 
   test("interval join rule: deriveStats=false skips the planning-time job, explicit width still rewrites") {
-    GraftFunctions.registerOptimizations(spark)
     // A FRESH interval relation (distinct wids -> distinct canonical
     // subtree) so no width memoized by earlier tests can serve.
     val ivs = intervalsDf.select((col("wid") + 9000L).as("wid"),
@@ -155,7 +153,6 @@ class RangeLayoutSpec extends SparkSpec {
     // a default width rather than decline — the rewrite is exact for
     // any width, and declining would flip the plan shape (and crash
     // q100's engagement pin) on empty input. Found by tools/EmptySweep.
-    GraftFunctions.registerOptimizations(spark)
     val emptyIvs = intervalsDf.where(col("wid") < 0L)
     val df = pointsDf.join(emptyIvs,
       col("ts") >= col("w_start") && col("ts") < col("w_end"))
@@ -172,7 +169,6 @@ class RangeLayoutSpec extends SparkSpec {
     // bound collector's missing default threw MatchError inside the
     // optimizer for ANY join whose condition mixed range comparisons
     // with other predicates (found by q143's brute arm).
-    GraftFunctions.registerOptimizations(spark)
     val a = Seq((1L, 10L), (2L, 25L)).toDF("ida", "va")
     val b = Seq((1L, 5L), (3L, 20L)).toDF("idb", "vb")
     val out = a.join(b,

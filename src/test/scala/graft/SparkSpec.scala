@@ -5,19 +5,13 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session keeps
-  * the test run fast; Test/fork=true isolates it from sbt).
+  * the test run fast; Test/fork=true isolates it from sbt). Built by the
+  * same factory as the mains, so tests plan with graft's functions and
+  * exact join rules installed.
   */
 object SharedSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Sessions.local(4,
+    warehouseDir = Some(java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

@@ -8,7 +8,6 @@ class SqlSurfaceSpec extends SparkSpec {
   import spark.implicits._
 
   test("custom expressions callable from spark.sql after registration") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT iso_duration_seconds('PT1H2M3S') AS dur,
                 vec_cosine(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS cos,
@@ -22,7 +21,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("ops TVFs: SELECT * FROM op('table', ...) == the Scala DataFrame op, row for row") {
-    GraftFunctions.register(spark)
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] = {
       val cols = df.columns.sorted.toIndexedSeq
       df.select(cols.map(c => col(c).cast("string")): _*)
@@ -225,8 +223,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("pure-SQL jaccard-threshold join goes through the prefix-filter rewrite") {
-    GraftFunctions.register(spark)
-    GraftFunctions.registerOptimizations(spark)
     import graft.ops.Dedup
     val vocab = (0 until 20).map(i => s"w$i")
     val docs = (0L until 15L).map { i =>
@@ -257,7 +253,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("structured-output parsers callable from SQL") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT parse_agent_response(
            '```json\n{"query_response": "ok", "sources": [{"video_id": "v1", "start_time": 5.0}]}\n```') AS a,
@@ -273,7 +268,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("chunk_transcript Generator: SQL LATERAL VIEW rows == typed chunkDF rows") {
-    GraftFunctions.register(spark)
     // Real text from the documents table, assembled like q53.
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     val transcripts = docs.groupBy(col("source"))

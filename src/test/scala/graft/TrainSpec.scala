@@ -387,7 +387,6 @@ class TrainSpec extends SparkSpec {
       (3L, "dup_line_char_frac"), (4L, "top_2gram_char_frac"),
       (5L, "dup_5gram_char_frac"), (6L, "pass")), s"got $v")
     // SQL TVF parity: gopher_repetition_funnel == the Scala funnel.
-    GraftFunctions.register(spark)
     df.createOrReplaceTempView("a1docs")
     val sql = spark.sql(
       "SELECT * FROM gopher_repetition_funnel('a1docs', 'text', 'doc_id')")

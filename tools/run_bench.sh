@@ -1,7 +1,7 @@
 #!/bin/bash
 # Benchmark fast path (no sbt startup): compile once, run graft.Bench
-# directly against the Spark jars. Prints one JSON line and writes
-# BENCH_LOCAL.json in the cwd.
+# directly against the Spark jars. Prints the JSON result lines and
+# writes BENCH_LAST.json in the repo root.
 # Usage: tools/run_bench.sh [sfdir] [cpus]
 set -e
 SF=${1:-/root/testdata/sf0.1}
@@ -16,5 +16,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" \
 java $ADD_OPENS -Xmx48g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/opt/spark/jars/*:target/scala-2.13/classes" graft.Bench

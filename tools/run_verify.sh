@@ -17,7 +17,6 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 rm -rf "$OUT"
 java $ADD_OPENS -Xmx8g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/opt/spark/jars/*:target/scala-2.13/classes" \
   graft.Verify "$SF" "$OUT" 2>/dev/null | grep -v "^WARN" || true
 python3 tools/compare_oracle.py "$SF" "$OUT"
