@@ -159,19 +159,23 @@ object Extract {
   /** S8: partitioned document sink — year/month derived from
     * published_at, epoch 0 -> "unknown" (processing.py:20-32). JSON to
     * mirror the reference layout; parquet is the engine-native option.
+    * JSON writes one document per file, the reference's
+    * `<video_id>.json` layout, which is what [[readRawDocs]]'s multiLine
+    * scan (one document per file) reads back in full.
     */
   def writePartitioned(
       docs: DataFrame,
       root: String,
       format: String = "json",
       epochCol: String = "published_at",
-      mode: String = "overwrite"): Unit =
-    docs
+      mode: String = "overwrite"): Unit = {
+    val writer = docs
       .withColumn("year", TimeFunctions.partitionYear(col(epochCol)))
       .withColumn("month", TimeFunctions.partitionMonth(col(epochCol)))
       .write
       .partitionBy("year", "month")
       .mode(mode)
       .format(format)
-      .save(root)
+    (if (format == "json") writer.option("maxRecordsPerFile", 1L) else writer).save(root)
+  }
 }

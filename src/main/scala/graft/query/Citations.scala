@@ -15,15 +15,17 @@ object Citations {
     * cited-id and cited-timestamp memberships are INDEPENDENT `IN`s, not
     * pairwise (a doc passes when its video is cited by anyone AND its
     * int-truncated start matches any cited time, even of another video).
-    * Two semi-joins on projected columns preserve exactly that.
+    * Two semi-joins on projected columns preserve exactly that; a
+    * left-semi join ignores build-side duplicates, so neither side is
+    * deduplicated first.
     */
   def citedDocuments(
       retrieved: DataFrame,
       cited: DataFrame,
       idCol: String,
       timeCol: String): DataFrame = {
-    val ids = cited.select(col(idCol)).distinct()
-    val times = cited.select(col(timeCol).cast("int").as(timeCol)).distinct()
+    val ids = cited.select(col(idCol))
+    val times = cited.select(col(timeCol).cast("int").as(timeCol))
     retrieved
       .withColumn(timeCol, col(timeCol).cast("int"))
       .join(ids, Seq(idCol), "left_semi")

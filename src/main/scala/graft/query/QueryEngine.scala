@@ -12,11 +12,14 @@ import org.apache.spark.sql.functions._
   *   search (P7 + O5) -> merge/dedup/top-k (O2) -> display sort (O1)
   *   -> answer (external) -> citation join (J7 + A4) -> render (F5/F7).
   *
-  * Engine-side everything is declarative DataFrame composition: the
-  * metadata filter lands on the scan (pushdown), top-k compiles to
-  * TakeOrderedAndProject, and the only driver-side collection is the
-  * <= `contextCount` context rows handed to the answerer — the same
-  * bounded set the reference sends to its LLM.
+  * Engine-side the search is declarative DataFrame composition: the
+  * metadata filter lands on the scan (pushdown) and top-k compiles to
+  * TakeOrderedAndProject. [[retrieve]] executes that plan once and
+  * collects its <= `contextCount` rows — the same bounded set the
+  * reference sends to its LLM — into a local relation; the context
+  * handed to the answerer and the citation join in [[process]] both
+  * read that relation, so a question launches no further store scan
+  * and cites exactly the rows the answerer saw.
   */
 class QueryEngine(
     store: DataFrame,
@@ -78,6 +81,10 @@ class QueryEngine(
     * topic T is the SIBLING topics comma-joined (or the raw query when
     * T is the only topic) while T itself drives the hybrid ILIKE
     * metadata filter (:273-281).
+    *
+    * Eager and bounded: the plan runs once here and its <= `contextCount`
+    * rows come back as a DataFrame over a `LocalRelation` (same schema,
+    * same display order), so every consumer reuses this one result.
     */
   def retrieve(query: String): DataFrame = {
     val pq = parser.parse(query)
@@ -100,13 +107,15 @@ class QueryEngine(
         val qv = embedder.embed(Seq(searchText)).head
         Retriever.topK(hybrid, "embedding", "video_id", qv, contextCount)
       }
-    if (searches.isEmpty) {
-      store.select(store.columns.map(col).toIndexedSeq: _*)
-        .withColumn("score", lit(0.0)).limit(0)
+    val plan =
+      if (searches.isEmpty) {
+        store.select(store.columns.map(col).toIndexedSeq: _*)
+          .withColumn("score", lit(0.0)).limit(0)
+          .orderBy(col("published_at"), col("video_id"), col("start_time"))
+      } else Retriever.mergeTopicResults(
+          searches, Seq("video_id", "start_time"), "score", contextCount)
         .orderBy(col("published_at"), col("video_id"), col("start_time"))
-    } else Retriever.mergeTopicResults(
-        searches, Seq("video_id", "start_time"), "score", contextCount)
-      .orderBy(col("published_at"), col("video_id"), col("start_time"))
+    store.sparkSession.createDataFrame(plan.collectAsList(), plan.schema)
   }
 
   /** Full lifecycle: retrieve, answer (external), then the J7+A4 citation

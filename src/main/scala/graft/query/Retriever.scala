@@ -36,7 +36,10 @@ object Retriever {
   /** O2: merge per-topic result lists keeping the HIGHEST score per
     * (video, start) key — window row_number, not dropDuplicates, because
     * the reference dedups after a score-desc sort (query_agent.py:284-298)
-    * which keeps the best-scoring duplicate.
+    * which keeps the best-scoring duplicate. The cut orders by score
+    * desc, then the key columns ascending — the reference merge order
+    * `(-score, video_id, start)` — so ties at the k-th place are kept
+    * deterministically.
     */
   def mergeTopicResults(
       results: Seq[DataFrame],
@@ -50,7 +53,7 @@ object Retriever {
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
       .drop("__rn")
-      .orderBy(col(scoreCol).desc)
+      .orderBy(col(scoreCol).desc +: keyCols.map(col): _*)
       .limit(limit)
   }
 

@@ -90,6 +90,18 @@ class EtlSpec extends SparkSpec {
     assert(back.count() == 2)
   }
 
+  test("Extract: JSON sink round-trips every doc through readRawDocs") {
+    val dir = Files.createTempDirectory("graft-roundtrip").toFile.getAbsolutePath
+    // 60 docs over three months, so each write task meets several docs
+    // of the same year/month partition.
+    val months = Seq(1672531200L, 1675209600L, 1677628800L)
+    val many = (0 until 60).map(i => doc(i.toLong, f"rt$i%03d",
+      Seq(TranscriptChunk(s"chunk $i", 0.0)), publishedAt = months(i % 3) + i))
+    Extract.writePartitioned(many.toDF().repartition(2), dir)
+    val back = Extract.readRawDocs(spark, dir).map(_.video_id).collect().sorted.toSeq
+    assert(back == many.map(_.video_id))
+  }
+
   test("Transform: all-or-nothing abort drops poisoned video; integrity check flags it") {
     val ds = docs.toDS()
     val cleaned = Transform.cleanVideos(ds, new StubChunkCleaner())

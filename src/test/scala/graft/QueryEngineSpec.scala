@@ -1,7 +1,9 @@
 package graft
 
 import graft.external._
-import graft.query.{FilterSpec, QueryEngine}
+import graft.query.{FilterSpec, QueryEngine, Retriever}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** §3.3 lifecycle test: parse(stub) -> filter -> hybrid+vector retrieval
@@ -103,6 +105,66 @@ class QueryEngineSpec extends SparkSpec {
     // videos ordered by release date
     val pubs = rows.map(_.getAs[Long]("published_at")).toSeq
     assert(pubs == pubs.sorted)
+  }
+
+  test("process: one retrieval execution reads each store row once per topic search") {
+    val reads = spark.sparkContext.longAccumulator("store_reads")
+    val counted = store().filter { (_: Row) => reads.add(1); true }
+    val engine = new QueryEngine(counted, parser, new EchoAnswerer(), embedder)
+    val (_, citations) = engine.process("""anything on "spark"?""")
+    assert(citations.collect().nonEmpty)
+    // One topic, no metadata filter: a single scan of the 4-row store.
+    assert(reads.value == 4L)
+  }
+
+  test("retrieve: the result is a local relation, also when nothing is searched") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-qe-store").toString + "/store"
+    store().write.parquet(dir)
+    val engine = new QueryEngine(spark.read.parquet(dir), parser, new EchoAnswerer(), embedder)
+    for (q <- Seq("""tell me about "spark" please""", "completely unconstrained question")) {
+      val leaves = engine.retrieve(q).queryExecution.analyzed.collectLeaves()
+      assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LocalRelation]), s"$q: $leaves")
+    }
+  }
+
+  test("process: every rendered citation is a context doc the answerer received") {
+    var received = Seq.empty[ContextDoc]
+    val recording = new Answerer {
+      private val echo = new EchoAnswerer(maxCitations = 3)
+      def answer(query: String, context: Seq[ContextDoc]): AgentAnswer = {
+        received = context; echo.answer(query, context)
+      }
+    }
+    val engine = new QueryEngine(store(), parser, recording, embedder)
+    val (_, citations) = engine.process("""anything on "spark" or "pasta"?""")
+    val seen = received.map(d => (d.videoId, d.startTime.toInt)).toSet
+    val cited = citations.collect().toSeq.flatMap { r =>
+      val vid = r.getAs[String]("video_href").stripPrefix("https://www.youtube.com/watch?v=")
+      r.getSeq[Row](r.fieldIndex("references")).map(ref => (vid, ref.getAs[Long]("timestamp_sec").toInt - 10))
+    }
+    assert(cited.nonEmpty)
+    assert(cited.forall(seen), s"cited $cited, context $seen")
+  }
+
+  test("merge: ties at the cut keep the reference's (-score, video_id, start) order") {
+    // Two topics tie at 0.5 across the cut; keys arrive in reverse order.
+    val t1 = (0 until 40).reverse.map(i => (f"v$i%02d", i.toDouble, if (i % 15 == 0) 0.9 else 0.5))
+    val t2 = (20 until 60).reverse.map(i => (f"v$i%02d", i.toDouble, if (i == 37) 0.8 else 0.5))
+    val k = 8
+    // Keep the merge's shuffle partitions uncoalesced so tied rows reach
+    // the cut from several partitions, as they do over a real store.
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    def topic(rows: Seq[(String, Double, Double)]) =
+      s2.createDataFrame(rows).toDF("video_id", "start_time", "score")
+    val merged = Retriever.mergeTopicResults(
+      Seq(topic(t1), topic(t2)), Seq("video_id", "start_time"), "score", k)
+    val got = merged.as[(String, Double, Double)].collect().toSeq
+    val reference = (t1 ++ t2).groupBy { case (v, st, _) => (v, st) }
+      .values.map(_.maxBy(_._3)).toSeq
+      .sortBy { case (v, st, sc) => (-sc, v, st) }.take(k)
+    assert(got == reference)
+    assert(got.map(_._1).takeRight(4) == Seq("v01", "v02", "v03", "v04"))
   }
 
   test("structured output: fenced/malformed/missing-key LLM responses parse like the reference") {

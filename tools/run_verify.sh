@@ -5,7 +5,7 @@
 set -e
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/graft_verify}
-cd /root/repo
+cd "$(dirname "$0")/.."
 sbt -batch compile -error
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
