@@ -3763,12 +3763,15 @@ object SparkEntry {
     * suite's one geometry (m=4, ksub=16, dim=64, 2 Lloyd rounds,
     * trainCap default) — q90, q91, and the standing index's PQ half
     * each trained this same relation per suite run; one build now
-    * serves all three. Correctness does not even require bit-equal
-    * float means across builds: q90 runs a covering shortlist (exact
-    * re-rank decides everything), q91/q175 pin in-engine
-    * self-consistency booleans, so codebook values are engine-internal
-    * by the envelope discipline. q181/q188's SUBSET books are a
-    * different vector set and keep their own (already shared) build.
+    * serves all three. Training is eager and driver-side, so the first
+    * caller pays it when it builds its plan, and the shared entry is a
+    * local relation (not persisted) that lives until releaseShared.
+    * Correctness does not even require bit-equal float means across
+    * builds: q90 runs a covering shortlist (exact re-rank decides
+    * everything), q91/q175 pin in-engine self-consistency booleans, so
+    * codebook values are engine-internal by the envelope discipline.
+    * q181/q188's SUBSET books are a different vector set and keep their
+    * own (already shared) build.
     */
   private def sharedPqCodebooks(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame =

@@ -67,19 +67,23 @@ object Caches {
     if (existing != null) return existing
     val b = build
     // PROMOTE out of the per-query registry: a builder may legitimately
-    // return the very DataFrame it registered via [[persistTracked]]
-    // (ProductQuantize.trainCodebooks does). Left in `live`, the next
-    // releaseAll() — the bench runs one after EVERY query — would
-    // unpersist the exact object this registry hands to every later
-    // consumer: the shared cache silently dies after its first query
-    // and each consumer re-executes the full build lineage once per
-    // plan reference (round-13's q91 2x driver regression: the "shared"
-    // PQ codebooks were re-trained 3-4x inside q91 alone). Queue
-    // removal is by reference (DataFrame keeps AnyRef equals), so only
-    // the identical object is promoted; shared lifetime wins.
+    // return the very DataFrame it registered via [[persistTracked]].
+    // Left in `live`, the next releaseAll() — the bench runs one after
+    // EVERY query — would unpersist the exact object this registry
+    // hands to every later consumer: the shared cache silently dies
+    // after its first query and each consumer re-executes the full
+    // build lineage once per plan reference (round-13's q91 2x driver
+    // regression: the "shared" PQ codebooks were re-trained 3-4x inside
+    // q91 alone). Queue removal is by reference (DataFrame keeps AnyRef
+    // equals), so only the identical object is promoted; shared
+    // lifetime wins.
     live.remove(b)
+    // A local relation (driver-trained PQ codebooks) is already
+    // materialized: persisting it would only add an InMemoryRelation
+    // build job and cache scans. The key still bounds its lifetime.
     val built =
-      b.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (b.isLocal) b
+      else b.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val raced = sharedMap.putIfAbsent(key, built)
     if (raced != null) raced else built
   }

@@ -3,7 +3,8 @@ package graft.ops
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Product quantization (PQ) for the embedding store — the compressed
   * vector-store layout every corpus-scale ANN system converges on
@@ -22,12 +23,15 @@ import org.apache.spark.sql.DataFrame
   * algebraically identical to the inner product of the query with the
   * vector's reconstruction, which is what q91's envelope pins.
   *
-  * Scale shape: codebooks are (m*ksub) rows and always broadcast;
-  * training shuffles only map-side pre-aggregated (sub, code, pos)
-  * means (never raw vectors, mirroring [[Similarity.refineCentroids]]);
-  * encoding shuffles one skinny (id, sub, code) row per subvector
-  * after a map-side min_by; ADC joins codes against a broadcast LUT
-  * and partial-aggregates the per-pair sum map-side. Flat-PQ ADC still
+  * Scale shape: codebooks are (m*ksub) rows, a local relation that is
+  * always broadcast; training collects the bounded `trainCap` sample
+  * to the driver once and runs its Lloyd rounds there over plain
+  * arrays (at most `trainCap * dim` doubles, 8 MiB at the defaults,
+  * at any store size — the [[LinearTrainer]] discipline for
+  * config-bounded state); encoding shuffles one skinny (id, sub,
+  * code) row per subvector after a map-side min_by; ADC joins codes
+  * against a broadcast LUT and partial-aggregates the per-pair sum
+  * map-side. Flat-PQ ADC still
   * scores every store row per query (its win is bytes, not candidate
   * count) — [[ivfPqTopK]] composes the IVF coarse pruning on top so
   * probes touch `nprobe/nlist` of the codes, the full IVFADC shape.
@@ -72,25 +76,31 @@ object ProductQuantize {
   }
 
   /** Train per-subspace codebooks: returns (sub, code_id, cent:
-    * array<double>). Seeds are the subvectors of the `ksub` store
-    * vectors with the smallest id hash (code_id = seed rank, shared
-    * across subspaces); `iters` Lloyd rounds then re-center each code
-    * on the mean of its assigned subvectors. Codes that attract no
-    * subvectors drop out (standard k-means), leaving fewer, denser
-    * entries. Tiny relation — persisted (tracked) because encode, LUT
-    * build, and reconstruction all read it.
+    * array<double>) as a local relation. The training sample is the
+    * usable vectors among the `trainCap` store ids with the smallest
+    * `xxhash64(id)`, in that hash order; a vector is usable when it is
+    * non-null, has no null element and spans `m * (dim / m)` values.
+    * Seeds are the subvectors of the first `ksub` sample vectors
+    * (code_id = seed rank, shared across subspaces); `iters` Lloyd
+    * rounds then re-center each code on the mean of its assigned
+    * subvectors. Codes that attract no subvectors drop out (standard
+    * k-means), leaving fewer, denser entries. A sample smaller than
+    * `ksub` yields that many codes per subspace, an empty one an empty
+    * relation.
     *
-    * `trainCap` bounds the TRAINING SET, not the store: Lloyd rounds
-    * iterate over the `trainCap` vectors with the smallest id hash
-    * (a deterministic uniform sample that superset-contains the seeds
-    * by construction — same hash order). k-means quality needs a
-    * bounded multiple of ksub points (FAISS trains PQ on tens of
-    * points per centroid; 16384 is ~1000x ksub=16), so training cost
-    * stays CONSTANT as the store grows — without the cap, every Lloyd
-    * round re-scans the full corpus, the difference between a fixed
-    * ~seconds training floor and an hours-long one at 100 TB. Encode/
-    * ADC/search are unaffected (they never sample), and the sample id
-    * relation is skinny (ids only) and broadcast.
+    * `trainCap` bounds the TRAINING SET, not the store: k-means quality
+    * needs a bounded multiple of ksub points (FAISS trains PQ on tens
+    * of points per centroid; 16384 is ~1000x ksub=16), so training cost
+    * stays CONSTANT as the store grows.
+    *
+    * Training is eager and runs on the driver, like [[LinearTrainer]]:
+    * two collects (the skinny top-`trainCap` ids, then their vectors
+    * through one IN-set filter on those ids) bring the sample over, and
+    * normalization and the Lloyd rounds run over plain arrays. Driver
+    * memory is bounded by `trainCap * dim` doubles (8 MiB at the
+    * defaults), and the fixed summation order makes the codebooks
+    * independent of the store's partitioning. Ids must be a key of the
+    * store.
     */
   def trainCodebooks(
       store: DataFrame,
@@ -102,47 +112,84 @@ object ProductQuantize {
       idCol: String = "vec_id",
       trainCap: Int = 16384): DataFrame = {
     require(trainCap >= ksub, s"trainCap $trainCap must cover ksub $ksub seeds")
-    val trainIds = store.select(col(idCol).as("id"))
-      .withColumn("__h", xxhash64(col("id")))
-      .orderBy(col("__h"), col("id")).limit(trainCap)
-      .select(col("id"))
-    val trainStore = store.join(
-      broadcast(trainIds.withColumnRenamed("id", idCol)), Seq(idCol), "left_semi")
-    val sv = graft.core.Caches.persistTracked(
-      subvectors(trainStore, m, dim, embCol, idCol))
-    val seedW = Window.orderBy(col("__h"), col("id"))
-    val seeds = store.select(col(idCol).as("id"))
-      .withColumn("__h", xxhash64(col("id")))
-      .orderBy(col("__h"), col("id")).limit(ksub)
-      .withColumn("code_id", row_number().over(seedW) - 1)
-      .select(col("id"), col("code_id"))
-    var books = sv.join(broadcast(seeds), "id")
-      .select(col("sub"), col("code_id"), col("svec").as("cent"))
-    for (_ <- 0 until iters) {
-      // Assign every subvector to its nearest code (map-side min_by),
-      // then re-center: posexplode to (sub, code, pos) grain + avg is
-      // partially aggregated map-side, so the shuffle carries at most
-      // m*ksub*dsub pre-combined rows per task, never subvectors.
-      val assigned = sv.join(broadcast(books), "sub")
-        .withColumn("__d2", l2sq(col("svec"), col("cent")))
-        .groupBy(col("id"), col("sub"), col("svec"))
-        .agg(min_by(col("code_id"), struct(col("__d2"), col("code_id"))).as("code_id"))
-      books = assigned
-        .select(col("sub"), col("code_id"), posexplode(col("svec")).as(Seq("__pos", "__v")))
-        .groupBy(col("sub"), col("code_id"), col("__pos"))
-        .agg(avg(col("__v")).as("__m"))
-        .groupBy(col("sub"), col("code_id"))
-        .agg(transform(array_sort(collect_list(struct(col("__pos"), col("__m")))),
-          s => s.getField("__m")).as("cent"))
+    val spark = store.sparkSession
+    val dsub = dim / m
+    val ids = store.select(col(idCol))
+      .orderBy(xxhash64(col(idCol)), col(idCol)).limit(trainCap)
+      .collect()
+    val rank = ids.iterator.map(_.get(0)).zipWithIndex.toMap
+    // The semi-join against those ids, written as an IN-set filter: a
+    // join with a local relation of them would add a broadcast job.
+    val sample = store.where(col(idCol).isin(rank.keys.toSeq: _*))
+      .select(col(idCol), col(embCol))
+      .collect()
+      .flatMap { r =>
+        val v = if (r.isNullAt(1)) null else r.getSeq[Any](1)
+        if (v == null || v.length < m * dsub || v.contains(null)) None
+        else Some(rank(r.get(0)) -> unitVector(v))
+      }
+      .sortBy(_._1).map(_._2)
+    val nCodes = math.min(ksub, sample.length)
+    val rows = (0 until m).flatMap { s =>
+      val off = s * dsub
+      val cents = Array.tabulate(nCodes)(c => sample(c).slice(off, off + dsub))
+      val live = Array.fill(nCodes)(true)
+      for (_ <- 0 until iters) {
+        val sums = Array.ofDim[Double](nCodes, dsub)
+        val counts = new Array[Int](nCodes)
+        for (v <- sample) {
+          val c = nearest(v, off, cents, live)
+          counts(c) += 1
+          var j = 0
+          while (j < dsub) { sums(c)(j) += v(off + j); j += 1 }
+        }
+        for (c <- 0 until nCodes) {
+          if (counts(c) == 0) live(c) = false
+          else cents(c) = sums(c).map(_ / counts(c))
+        }
+      }
+      (0 until nCodes).filter(live(_)).map(c => Row(s, c, cents(c).toSeq))
     }
-    // Structural cardinality cap: the grouped re-centering yields at
-    // most m*ksub rows by construction (the grouping domain), but a
-    // plan reader — or tools/PlanLint proving the ADC nested-loop's
-    // broadcast side corpus-independent — can't see that from a
-    // grouped aggregate. The no-op GlobalLimit makes the bound
-    // plan-visible; it reorders nothing downstream (every consumer
-    // joins or re-aggregates by (sub, code_id)).
-    graft.core.Caches.persistTracked(books.limit(m * ksub))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), CodebookSchema)
+  }
+
+  private val CodebookSchema = StructType(Seq(
+    StructField("sub", IntegerType, nullable = false),
+    StructField("code_id", IntegerType, nullable = false),
+    StructField("cent", ArrayType(DoubleType, containsNull = false), nullable = false)))
+
+  /** [[vecL2Normalize]] on the driver, bit for bit: the squared norm
+    * folds left to right in double, and a zero vector stays as it is.
+    */
+  private def unitVector(v: Seq[Any]): Array[Double] = {
+    val x = v.iterator.map(_.asInstanceOf[Number].doubleValue).toArray
+    var ss = 0.0
+    x.foreach(e => ss += e * e)
+    val n = math.sqrt(ss)
+    if (n == 0.0) x else x.map(_ / n)
+  }
+
+  /** Live code nearest to the subvector at `v(off until off + dsub)`:
+    * the squared L2 fold in ascending index order (VecL2Sq's
+    * association), ties toward the lower code id, NaN never winning
+    * over a number (the order of [[encode]]'s min_by).
+    */
+  private def nearest(
+      v: Array[Double], off: Int, cents: Array[Array[Double]], live: Array[Boolean]): Int = {
+    var best = -1
+    var bestD = 0.0
+    var c = 0
+    while (c < cents.length) {
+      if (live(c)) {
+        val cent = cents(c)
+        var d2 = 0.0
+        var j = 0
+        while (j < cent.length) { val d = v(off + j) - cent(j); d2 += d * d; j += 1 }
+        if (best < 0 || java.lang.Double.compare(d2, bestD) < 0) { best = c; bestD = d2 }
+      }
+      c += 1
+    }
+    best
   }
 
   /** Encode the store against trained codebooks: one skinny (id, sub,

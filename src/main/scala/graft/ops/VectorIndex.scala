@@ -5,9 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** MATERIALIZED IVF vector index — the storage half of a 100 TB ANN
-  * deployment, first-class (the measured layout study is
-  * tools/IvfPqLayoutDemo; this is the operator API): the store is
-  * written ONCE, bucketed by coarse list id, and every search reads
+  * deployment, first-class (the measured layout study is COVERAGE.md's
+  * "2-level IVFPQ store layout demo"; this is the operator API): the
+  * store is written ONCE, bucketed by coarse list id, and every search reads
   * only its probed lists' buckets — I/O ∝ nprobe/nlist enforced by the
   * layout, not by trusting a filter.
   *

@@ -31,8 +31,8 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * aggregate) means the build side grows with the corpus -> FLAG.
   * Where a relation IS bounded by construction but the bound lives in
   * a grouping domain the plan can't show, prefer making it structural
-  * (ProductQuantize caps its codebook with a no-op limit(m*ksub))
-  * over allowlisting here.
+  * (ProductQuantize trains its codebook on the driver and returns a
+  * local relation, a LocalTableScan) over allowlisting here.
   *
   * Named allowlist for shapes whose bound is real but data-dependent
   * (a bounded query/eval set crossed with the corpus; each has an

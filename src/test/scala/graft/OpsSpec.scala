@@ -760,6 +760,145 @@ class OpsSpec extends SparkSpec {
     assert(ivfpq >= 0.8, f"IVFPQ recall $ivfpq%.3f below 0.8 floor")
   }
 
+  // ---- PQ codebook training on the driver ------------------------------
+
+  /** The clustered fixture as a parquet store of `parts` files, so the
+    * training collects run real scan jobs over several partitions.
+    */
+  private def pqStore(parts: Int): org.apache.spark.sql.DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
+    clusteredFixture(nClusters = 8, perCluster = 20, dim = 64, eps = 0.15f)._1
+      .repartition(parts).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def booksOf(books: org.apache.spark.sql.DataFrame) =
+    books.as[(Int, Int, Seq[Double])].collect().sortBy(b => (b._1, b._2)).toSeq
+
+  /** (sub, code_id, svec) of the `ksub` seed vectors, the first store
+    * vectors in (xxhash64(id), id) order, each sliced from its
+    * unit-normalized vector.
+    */
+  private def pqSeeds(store: org.apache.spark.sql.DataFrame, m: Int, ksub: Int, dsub: Int) = {
+    import graft.functions.VectorFunctions.vecL2Normalize
+    val first = store.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(ksub)
+      .select(vecL2Normalize(col("embedding")).as("u")).as[Seq[Double]].collect()
+    for (s <- 0 until m; c <- first.indices)
+      yield (s, c, first(c).slice(s * dsub, (s + 1) * dsub))
+  }
+
+  test("PQ training: the codebooks are a local relation built by at most two Spark jobs") {
+    import graft.ops.ProductQuantize
+    val store = pqStore(4)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add(js.stageInfos.map(_.name).mkString(", ")); ()
+      }
+    }
+    Thread.sleep(500) // let the fixture write's events drain first
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val books = ProductQuantize.trainCodebooks(store, m = 4, ksub = 16, dim = 64, iters = 2)
+      books.collect()
+      Thread.sleep(500) // listener bus is async
+      assert(books.isLocal, "codebooks must come back as a local relation")
+      assert(jobs.size <= 2, s"training launched ${jobs.size} Spark jobs: $jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("PQ training: codebooks are bit-identical at 1, 3 and 8 store partitions") {
+    import graft.ops.ProductQuantize
+    val store = pqStore(1)
+    val all = Seq(1, 3, 8).map(n => booksOf(ProductQuantize.trainCodebooks(
+      store.repartition(n), m = 4, ksub = 16, dim = 64, iters = 2)))
+    assert(all.head.nonEmpty)
+    all.tail.foreach(b => assert(b == all.head, "codebooks depend on the store's partitioning"))
+  }
+
+  test("PQ training: zero Lloyd rounds return exactly the seed subvectors") {
+    import graft.ops.ProductQuantize
+    val store = pqStore(3)
+    val books = booksOf(ProductQuantize.trainCodebooks(store, m = 4, ksub = 16, dim = 64, iters = 0))
+    assert(books == pqSeeds(store, m = 4, ksub = 16, dsub = 16))
+  }
+
+  test("PQ training: one Lloyd round re-centers each code on the mean of its nearest subvectors") {
+    import graft.ops.ProductQuantize
+    import graft.functions.VectorFunctions.vecL2Normalize
+    val store = pqStore(3)
+    val books = booksOf(ProductQuantize.trainCodebooks(store, m = 4, ksub = 16, dim = 64, iters = 1))
+    // Independent reference: HOF distances to every seed, argmin with
+    // ties toward the lower code id, per-position avg.
+    val seeds = pqSeeds(store, m = 4, ksub = 16, dsub = 16).toDF("sub", "code_id", "seed")
+    val sv = store.select(col("vec_id"), vecL2Normalize(col("embedding")).as("u"))
+      .select(col("vec_id"), explode(array((0 until 4).map(s =>
+        struct(lit(s).as("sub"), slice(col("u"), s * 16 + 1, 16).as("svec"))): _*)).as("e"))
+      .select(col("vec_id"), col("e.sub").as("sub"), col("e.svec").as("svec"))
+    val nearestW = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("vec_id"), col("sub")).orderBy(col("d2"), col("code_id"))
+    val expected = sv.join(seeds, "sub")
+      .withColumn("d2", aggregate(zip_with(col("svec"), col("seed"),
+        (x, y) => (x - y) * (x - y)), lit(0.0d), (acc, x) => acc + x))
+      .withColumn("r", row_number().over(nearestW)).where(col("r") === 1)
+      .select(col("sub"), col("code_id"), posexplode(col("svec")).as(Seq("pos", "v")))
+      .groupBy("sub", "code_id", "pos").agg(avg(col("v")).as("mean"))
+      .as[(Int, Int, Int, Double)].collect()
+      .groupBy(r => (r._1, r._2)).toSeq
+      .map { case ((s, c), ps) => (s, c, ps.sortBy(_._3).map(_._4).toSeq) }
+      .sortBy(b => (b._1, b._2))
+    assert(books.map(b => (b._1, b._2)) == expected.map(e => (e._1, e._2)),
+      "the surviving codes must be exactly those that attracted subvectors")
+    val maxDiff = books.zip(expected)
+      .flatMap { case (b, e) => b._3.zip(e._3).map { case (x, y) => math.abs(x - y) } }.max
+    assert(maxDiff <= 1e-12, s"centroid differs from its members' mean by $maxDiff")
+  }
+
+  test("PQ training: null embeddings are skipped; few or no usable vectors still train") {
+    import graft.ops.ProductQuantize
+    val store = pqStore(3)
+    // Null every 7th embedding (NullSweep's pattern): the same books as
+    // a store without those rows.
+    val nulled = store.withColumn("embedding",
+      when(col("vec_id") % 7 === 0, lit(null)).otherwise(col("embedding")))
+    val withNulls = booksOf(ProductQuantize.trainCodebooks(nulled, m = 4, ksub = 16, dim = 64))
+    val without = booksOf(ProductQuantize.trainCodebooks(
+      store.where(col("vec_id") % 7 =!= 0), m = 4, ksub = 16, dim = 64))
+    assert(withNulls.nonEmpty && withNulls == without)
+    // Five usable vectors (one more row is null): five codes per subspace.
+    val few = nulled.where(col("vec_id") <= 5)
+    val fewBooks = booksOf(ProductQuantize.trainCodebooks(few, m = 4, ksub = 16, dim = 64))
+    assert(fewBooks.map(b => (b._1, b._2)) ==
+      (for (s <- 0 until 4; c <- 0 until 5) yield (s, c)))
+    // Empty store: empty relation, same schema.
+    val empty = ProductQuantize.trainCodebooks(store.limit(0), m = 4, ksub = 16, dim = 64)
+    assert(empty.isEmpty && empty.schema ==
+      ProductQuantize.trainCodebooks(few, m = 4, ksub = 16, dim = 64).schema)
+  }
+
+  test("Caches.shared returns a local relation unpersisted, once per release") {
+    import org.apache.spark.storage.StorageLevel
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    def build() = {
+      builds.incrementAndGet()
+      spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row(0, 1)), org.apache.spark.sql.types.StructType.fromDDL("sub INT, code_id INT"))
+    }
+    try {
+      val first = graft.core.Caches.shared("test-local-shared")(build())
+      assert(first.isLocal && first.storageLevel == StorageLevel.NONE,
+        "a local relation must not be persisted")
+      assert(graft.core.Caches.shared("test-local-shared")(build()) eq first)
+      assert(builds.get == 1)
+      graft.core.Caches.releaseShared()
+      val again = graft.core.Caches.shared("test-local-shared")(build())
+      assert(builds.get == 2 && !(again eq first), "releaseShared must drop the key")
+    } finally {
+      graft.core.Caches.releaseAll()
+      graft.core.Caches.releaseShared()
+    }
+  }
+
   test("dedup clusters: every doc assigned, singletons canonical, sizes correct") {
     import graft.ops.Components
     val docs = (1L to 8L).map(i => (i, s"text $i")).toDF("doc_id", "text")
@@ -2339,7 +2478,7 @@ class OpsSpec extends SparkSpec {
 
   test("shared relations built via persistTracked survive per-query releaseAll") {
     // Round-13 q91 regression: a shared builder that RETURNS the very
-    // DataFrame it registered via persistTracked (trainCodebooks does)
+    // DataFrame it registered via persistTracked (trainCodebooks did)
     // left that object in the per-query release queue — the bench's
     // releaseAll() after the first consumer evicted the "session"
     // cache, and every later consumer silently re-executed the full

@@ -501,9 +501,16 @@ class PlansSpec extends SparkSpec {
       // envelope zip joins two per-vector AGGREGATES on id — both sides
       // are N rows at corpus scale, so a co-partitioned shuffle join is
       // the correct plan there and only there.
-      if (q == "q90_pq_exact")
+      if (q == "q90_pq_exact") {
         assert(!plan.contains("SortMergeJoin"),
           s"$q: store-side shuffle join crept in:\n$plan")
+        // The codebooks are trained on the driver: a literal relation,
+        // not a cached one.
+        assert("LocalTableScan \\[sub#\\d+, code_id#\\d+, cent#\\d+\\]".r
+          .findFirstIn(plan).isDefined,
+          s"$q: codebooks must be read from a LocalTableScan:\n$plan")
+        assert(!plan.contains("InMemoryTableScan"), s"$q: nothing may be cached:\n$plan")
+      }
       val nlj = "BroadcastNestedLoopJoin".r.findAllIn(plan).size
       assert(nlj <= 1, s"$q: $nlj nested loops (only the LUT cross is allowed):\n$plan")
       assert(df.count() > 0)
