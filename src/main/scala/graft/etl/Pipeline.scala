@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.external.{ChunkCleaner, Embedder, HashEmbedder, StubChunkCleaner}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** End-to-end pipeline entry point: extract -> transform -> load over a
@@ -34,6 +34,10 @@ object Pipeline {
     import spark.implicits._
     val storePath = s"$outRoot/store"
     val mirrorPath = s"$outRoot/cleaned"
+    // The store's declared schema: reading with it skips the job Spark
+    // runs to infer a Parquet schema from the files' footers.
+    def readStore(): DataFrame =
+      spark.read.schema(Encoders.product[EmbeddedChunk].schema).parquet(storePath)
     // Extract: recursive schema'd JSON scan (S3).
     val raw = Extract.readRawDocs(spark, rawDir)
     // Resume skips the clean stage for already-mirrored videos, like
@@ -67,7 +71,7 @@ object Pipeline {
       if (graft.core.FsUtil.exists(spark, storePath)) {
         // Resume: embed only the chunks the store lacks, append them
         // (the reference re-run skips stored ids, build_vector_store.py).
-        val fresh = Load.discoverNewChunks(chunks.toDF(), spark.read.parquet(storePath))
+        val fresh = Load.discoverNewChunks(chunks.toDF(), readStore())
         Load.embedChunks(fresh.as[ChunkDoc], embedder)
           .toDF().write.mode("append").parquet(storePath)
       } else {
@@ -82,7 +86,7 @@ object Pipeline {
       Transform.writeCleanedMirror(newlyCleaned.toDF(), mirrorPath,
         mode = if (mirrorExists) "append" else "overwrite")
     } finally newlyCleaned.unpersist(blocking = false)
-    spark.read.parquet(storePath)
+    readStore()
   }
 
   /** CLI: Pipeline <rawJsonDir> <outRoot> — runs with the stub

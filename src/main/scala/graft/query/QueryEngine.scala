@@ -1,8 +1,10 @@
 package graft.query
 
 import graft.external.{Answerer, ContextDoc, Embedder, ParsedQuery, QueryParser}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** The reference's `QueryAgent.process_query` retrieval lifecycle
   * (SURVEY.md §3.3; loaders/agents/query_agent.py:234-390) with the two
@@ -16,10 +18,11 @@ import org.apache.spark.sql.functions._
   * metadata filter lands on the scan (pushdown) and top-k compiles to
   * TakeOrderedAndProject. [[retrieve]] executes that plan once and
   * collects its <= `contextCount` rows — the same bounded set the
-  * reference sends to its LLM — into a local relation; the context
-  * handed to the answerer and the citation join in [[process]] both
-  * read that relation, so a question launches no further store scan
-  * and cites exactly the rows the answerer saw.
+  * reference sends to its LLM. [[process]] builds the answerer's
+  * context and the J7/A4/O3 citation step from those collected rows in
+  * plain Scala and renders them (F5/F7) as a projection over a local
+  * relation, so a question costs the one retrieval execution and cites
+  * exactly the rows the answerer saw.
   */
 class QueryEngine(
     store: DataFrame,
@@ -87,6 +90,12 @@ class QueryEngine(
     * same display order), so every consumer reuses this one result.
     */
   def retrieve(query: String): DataFrame = {
+    val (rows, schema) = retrieveRows(query)
+    store.sparkSession.createDataFrame(rows.asJava, schema)
+  }
+
+  /** [[retrieve]]'s rows as collected, in display order, with their schema. */
+  private def retrieveRows(query: String): (Seq[Row], StructType) = {
     val pq = parser.parse(query)
     val filter = buildFilter(pq)
     val base = filter.map(f => store.where(FilterSpec.compile(f))).getOrElse(store)
@@ -115,27 +124,26 @@ class QueryEngine(
       } else Retriever.mergeTopicResults(
           searches, Seq("video_id", "start_time"), "score", contextCount)
         .orderBy(col("published_at"), col("video_id"), col("start_time"))
-    store.sparkSession.createDataFrame(plan.collectAsList(), plan.schema)
+    (plan.collect().toSeq, plan.schema)
   }
 
-  /** Full lifecycle: retrieve, answer (external), then the J7+A4 citation
-    * join and F5/F7 rendering. Returns (answer, rendered citations).
+  /** Full lifecycle: retrieve, answer (external), then the J7+A4+O3
+    * citation step and F5/F7 rendering. Returns (answer, rendered
+    * citations).
+    *
+    * Only the retrieval runs a Spark job: the context and the citation
+    * step read the rows it collected, and the rendered citations are a
+    * projection over a local relation that Spark evaluates on the
+    * driver ([[Citations.localSources]]).
     */
   def process(query: String): (graft.external.AgentAnswer, DataFrame) = {
-    val retrieved = retrieve(query)
-    val context = retrieved
-      .select(col("video_id"), col("start_time"), col("text"))
-      .limit(contextCount).collect()
-      .map(r => ContextDoc(r.getString(0), r.getDouble(1), r.getString(2)))
-    val answer = answerer.answer(query, context.toIndexedSeq)
-
-    val spark: SparkSession = store.sparkSession
-    import spark.implicits._
-    val cited = answer.sources.toDF("video_id", "t")
-      .select(col("video_id"), col("t").cast("int").as("start_time"))
-    val citedDocs = Citations.citedDocuments(retrieved, cited, "video_id", "start_time")
-    val grouped = Citations.groupCitations(citedDocs, "video_id", "start_time")
-    val rendered = Citations.structuredSources(grouped, retrieved, "video_id")
+    val (rows, schema) = retrieveRows(query)
+    val (vid, start, text) =
+      (schema.fieldIndex("video_id"), schema.fieldIndex("start_time"), schema.fieldIndex("text"))
+    val context = rows.map(r => ContextDoc(r.getString(vid), r.getDouble(start), r.getString(text)))
+    val answer = answerer.answer(query, context)
+    val rendered = Citations.localSources(store.sparkSession, rows, schema,
+      answer.sources, "video_id", "start_time")
     (answer, rendered)
   }
 }

@@ -263,6 +263,32 @@ class EtlSpec extends SparkSpec {
     // The mirror now holds vidD too; a further resume cleans nothing new.
     assert(spark.read.json(s"$out/cleaned").where(col("video_id") === "vidD").count() == 1)
   }
+
+  test("Pipeline.run: a resume with no new work reads the store with its declared schema") {
+    val dir = writeFixtures()
+    val out = Files.createTempDirectory("graft-pipeline-jobs").toFile.getAbsolutePath
+    Pipeline.run(spark, dir, out)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add(js.stageInfos.map(_.name).mkString(", ")); ()
+      }
+    }
+    Thread.sleep(500) // let the first run's events drain
+    spark.sparkContext.addSparkListener(listener)
+    val store =
+      try {
+        val s = Pipeline.run(spark, dir, out)
+        Thread.sleep(500) // listener bus is async
+        s
+      } finally spark.sparkContext.removeSparkListener(listener)
+    // Inferring the store's Parquet schema would cost one job per read,
+    // and the resume reads the store twice (anti-join and return value):
+    // 7 jobs with inference, 5 without.
+    assert(jobs.size <= 5, s"resume launched ${jobs.size} Spark jobs: $jobs")
+    assert(store.schema == spark.read.parquet(s"$out/store").schema)
+    assert(store.count() == 3)
+  }
 }
 
 /** Stub cleaner that counts chunk-clean invocations via a JVM-static

@@ -1,7 +1,7 @@
 package graft
 
 import graft.external._
-import graft.query.{FilterSpec, QueryEngine, Retriever}
+import graft.query.{Citations, FilterSpec, QueryEngine, Retriever}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -144,6 +144,105 @@ class QueryEngineSpec extends SparkSpec {
     }
     assert(cited.nonEmpty)
     assert(cited.forall(seen), s"cited $cited, context $seen")
+  }
+
+  test("process: citing and rendering launch no Spark job after retrieve returns") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-qe-jobs").toString + "/store"
+    store().write.parquet(dir)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // The answerer runs after retrieve returned: it marks the job count
+    // the citation step must leave unchanged.
+    var atAnswer = -1
+    val marking = new Answerer {
+      private val echo = new EchoAnswerer(maxCitations = 3)
+      def answer(query: String, context: Seq[ContextDoc]): AgentAnswer = {
+        Thread.sleep(500) // listener bus is async
+        atAnswer = jobs.get(); echo.answer(query, context)
+      }
+    }
+    val engine = new QueryEngine(spark.read.parquet(dir), parser, marking, embedder)
+    Thread.sleep(500) // let the fixture write's events drain first
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (_, rendered) = engine.process("""anything on "spark" or "pasta"?""")
+      val rows = rendered.collect()
+      Thread.sleep(500)
+      assert(rows.nonEmpty)
+      assert(atAnswer >= 1, "the retrieval ran no Spark job")
+      assert(jobs.get() == atAnswer, s"${jobs.get() - atAnswer} Spark jobs after retrieve")
+      val leaves = rendered.queryExecution.analyzed.collectLeaves()
+      assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LocalRelation]), leaves.toString)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("process: rendered citations equal the DataFrame citation chain, in order") {
+    val rnd = new scala.util.Random(4242)
+    val words = Seq("spark", "pasta", "tungsten", "catalyst", "water", "codegen")
+    val starts = Seq(0.0, 5.0, 12.5, 20.75, 30.0, 44.2)
+    // Shared start times across videos and tied release dates exercise
+    // the independent J7 memberships and the O3 tie-break.
+    val pubs = Seq(1577836800L, 1609459200L, 1609459200L, 1640995200L)
+    val rows = (1 to 8).flatMap { v =>
+      val show = if (v % 2 == 0) "Alpha Show" else "Beta Show"
+      val hosts = if (v % 3 == 0) "ana" else "bob,ana"
+      val title = s"${words(v % words.size)} episode $v"
+      val pub = pubs(rnd.nextInt(pubs.size))
+      rnd.shuffle(starts).take(2 + rnd.nextInt(4)).map { st =>
+        val text = Seq.fill(3)(words(rnd.nextInt(words.size))).mkString(" ")
+        (f"v$v%02d", show, hosts, title, pub, st, text, embedder.embed(Seq(text)).head)
+      }
+    }
+    val sweepStore = rows.toDF("video_id", "show_name", "hosts", "title",
+      "published_at", "start_time", "text", "embedding")
+    val citeEdges = new Answerer {
+      def answer(query: String, context: Seq[ContextDoc]): AgentAnswer = {
+        val first = context.headOption.toSeq
+        val otherVideo = context.find(d => first.exists(_.videoId != d.videoId))
+        val fractional = context.find(d => d.startTime != d.startTime.floor)
+        AgentAnswer("edges",
+          Seq(("v-missing", 0)) ++ // a video that is not in the context
+            first.zip(otherVideo).map { case (f, o) => (f.videoId, o.startTime.toInt) } ++
+            fractional.map(d => (d.videoId, d.startTime.toInt)) ++
+            first.flatMap(d => Seq.fill(2)((d.videoId, d.startTime.toInt))))
+      }
+    }
+    val silent = new Answerer {
+      def answer(query: String, context: Seq[ContextDoc]): AgentAnswer = AgentAnswer("none", Nil)
+    }
+    val answerers = Seq(new EchoAnswerer(1), new EchoAnswerer(2), new EchoAnswerer(3),
+      citeEdges, silent)
+    def question(): String = {
+      val topics = rnd.shuffle(words).take(rnd.nextInt(3)).map(w => s""""$w"""")
+      val show = Seq("", "on Alpha Show", "on Beta Show")(rnd.nextInt(3))
+      val year = Seq("", "in 2021", "after 2020", "2020 to 2021")(rnd.nextInt(4))
+      s"what about ${topics.mkString(" and ")} $show $year".trim
+    }
+    var nonEmpty = 0
+    for (_ <- 1 to 12; ans <- answerers) {
+      val q = question()
+      val engine = new QueryEngine(sweepStore, parser, ans, embedder,
+        contextCount = Seq(3, 120)(rnd.nextInt(2)), nowYear = 2024)
+      val (answer, rendered) = engine.process(q)
+      val retrieved = engine.retrieve(q)
+      val cited = answer.sources.toDF("video_id", "t")
+        .select(col("video_id"), col("t").cast("int").as("start_time"))
+      val chain = Citations.structuredSources(
+        Citations.groupCitations(
+          Citations.citedDocuments(retrieved, cited, "video_id", "start_time"),
+          "video_id", "start_time"),
+        retrieved, "video_id")
+      val got = rendered.collect().toSeq
+      assert(got == chain.collect().toSeq, s"$q / ${answer.sources}")
+      assert(rendered.schema.map(f => (f.name, f.dataType)) ==
+        chain.schema.map(f => (f.name, f.dataType)), q)
+      if (got.nonEmpty) nonEmpty += 1
+    }
+    assert(nonEmpty >= 10, s"only $nonEmpty of 60 questions rendered a citation")
   }
 
   test("merge: ties at the cut keep the reference's (-score, video_id, start) order") {
