@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import Verify.jsonString
+
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE machine-readable JSON line.
   *
@@ -67,16 +69,11 @@ object Bench {
     }
     graft.core.Caches.releaseShared()
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     // Locale.ROOT: the default-locale f-interpolator renders a comma
     // decimal separator on e.g. de_DE JVMs, breaking the JSON.
     def r3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v: java.lang.Double)
-    val qs = timings.map { case (k, v) => s"${jstr(k)}:${r3(v)}" }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val qs = timings.map { case (k, v) => s"${jsonString(k)}:${r3(v)}" }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }.mkString("{", ",", "}")
     val total = timings.values.sum
 
     // ---- burst / host-factor protocol (round 13) ----------------------
@@ -149,7 +146,7 @@ object Bench {
         } else i += 1
       }
     }
-    val burstJson = burst.map(jstr).mkString("[", ",", "]")
+    val burstJson = burst.map(jsonString).mkString("[", ",", "]")
     if (burst.nonEmpty)
       System.err.println(s"BENCH BURST detected (co-tenant signature): " +
         s"${burst.head}..${burst.last} at >=2x vs $refPath with median " +
@@ -159,7 +156,7 @@ object Bench {
       s"(controls ${controls.mkString(",")} vs $refPath)")
 
     val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"host_factor":${r3(hostFactor)},"burst":$burstJson,"materialization":"bit_xor(xxhash64(*))","sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"host_factor":${r3(hostFactor)},"burst":$burstJson,"materialization":"bit_xor(xxhash64(*))","sf":${jsonString(sfDir)}}"""
     // One bare line on stdout (build.sbt routes forked stdout through
     // un-prefixed so the driver can json-parse it), plus a file copy.
     println(line)
@@ -177,7 +174,7 @@ object Bench {
       val perChunk = 6
       val nChunks = (entries.size + perChunk - 1) / perChunk
       entries.grouped(perChunk).zipWithIndex.foreach { case (chunk, i) =>
-        val qj = chunk.map { case (k, v) => s"${jstr(k)}:${r3(v)}" }
+        val qj = chunk.map { case (k, v) => s"${jsonString(k)}:${r3(v)}" }
           .mkString("{", ",", "}")
         println(s"""{"metric":"queries_chunk","i":$i,"of":$nChunks,"queries":$qj}""")
       }
@@ -186,7 +183,7 @@ object Bench {
     // the front; emit a short self-contained summary LAST so the headline
     // metric always survives and parses.
     println(
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_ok":${timings.size},"n_err":${errors.size},"sf":${jstr(sfDir)}}""")
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_ok":${timings.size},"n_err":${errors.size},"sf":${jsonString(sfDir)}}""")
     // BENCH_LAST.json always holds the most recent run (any SF) for
     // snapshot copying without stdout parsing; BENCH_LOCAL.json is
     // never written by a run.

@@ -2311,8 +2311,8 @@ object SparkEntry {
       // == direct is pinned row for row, not as an envelope. The
       // amortization story (batch joins with the corpus
       // tokenize/sort/explode scan gone) is measured by
-      // tools/IndexBench; here the build runs in-query (fresh tables
-      // per run keeps Verify/Bench/RespellSweep hermetic).
+      // COVERAGE.md Session-8; here the build runs in-query (fresh tables
+      // per run keeps Verify/Bench/`Sweep respell` hermetic).
       val docs0 = documents(s, d).select(col("doc_id"), col("text"))
       val corpus = docs0.where(col("doc_id") % 5 =!= 0)
       val fresh = docs0.where(col("doc_id") % 5 === 0)
@@ -2679,7 +2679,7 @@ object SparkEntry {
         buckets = 64, epochs = 3)),
     "q156_store_backed_families" -> ((s, d) => {
       // q150's incremental assignment with the prior read from a
-      // WRITTEN STORE (the EnsembleProbe deployment shape): the q149
+      // WRITTEN STORE (COVERAGE.md Session-8 deployment shape): the q149
       // ensemble is computed once, written to parquet, and the
       // returned plan reads that table — the assign arm's plan
       // contains NO prior recompute (the store build runs eagerly at
@@ -2882,7 +2882,7 @@ object SparkEntry {
       // unchanged); beyond that it is the documented recall/scan-cut
       // knob — and the SHUFFLE knob: the shortlist rank's partial
       // top-k keeps `shortlist` rows per (anchor, partition), so
-      // TripletProbe at sf10m measures sl256 at 59-64 s vs the exact
+      // FLOORS.json q167 at sf10m measures sl256 at 59-64 s vs the exact
       // arm's 73-83 s while sl1024's 4× partial volume gives the win
       // back (71-117 s). LSH/IVF/ADC recall < 1 by design, so the oracle is the
       // q67-discipline SOUNDNESS envelope: every emitted triplet
@@ -2908,7 +2908,7 @@ object SparkEntry {
         needPq = nEmb >= (1L << 16))
       // MEASURED DISPATCH (the Boilerplate/bloom break-even
       // discipline): the PQ half costs a flat few seconds of extra
-      // index build + catalog writes (TripletProbe sf10m: build_ivf
+      // index build + catalog writes (FLOORS.json q167, sf10m: build_ivf
       // 14-19 s vs build_ivfpq 19-22 s), and the ADC 4-lookup scan
       // undercuts the 64-dim cosine on the anchors × corpus ×
       // nprobe/nlist candidate stream (search 59-64 s vs 73-83 s at
@@ -3733,7 +3733,7 @@ object SparkEntry {
     * amortization's vector half: q167's negative arm and BOTH of
     * q175's pinned arms probe the same embeddings at the same
     * geometry; before the share each built its own index (three full
-    * builds per suite run — TripletProbe sf10m: 14-22 s each). One
+    * builds per suite run — FLOORS.json q167, sf10m: 14-22 s each). One
     * [[graft.ops.VectorIndex.ensureIvfPqIndex]] build now serves all
     * three probes (q181 keeps its OWN index: it indexes the
     * scale-adaptive ~1000-vector SUBSET, a structurally different —

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * compose-by-join spelling ([[graft.ops.ProductQuantize.adcScores]])
   * explodes each pair into m join rows and re-aggregates, which costs
   * more than the raw-embedding cosine it is meant to undercut — the
-  * measured reason this expression exists (TripletProbe: join-ADC
+  * measured reason this expression exists (COVERAGE.md Round-11: join-ADC
   * 1.9x SLOWER than exact at sf10m; fused ADC is the win the PQ
   * layout promises).
   *

@@ -50,7 +50,7 @@ object Affinity {
     * materialize-once-per-corpus-version discipline a production
     * deployment applies to exactly this relation.
     *
-    * Cost anatomy (tools/PairStats, sf10m organic input): 120.0M pair
+    * Cost anatomy (sf10m organic input, COVERAGE.md Session-7): 120.0M pair
     * rows reach the (item_a, item_b) aggregation, 119.6M distinct,
     * only 357k survive support >= 2 — the shuffle is 99.7% singleton
     * pairs. Pre-shuffle pruning was MEASURED-OUT, not overlooked: a
@@ -67,7 +67,7 @@ object Affinity {
     * APRIORI ITEM PRUNE (measured, kept): items in fewer than
     * minSupport baskets cannot form a qualifying pair, so their rows
     * are dropped before the self-join. On THIS corpus the prune is a
-    * no-op — tools/PairStats: 200,000/200,000 items at sf1m and
+    * no-op (COVERAGE.md Session-8): 200,000/200,000 items at sf1m and
     * 2,000,000/2,000,000 at sf10m appear in >= 2 baskets (TPC-H part
     * keys have no infrequent tail), so pruned_pair_rows == pair_rows
     * (12.0M / 120.0M) and the q114 sf10m warm floor is unchanged
@@ -80,7 +80,7 @@ object Affinity {
     * frequent subcorpus. Cheap insurance on this profile, the
     * difference between feasible and not on a Zipfian one.
     *
-    * SKEW POSTURE (measured, tools/SkewProbe): the shuffle key is the
+    * SKEW POSTURE (measured, COVERAGE.md Session-8): the shuffle key is the
     * basket, so per-key pair volume is quadratic in basket size. A
     * power-law tail to ~1800-item baskets is harmless (wall 3.8 s vs
     * 6.2 s uniform at 300k baskets — sum(sz²) barely moves). ONE
@@ -140,7 +140,7 @@ object Affinity {
       // shuffle; see the cost anatomy above for the measured effect.
       // MARKET-BASKET CAP (opt-in): per-key pair volume is quadratic
       // in basket size and AQE's skew split does NOT rescue a single
-      // mega-key (tools/SkewProbe: one 20k-item basket = 200M of 414M
+      // mega-key (COVERAGE.md Session-8: one 20k-item basket = 200M of 414M
       // pair rows, wall 3.7 s -> 19.5 s, aqe_skew_split=false — the
       // split threshold sees partitions, not keys). Degenerate baskets
       // (a crawler session touching 100k items) are a data-quality

@@ -66,7 +66,7 @@ object Components {
     // InMemoryRelations, and the per-round analyze/canonicalize cost
     // grows with depth (measured on the q149 ensemble graph: rounds read
     // 0.7 → 1.0 → 2.3 → 4.3 s under persist vs a flat ~0.2 s/round
-    // checkpointed — tools/ClosureVariants). Checkpointed round RDDs
+    // checkpointed — OPTIMIZATION_r13.md §1). Checkpointed round RDDs
     // are vertex/edge-sized and reclaimed by the ContextCleaner once
     // the loop's references drop; the documented localCheckpoint trade
     // (blocks do not survive executor loss — lineage is cut) is

@@ -246,7 +246,7 @@ object Dedup {
     * docs). Tokens outside the table order by hash below every table
     * entry — any fixed total order keeps the prefix theorem EXACT, so
     * the approximation affects candidate volume only. MEASURED
-    * (tools/JaccardProbe, 500k-doc organic corpus, t=0.8): frequency
+    * (COVERAGE.md Session-7, 500k-doc organic corpus, t=0.8): frequency
     * order removes only ~4% of token-join rows (8.56M -> 8.24M; the
     * corpus has no corpus-wide stop-shingles) while the stats pass
     * adds a full token-grain aggregation — hash order stays the
@@ -429,7 +429,7 @@ object Dedup {
     * bucketed catalog tables, so every subsequent batch pays a parquet
     * read instead of re-tokenizing the corpus — the per-append corpus
     * derivation amortized to zero across batches. MEASURED
-    * (tools/IndexBench, sf10m, warm): full q134-shaped batch 10.2 s
+    * (COVERAGE.md Session-8, sf10m, warm): full q134-shaped batch 10.2 s
     * direct vs 8.0 s index-backed; realistic ~1% daily batch 4.1 s vs
     * 3.0 s; one-time build 10.8 s, per-batch append 6.9 s — the build
     * repays itself within a handful of batches and every batch after

@@ -69,7 +69,7 @@ object Packing {
     val slim = df
       // Null weight = zero mass (the row still gets a shard), matching
       // SQL window-SUM null semantics so the oracle's window form
-      // assigns identically; found by tools/NullSweep (getLong on a
+      // assigns identically; found by `Sweep null` (getLong on a
       // null weight kills the scan task at depth otherwise).
       .select(col(orderCol).cast("long").as("__k"),
         coalesce(col(weightCol).cast("long"), lit(0L)).as("__w"))

@@ -217,7 +217,7 @@ object VectorIndex {
     // array). ip coalesces to 0.0 BEFORE collect_list: a null-
     // embedding query yields null inner products, and collect_list
     // skips nulls while the key list keeps its positions — a
-    // mismatched MapData crash (NullSweep catch). The 0 scores are
+    // mismatched MapData crash (`Sweep null` catch). The 0 scores are
     // inert: such a query's exact rescore is null-cosine and drops at
     // every downstream threshold, exactly like the plain probe path.
     val lutArr = ProductQuantize.adcLut(

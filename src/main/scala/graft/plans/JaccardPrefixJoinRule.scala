@@ -72,7 +72,7 @@ import org.apache.spark.sql.types._
   * apply here: it would run a token-df stats job inside the optimizer
   * (re-executed on every AQE re-optimization of every matched query),
   * and the measured candidate saving on organic corpora is ~4%
-  * (tools/JaccardProbe) — the POSITIONAL filter below delivers the
+  * (COVERAGE.md Session-7) — the POSITIONAL filter below delivers the
   * 2.7x join-row cut with zero stats. A workload with true
   * stop-shingle skew should call the operator form with
   * `freqOrdered = true` rather than the declarative join.

@@ -38,7 +38,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * (a bounded query/eval set crossed with the corpus; each has an
   * indexed scale path or a schema-bounded domain — reasons inline).
   *
-  * Usage: PlanLint [srcDir]
+  * Run it over the suite with `Sweep lint [srcDir]`.
   */
 object PlanLint {
   private val allowNestedLoop: Map[String, String] = Map(
@@ -109,24 +109,17 @@ object PlanLint {
     }.flatten)
   }
 
-  def main(args: Array[String]): Unit = {
-    val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val only = args.drop(1).toSet
-    val spark = graft.core.Sessions.local(16)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val bad = Sweep.overQueries("plan lint", only) { (name, fn) =>
-      val found = offenders(fn(spark, src).queryExecution.executedPlan,
-        verbose = only.nonEmpty)
-      if (found.isEmpty) Right(s"OK   $name")
-      // An UNBOUNDED cartesian is never allowlistable — only the
-      // nested-loop findings yield to the named list.
-      else if (allowNestedLoop.contains(name) &&
-          !found.contains("CartesianProduct"))
-        Right(s"OK   $name (allowlisted: ${allowNestedLoop(name)})")
-      else Left(s"FLAG $name: ${found.distinct.mkString("+")}")
-    }
-    spark.stop()
-    if (bad > 0) sys.exit(1)
+  /** One row's lint verdict: Right when its plan has no offender or
+    * only allowlisted nested loops, Left (a FLAG line) otherwise.
+    */
+  def verdict(name: String, plan: SparkPlan, verbose: Boolean): Either[String, String] = {
+    val found = offenders(plan, verbose)
+    if (found.isEmpty) Right(s"OK   $name")
+    // An UNBOUNDED cartesian is never allowlistable — only the
+    // nested-loop findings yield to the named list.
+    else if (allowNestedLoop.contains(name) &&
+        !found.contains("CartesianProduct"))
+      Right(s"OK   $name (allowlisted: ${allowNestedLoop(name)})")
+    else Left(s"FLAG $name: ${found.distinct.mkString("+")}")
   }
 }

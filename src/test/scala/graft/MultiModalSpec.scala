@@ -254,7 +254,7 @@ class MultiModalSpec extends SparkSpec {
 
   test("null payloads are skipped, not NPEs, in every decode pipeline") {
     // The record survived ingestion, the bytes did not — a null payload
-    // must yield no decoded rows anywhere (found by tools/NullSweep:
+    // must yield no decoded rows anywhere (found by `Sweep null`:
     // an executor NPE deep into a 10M-asset scan otherwise).
     val text = "the quick brown fox jumps over the lazy dog " * 4
     val ok = MediaAsset(1L, "image", text.getBytes, 10.0)

@@ -857,7 +857,7 @@ class OpsSpec extends SparkSpec {
   test("PQ training: null embeddings are skipped; few or no usable vectors still train") {
     import graft.ops.ProductQuantize
     val store = pqStore(3)
-    // Null every 7th embedding (NullSweep's pattern): the same books as
+    // Null every 7th embedding (`Sweep null`'s pattern): the same books as
     // a store without those rows.
     val nulled = store.withColumn("embedding",
       when(col("vec_id") % 7 === 0, lit(null)).otherwise(col("embedding")))

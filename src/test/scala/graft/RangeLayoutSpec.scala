@@ -152,7 +152,7 @@ class RangeLayoutSpec extends SparkSpec {
     // derived-width stats job finds no rows. The rule must engage with
     // a default width rather than decline — the rewrite is exact for
     // any width, and declining would flip the plan shape (and crash
-    // q100's engagement pin) on empty input. Found by tools/EmptySweep.
+    // q100's engagement pin) on empty input. Found by `Sweep empty`.
     val emptyIvs = intervalsDf.where(col("wid") < 0L)
     val df = pointsDf.join(emptyIvs,
       col("ts") >= col("w_start") && col("ts") < col("w_end"))
