@@ -3709,24 +3709,32 @@ object SparkEntry {
     * tokenization; before the store each re-trained and re-tokenized
     * inside one suite run (q180 tokenized TWICE — its 53.4 s sf10m
     * floor, the suite's #1, was ~2× a tokenize by construction).
-    * [[graft.ops.TokenStore.ensure]] is idempotent, so any consumer
-    * can run first or alone; the DATASET hash is part of the CATALOG
-    * prefix (not just the path) because a store that silently "exists"
-    * for the wrong corpus would be a cross-dataset correctness bug —
-    * unlike the overwrite-mode index writers, ensure() skips work when
-    * the tables are live. Consumers' oracles keep the direct
-    * train + tokenize spelling in DuckDB, so the store's content is
-    * value-pinned by the gate every round.
+    * Consumers' oracles keep the direct train + tokenize spelling in
+    * DuckDB, so the store's content is value-pinned by the gate every
+    * round.
     */
   private def ensureTokenStore(
       s: org.apache.spark.sql.SparkSession, d: String,
       needIds: Boolean = true): String = {
-    val prefix = s"graft_tokstore_${runToken}_" +
-      java.lang.Integer.toHexString(d.hashCode)
-    val base = s"${System.getProperty("java.io.tmpdir")}/$prefix"
+    val store = runStore(s, "tokstore", d, "")
     graft.ops.TokenStore.ensure(documents(s, d), "text", "doc_id",
-      bpeRounds, prefix, base, needIds = needIds)
-    prefix
+      bpeRounds, store.tablePrefix, store.basePath, needIds = needIds)
+    store.tablePrefix
+  }
+
+  /** The run's standing store of `kind` over data dir `d`: catalog
+    * prefix `graft_<kind>_<runToken>_<hex(d.hashCode)><suffix>`, files
+    * under `java.io.tmpdir` by the same name. The DATASET hash is part
+    * of the CATALOG prefix (not just the path): an ensure skips work
+    * when the tables are live, so a store that silently "exists" for
+    * the wrong corpus would be a cross-dataset correctness bug.
+    */
+  private def runStore(s: org.apache.spark.sql.SparkSession, kind: String,
+      d: String, suffix: String): graft.core.StandingStore = {
+    val prefix = s"graft_${kind}_${runToken}_" +
+      java.lang.Integer.toHexString(d.hashCode) + suffix
+    graft.core.StandingStore(s, prefix,
+      s"${System.getProperty("java.io.tmpdir")}/$prefix")
   }
 
   /** STANDING IVFPQ INDEX per (run, data dir) — the round-13
@@ -3748,15 +3756,13 @@ object SparkEntry {
       s: org.apache.spark.sql.SparkSession, d: String, nEmb: Long,
       needPq: Boolean = true): String = {
     val nlist = if (nEmb < (1L << 16)) 16 else 64
-    val prefix = s"graft_idx_std_${runToken}_" +
-      java.lang.Integer.toHexString(d.hashCode) + s"_n$nlist"
-    val base = s"${System.getProperty("java.io.tmpdir")}/$prefix"
+    val store = runStore(s, "idx_std", d, s"_n$nlist")
     graft.ops.VectorIndex.ensureIvfPqIndex(embeddings(s, d), "embedding",
       "vec_id", nlist = nlist, m = 4, ksub = 16, dim = 64,
-      refineIters = 1, pqIters = 2, tablePrefix = prefix, basePath = base,
-      needPq = needPq,
+      refineIters = 1, pqIters = 2, tablePrefix = store.tablePrefix,
+      basePath = store.basePath, needPq = needPq,
       booksOpt = if (needPq) Some(sharedPqCodebooks(s, d)) else None)
-    prefix
+    store.tablePrefix
   }
 
   /** SESSION-SHARED PQ codebooks over the full embedding store at the

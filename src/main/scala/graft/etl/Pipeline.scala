@@ -71,9 +71,16 @@ object Pipeline {
       if (graft.core.FsUtil.exists(spark, storePath)) {
         // Resume: embed only the chunks the store lacks, append them
         // (the reference re-run skips stored ids, build_vector_store.py).
+        // Nothing new appends nothing: a 0-row append still writes an
+        // empty part file. Persisted so the emptiness probe and the
+        // append share one anti-join.
         val fresh = Load.discoverNewChunks(chunks.toDF(), readStore())
-        Load.embedChunks(fresh.as[ChunkDoc], embedder)
-          .toDF().write.mode("append").parquet(storePath)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          if (!fresh.isEmpty)
+            Load.embedChunks(fresh.as[ChunkDoc], embedder)
+              .toDF().write.mode("append").parquet(storePath)
+        } finally fresh.unpersist(blocking = false)
       } else {
         Load.writeStore(Load.embedChunks(chunks, embedder).toDF(), storePath)
       }

@@ -115,15 +115,13 @@ object Boilerplate {
   // ------------------------------------------------- line-stats store
 
   /** MATERIALIZED line-stats store — boilerplate counts are
-    * corpus-version state exactly like the corpus prefix index
-    * ([[Dedup.writeCorpusIndex]] discipline): write once, bucketed by
-    * line_hash; every increment APPENDS its batch-grain partial counts
-    * (no history recount — the table holds per-batch partials and
-    * [[storedLineStats]] merges them with a bucket-local, zero-
+    * corpus-version state, kept as a [[graft.core.StandingStore]]
+    * (rebind [[lineStatsTables]] after a restart): write once, bucketed
+    * by line_hash; every increment APPENDS its batch-grain partial
+    * counts (no history recount — the table holds per-batch partials
+    * and [[storedLineStats]] merges them with a bucket-local, zero-
     * exchange aggregation); [[removeAgainstLineStats]] cleans any
-    * relation against the standing counts. Catalog entries are
-    * session-scoped, files are not; [[registerLineStats]] rebinds
-    * after a restart.
+    * relation against the standing counts.
     *
     * APPEND CONTRACT: batches carry NEW documents (append-only corpus
     * ingest — the same contract as [[Dedup.appendToCorpusIndex]]), so
@@ -146,37 +144,16 @@ object Boilerplate {
       tablePrefix: String = "graft_line_stats",
       basePath: String = null,
       numBuckets: Int = 32): Unit = {
-    val spark = df.sparkSession
-    def path(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
-        name: String) =
-      if (basePath == null) w else w.option("path", s"$basePath/$name")
-    path(lineStats(df, textCol, idCol).withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").format("parquet"), "stats")
-      .bucketBy(numBuckets, "line_hash").sortBy("line_hash")
-      .saveAsTable(s"${tablePrefix}_stats")
-    path(spark.createDataFrame(Seq(Tuple1(numBuckets))).toDF("num_buckets")
-      .write.mode("overwrite").format("parquet"), "meta")
-      .saveAsTable(s"${tablePrefix}_meta")
+    val store = graft.core.StandingStore(df.sparkSession, tablePrefix, basePath)
+    store.writeBucketed("stats",
+      lineStats(df, textCol, idCol).withColumn("batch_id", lit(-1L)),
+      "line_hash", numBuckets)
+    store.writeMeta("num_buckets" -> numBuckets)
   }
 
-  /** Rebind a [[writeLineStats]] materialization into THIS session's
-    * catalog (restart path). Idempotent.
-    */
-  def registerLineStats(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String,
-      basePath: String): Unit = {
-    def ddl(name: String): String =
-      spark.read.parquet(s"$basePath/$name").schema.toDDL
-    if (!spark.catalog.tableExists(s"${tablePrefix}_meta"))
-      spark.sql(s"CREATE TABLE ${tablePrefix}_meta (${ddl("meta")}) " +
-        s"USING PARQUET LOCATION '$basePath/meta'")
-    val nb = spark.table(s"${tablePrefix}_meta").head().getAs[Int]("num_buckets")
-    if (!spark.catalog.tableExists(s"${tablePrefix}_stats"))
-      spark.sql(s"CREATE TABLE ${tablePrefix}_stats (${ddl("stats")}) " +
-        s"USING PARQUET CLUSTERED BY (line_hash) SORTED BY (line_hash) " +
-        s"INTO $nb BUCKETS LOCATION '$basePath/stats'")
-  }
+  /** The line-stats store's layout: table name -> bucket column. */
+  val lineStatsTables: Seq[(String, Option[String])] =
+    Seq("stats" -> Some("line_hash"), "meta" -> None)
 
   /** Append a NEW batch's partial counts (see the append contract on
     * [[writeLineStats]]) — one skinny batch-grain aggregation, no
@@ -188,14 +165,9 @@ object Boilerplate {
       textCol: String,
       idCol: String,
       tablePrefix: String = "graft_line_stats",
-      batchId: Long = -1L): Unit = {
-    val spark = batch.sparkSession
-    val nb = spark.table(s"${tablePrefix}_meta").head().getAs[Int]("num_buckets")
-    lineStats(batch, textCol, idCol).withColumn("batch_id", lit(batchId))
-      .write.mode("append").format("parquet")
-      .bucketBy(nb, "line_hash").sortBy("line_hash")
-      .saveAsTable(s"${tablePrefix}_stats")
-  }
+      batchId: Long = -1L): Unit =
+    graft.core.StandingStore(batch.sparkSession, tablePrefix, null).append(("stats",
+      lineStats(batch, textCol, idCol).withColumn("batch_id", lit(batchId)), "line_hash"))
 
   /** Whether a [[appendToLineStats]] with this `batchId` already
     * committed — a bounded existence probe (limit-1 over the skinny

@@ -228,14 +228,8 @@ object Components {
     VectorIndex.writeIvfPqIndex(vecs, embCol, idCol, nlist = nlist,
       m = m, ksub = ksub, dim = dim, refineIters = 1,
       tablePrefix = tablePrefix, basePath = basePath)
-    val hits = VectorIndex.searchIvfIndexAdc(
-      vecs.select(col(idCol).as("__qid"), col(embCol).as("__qemb")),
-      "__qemb", "__qid", k = k, nprobe = nprobe, shortlist = shortlist,
-      tablePrefix = tablePrefix)
-    val pairs = hits
-      .where(col("vec_id") =!= col("__qid") && col("score") >= threshold)
-      .select(col("__qid").as("id_a"), col("vec_id").as("id_b"))
-    dedupClusters(vecs, idCol, pairs, "id_a", "id_b")
+    clustersOverIndex(vecs, embCol, idCol, threshold, nprobe, k, shortlist,
+      VectorIndex.relations(vecs.sparkSession, tablePrefix))
   }
 
   /** [[dedupClustersIndexed]] over an IN-MEMORY scratch index
@@ -258,9 +252,17 @@ object Components {
       shortlist: Int,
       m: Int,
       ksub: Int,
-      dim: Int): DataFrame = {
-    val rel = VectorIndex.buildIvfPqRelations(vecs, embCol, idCol,
-      nlist = nlist, m = m, ksub = ksub, dim = dim, refineIters = 1)
+      dim: Int): DataFrame =
+    clustersOverIndex(vecs, embCol, idCol, threshold, nprobe, k, shortlist,
+      VectorIndex.buildIvfPqRelations(vecs, embCol, idCol,
+        nlist = nlist, m = m, ksub = ksub, dim = dim, refineIters = 1))
+
+  /** Every vector probes `rel` as a query; pairs at exact cosine >=
+    * `threshold` close into [[dedupClusters]].
+    */
+  private def clustersOverIndex(vecs: DataFrame, embCol: String, idCol: String,
+      threshold: Double, nprobe: Int, k: Int, shortlist: Int,
+      rel: VectorIndex.IvfPqRelations): DataFrame = {
     val hits = VectorIndex.searchIvfAdcRelations(
       vecs.select(col(idCol).as("__qid"), col(embCol).as("__qemb")),
       "__qemb", "__qid", k = k, nprobe = nprobe, shortlist = shortlist, rel)

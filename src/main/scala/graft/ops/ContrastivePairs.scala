@@ -124,13 +124,10 @@ object ContrastivePairs {
       basePath: String): DataFrame = {
     require(numPlanes >= 1 && nlist >= 1 && nprobe >= 1 && k >= 1,
       s"bad config: numPlanes=$numPlanes nlist=$nlist nprobe=$nprobe k=$k")
-    val pos = lshPositives(df, embCol, idCol, anchors, posThreshold, numPlanes)
     VectorIndex.writeIvfIndex(df, embCol, idCol, nlist = nlist,
       refineIters = 1, tablePrefix = tablePrefix, basePath = basePath)
-    val hits = VectorIndex.searchIvfIndex(
-      anchors.select(col(idCol).as("__qid"), col(embCol).as("__qemb")),
-      "__qemb", "__qid", k = k, nprobe = nprobe, tablePrefix = tablePrefix)
-    joinNegatives(pos, hits, posThreshold)
+    hardTripletsAnnIndexed(df, embCol, idCol, anchors, posThreshold, numPlanes,
+      nprobe, k, tablePrefix)
   }
 
   /** [[hardTripletsAnn]] against an EXISTING index (the standing-index
@@ -213,15 +210,11 @@ object ContrastivePairs {
       basePath: String): DataFrame = {
     require(numPlanes >= 1 && nlist >= 1 && nprobe >= 1 && k >= 1,
       s"bad config: numPlanes=$numPlanes nlist=$nlist nprobe=$nprobe k=$k")
-    val pos = lshPositives(df, embCol, idCol, anchors, posThreshold, numPlanes)
     VectorIndex.writeIvfPqIndex(df, embCol, idCol, nlist = nlist,
       m = m, ksub = ksub, dim = dim, refineIters = 1,
       tablePrefix = tablePrefix, basePath = basePath)
-    val hits = VectorIndex.searchIvfIndexAdc(
-      anchors.select(col(idCol).as("__qid"), col(embCol).as("__qemb")),
-      "__qemb", "__qid", k = k, nprobe = nprobe, shortlist = shortlist,
-      tablePrefix = tablePrefix)
-    joinNegatives(pos, hits, posThreshold)
+    hardTripletsAnnAdcIndexed(df, embCol, idCol, anchors, posThreshold,
+      numPlanes, nprobe, k, shortlist, tablePrefix)
   }
 
   /** The shared LSH multi-probe positive arm (see [[hardTripletsAnn]]). */

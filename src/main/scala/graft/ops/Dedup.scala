@@ -319,10 +319,7 @@ object Dedup {
     // The verify step stays exact — both Spark and DuckDB compare the
     // same nearest-double of intersect/union against the same literal.
     val eps = 1e-9
-    val prefLen =
-      (size(col("sh")) - ceil(lit(threshold) * size(col("sh")) - lit(eps)) + 1).cast("int")
-    val tokens = sets.select(col("id"), size(col("sh")).as("sz"),
-      posexplode(slice(col("sh"), lit(1), prefLen)).as(Seq("pos", "tok")))
+    val tokens = prefixTokens(sets, threshold)
     val a = tokens.select(col("tok"), col("id").as("id_a"), col("sz").as("sz_a"),
       col("pos").as("pos_a"))
     val b = tokens.select(col("tok"), col("id").as("id_b"), col("sz").as("sz_b"),
@@ -370,7 +367,6 @@ object Dedup {
       shingleN: Int = 3,
       freqOrdered: Boolean = false): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
-    val eps = 1e-9
     def rawSets(df: DataFrame): DataFrame =
       df.select(col(idCol).as("id"), shingleHashes(col(textCol), shingleN).as("sh"))
         .where(size(col("sh")) > 0)
@@ -386,19 +382,24 @@ object Dedup {
         val ord = freqOrder(corpusRaw, col("sh"))
         df => df.select(col("id"), ord.as("sh"))
       }
-    def prefixTokens(sets: DataFrame): DataFrame = {
-      val prefLen =
-        (size(col("sh")) - ceil(lit(threshold) * size(col("sh")) - lit(eps)) + 1).cast("int")
-      sets.select(col("id"), size(col("sh")).as("sz"),
-        posexplode(slice(col("sh"), lit(1), prefLen)).as(Seq("pos", "tok")))
-    }
     // Each side's sets feed its prefix explode AND its verify re-join.
-    val inSets = graft.core.Caches.persistTracked(order(rawSets(incoming)))
     val coSets = graft.core.Caches.persistTracked(order(corpusRaw))
-    val a = prefixTokens(inSets)
+    joinSetsAgainst(graft.core.Caches.persistTracked(order(rawSets(incoming))),
+      prefixTokens(coSets, threshold), coSets, threshold)
+  }
+
+  /** The batch-vs-corpus prefix join over sorted shingle sets: the
+    * corpus side comes as its prefix tokens and its sets, derived in
+    * the query ([[jaccardJoinAgainst]]) or read off the corpus index
+    * ([[jaccardJoinAgainstIndex]]).
+    */
+  private def joinSetsAgainst(inSets: DataFrame, corpusPrefix: DataFrame,
+      corpusSets: DataFrame, threshold: Double): DataFrame = {
+    val eps = 1e-9
+    val a = prefixTokens(inSets, threshold)
       .select(col("tok"), col("id").as("id_in"), col("sz").as("sz_in"),
         col("pos").as("pos_in"))
-    val b = prefixTokens(coSets)
+    val b = corpusPrefix
       .select(col("tok"), col("id").as("id_corpus"), col("sz").as("sz_co"),
         col("pos").as("pos_co"))
     val cands = a.join(b, Seq("tok"))
@@ -418,7 +419,7 @@ object Dedup {
     // full shingle array attached: measured 101s -> ~10s for the
     // verify at 1.4M candidates / 450k corpus docs (sf10m).
     cands
-      .join(coSets.select(col("id").as("id_corpus"), col("sh").as("sh_co")), "id_corpus")
+      .join(corpusSets.select(col("id").as("id_corpus"), col("sh").as("sh_co")), "id_corpus")
       .join(broadcast(inSets.select(col("id").as("id_in"), col("sh").as("sh_in"))), "id_in")
       .withColumn("jaccard", jaccard(col("sh_in"), col("sh_co")))
       .where(col("jaccard") >= threshold)
@@ -433,8 +434,9 @@ object Dedup {
     * direct vs 8.0 s index-backed; realistic ~1% daily batch 4.1 s vs
     * 3.0 s; one-time build 10.8 s, per-batch append 6.9 s — the build
     * repays itself within a handful of batches and every batch after
-    * that keeps the ~25% saving. Four tables under `tablePrefix` /
-    * `basePath`:
+    * that keeps the ~25% saving. Four tables of a
+    * [[graft.core.StandingStore]] under `tablePrefix` / `basePath`
+    * (rebind [[corpusIndexTables]] after a restart):
     *
     *  - `_sets`   (id, sh)            bucketed by id  — the verify side
     *  - `_prefix` (id, sz, pos, tok)  bucketed by tok — the candidate side
@@ -459,62 +461,51 @@ object Dedup {
       basePath: String = null,
       numBuckets: Int = 32): Unit = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
-    val spark = corpus.sparkSession
-    val eps = 1e-9
-    def write(df: DataFrame, name: String, bucketCol: String): Unit = {
-      val w = df.write.mode("overwrite").format("parquet")
-      val w2 = if (basePath == null) w else w.option("path", s"$basePath/$name")
-      w2.bucketBy(numBuckets, bucketCol).sortBy(bucketCol)
-        .saveAsTable(s"${tablePrefix}_$name")
-    }
+    val store = graft.core.StandingStore(corpus.sparkSession, tablePrefix, basePath)
     // Persisted: the sets relation is written AND re-read to derive the
     // prefix table — without the persist the corpus tokenize/shingle/
     // sort pass ran twice per index build (guide §1.2).
-    val sets = graft.core.Caches.persistTracked(corpus
-      .select(col(idCol).as("id"), shingleHashes(col(textCol), shingleN).as("sh"))
-      .where(size(col("sh")) > 0)
-      .select(col("id"), array_sort(col("sh")).as("sh")))
-    write(sets, "sets", "id")
-    val prefLen =
-      (size(col("sh")) - ceil(lit(threshold) * size(col("sh")) - lit(eps)) + 1).cast("int")
-    write(sets.select(col("id"), size(col("sh")).as("sz"),
-      posexplode(slice(col("sh"), lit(1), prefLen)).as(Seq("pos", "tok"))),
-      "prefix", "tok")
-    write(corpus.select(col(textCol).as("text")).where(col("text").isNotNull).distinct(),
-      "texts", "text")
-    val metaW = spark.createDataFrame(Seq((threshold, shingleN, numBuckets)))
-      .toDF("threshold", "shingle_n", "num_buckets")
-      .write.mode("overwrite").format("parquet")
-    (if (basePath == null) metaW else metaW.option("path", s"$basePath/meta"))
-      .saveAsTable(s"${tablePrefix}_meta")
+    val sets = graft.core.Caches.persistTracked(corpusIndexSets(corpus, textCol, idCol, shingleN))
+    for ((name, df) <- corpusIndexRows(corpus, sets, textCol, threshold))
+      store.writeBucketed(name, df, corpusIndexBucketCol(name), numBuckets)
+    store.writeMeta("threshold" -> threshold, "shingle_n" -> shingleN,
+      "num_buckets" -> numBuckets)
   }
 
-  /** (Re)bind a [[writeCorpusIndex]] materialization at `basePath` to
-    * THIS session's catalog — the restart path: catalog entries are
-    * session-scoped, the parquet under `basePath` is not. Schemas are
-    * inferred from the files themselves (no fixed DDL to drift), the
-    * bucket spec is restored from `_meta`, so a rebound index plans
-    * exactly like the session that wrote it. Idempotent: existing
-    * entries are left alone.
+  /** The corpus index's layout: table name -> bucket column. */
+  val corpusIndexTables: Seq[(String, Option[String])] =
+    Seq("sets" -> Some("id"), "prefix" -> Some("tok"), "texts" -> Some("text"),
+      "meta" -> None)
+
+  private def corpusIndexBucketCol(name: String): String =
+    corpusIndexTables.toMap.apply(name).get
+
+  private def corpusIndexSets(docs: DataFrame, textCol: String, idCol: String,
+      shingleN: Int): DataFrame =
+    docs.select(col(idCol).as("id"), shingleHashes(col(textCol), shingleN).as("sh"))
+      .where(size(col("sh")) > 0)
+      .select(col("id"), array_sort(col("sh")).as("sh"))
+
+  /** The three bucketed tables' rows for `docs`, whose shingle sets
+    * are `sets` — one derivation for the build and the append.
     */
-  def registerCorpusIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String,
-      basePath: String): Unit = {
-    def ddl(name: String): String =
-      spark.read.parquet(s"$basePath/$name").schema.toDDL
-    if (!spark.catalog.tableExists(s"${tablePrefix}_meta"))
-      spark.sql(s"CREATE TABLE ${tablePrefix}_meta (${ddl("meta")}) " +
-        s"USING PARQUET LOCATION '$basePath/meta'")
-    val nb = spark.table(s"${tablePrefix}_meta").head().getAs[Int]("num_buckets")
-    def bind(name: String, bucketCol: String): Unit =
-      if (!spark.catalog.tableExists(s"${tablePrefix}_$name"))
-        spark.sql(s"CREATE TABLE ${tablePrefix}_$name (${ddl(name)}) USING PARQUET " +
-          s"CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) INTO $nb BUCKETS " +
-          s"LOCATION '$basePath/$name'")
-    bind("sets", "id")
-    bind("prefix", "tok")
-    bind("texts", "text")
+  private def corpusIndexRows(docs: DataFrame, sets: DataFrame, textCol: String,
+      threshold: Double): Seq[(String, DataFrame)] =
+    Seq(
+      "sets" -> sets,
+      "prefix" -> prefixTokens(sets, threshold),
+      "texts" -> docs.select(col(textCol).as("text")).where(col("text").isNotNull)
+        .distinct())
+
+  /** Each set's prefix tokens at `threshold`, (id, sz, pos, tok) — the
+    * candidate side of every prefix-filtered Jaccard join. The prefix
+    * length carries the 1e-9 epsilon, so rounding only over-generates.
+    */
+  private def prefixTokens(sets: DataFrame, threshold: Double): DataFrame = {
+    val prefLen =
+      (size(col("sh")) - ceil(lit(threshold) * size(col("sh")) - lit(1e-9)) + 1).cast("int")
+    sets.select(col("id"), size(col("sh")).as("sz"),
+      posexplode(slice(col("sh"), lit(1), prefLen)).as(Seq("pos", "tok")))
   }
 
   /** Append a batch to a standing corpus index written by
@@ -546,28 +537,11 @@ object Dedup {
       if (newDocs0.queryExecution.analyzed.toString.contains(tablePrefix + "_"))
         newDocs0.localCheckpoint()
       else newDocs0
-    val spark = newDocs.sparkSession
-    val meta = spark.table(s"${tablePrefix}_meta").head()
-    val threshold = meta.getAs[Double]("threshold")
-    val shingleN = meta.getAs[Int]("shingle_n")
-    val numBuckets = meta.getAs[Int]("num_buckets")
-    val eps = 1e-9
-    def append(df: DataFrame, name: String, bucketCol: String): Unit =
-      df.write.mode("append").format("parquet")
-        .bucketBy(numBuckets, bucketCol).sortBy(bucketCol)
-        .saveAsTable(s"${tablePrefix}_$name")
-    val sets = newDocs
-      .select(col(idCol).as("id"), shingleHashes(col(textCol), shingleN).as("sh"))
-      .where(size(col("sh")) > 0)
-      .select(col("id"), array_sort(col("sh")).as("sh"))
-    append(sets, "sets", "id")
-    val prefLen =
-      (size(col("sh")) - ceil(lit(threshold) * size(col("sh")) - lit(eps)) + 1).cast("int")
-    append(sets.select(col("id"), size(col("sh")).as("sz"),
-      posexplode(slice(col("sh"), lit(1), prefLen)).as(Seq("pos", "tok"))),
-      "prefix", "tok")
-    append(newDocs.select(col(textCol).as("text")).where(col("text").isNotNull).distinct(),
-      "texts", "text")
+    val store = graft.core.StandingStore(newDocs.sparkSession, tablePrefix, null)
+    val meta = store.meta
+    val sets = corpusIndexSets(newDocs, textCol, idCol, meta.getAs[Int]("shingle_n"))
+    store.append(corpusIndexRows(newDocs, sets, textCol, meta.getAs[Double]("threshold"))
+      .map { case (name, df) => (name, df, corpusIndexBucketCol(name)) }: _*)
   }
 
   /** [[jaccardJoinAgainst]] with the corpus side served by a
@@ -585,41 +559,15 @@ object Dedup {
       idCol: String,
       threshold: Double,
       tablePrefix: String = "graft_corpus_index"): DataFrame = {
-    val spark = incoming.sparkSession
-    val meta = spark.table(s"${tablePrefix}_meta").head()
+    val store = graft.core.StandingStore(incoming.sparkSession, tablePrefix, null)
+    val meta = store.meta
     val idxThreshold = meta.getAs[Double]("threshold")
-    val shingleN = meta.getAs[Int]("shingle_n")
     require(threshold >= idxThreshold - 1e-12,
       s"index built at threshold $idxThreshold cannot serve a query at $threshold " +
         "(stored prefixes too short for completeness) — rebuild the index")
-    val eps = 1e-9
-    val inSets = graft.core.Caches.persistTracked(incoming
-      .select(col(idCol).as("id"), shingleHashes(col(textCol), shingleN).as("sh"))
-      .where(size(col("sh")) > 0)
-      .select(col("id"), array_sort(col("sh")).as("sh")))
-    val prefLen =
-      (size(col("sh")) - ceil(lit(threshold) * size(col("sh")) - lit(eps)) + 1).cast("int")
-    val a = inSets.select(col("id"), size(col("sh")).as("sz"),
-        posexplode(slice(col("sh"), lit(1), prefLen)).as(Seq("pos", "tok")))
-      .select(col("tok"), col("id").as("id_in"), col("sz").as("sz_in"),
-        col("pos").as("pos_in"))
-    val b = spark.table(s"${tablePrefix}_prefix")
-      .select(col("tok"), col("id").as("id_corpus"), col("sz").as("sz_co"),
-        col("pos").as("pos_co"))
-    val cands = a.join(b, Seq("tok"))
-      .where(least(col("sz_in"), col("sz_co")) >=
-        lit(threshold) * greatest(col("sz_in"), col("sz_co")) - lit(eps))
-      .where(least(col("sz_in") - col("pos_in"), col("sz_co") - col("pos_co")) >=
-        lit(threshold / (1.0 + threshold)) * (col("sz_in") + col("sz_co")) - lit(eps))
-      .select("id_in", "id_corpus")
-      .distinct()
-    cands
-      .join(spark.table(s"${tablePrefix}_sets")
-        .select(col("id").as("id_corpus"), col("sh").as("sh_co")), "id_corpus")
-      .join(broadcast(inSets.select(col("id").as("id_in"), col("sh").as("sh_in"))), "id_in")
-      .withColumn("jaccard", jaccard(col("sh_in"), col("sh_co")))
-      .where(col("jaccard") >= threshold)
-      .select("id_in", "id_corpus", "jaccard")
+    joinSetsAgainst(graft.core.Caches.persistTracked(
+        corpusIndexSets(incoming, textCol, idCol, meta.getAs[Int]("shingle_n"))),
+      store.table("prefix"), store.table("sets"), threshold)
   }
 
   /** SimHash near-dup pairs via TWO-LEVEL banding: the 64-bit simhash

@@ -7,13 +7,11 @@ import org.apache.spark.sql.functions._
   * production pipeline derives ONCE per (tokenizer, corpus) and every
   * downstream consumer reads (decontamination, fertility eval, packing,
   * mixing all need the same token ids; re-tokenizing 100 TB per
-  * consumer is the dominant avoidable cost). Same catalog discipline as
-  * the corpus index ([[Dedup.writeCorpusIndex]]) and the line-stats
-  * store ([[Boilerplate]]): catalog entries are session-scoped, parquet
-  * files are not; [[ensure]] is idempotent — it builds on first touch,
-  * rebinds from files after a restart, and no-ops when the tables are
-  * already live, so ANY consumer can run first (or alone) and the
-  * train + tokenize cost is paid exactly once per (run, corpus).
+  * consumer is the dominant avoidable cost). The tables are a
+  * [[graft.core.StandingStore]], and [[ensure]] is its idempotent
+  * live → rebind → build order, so ANY consumer can run first (or
+  * alone) and the train + tokenize cost is paid exactly once per
+  * (run, corpus).
   *
   * Tables under `tablePrefix` / `basePath` (byte-level BPE — the q178
   * production-tokenizer convention, [[Bpe.trainByteLevel]]):
@@ -53,41 +51,30 @@ object TokenStore {
       basePath: String,
       needIds: Boolean = true): Unit = {
     val spark = docs.sparkSession
-    def path(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
-        name: String) =
-      if (basePath == null) w else w.option("path", s"$basePath/$name")
+    val store = graft.core.StandingStore(spark, tablePrefix, basePath)
     // Tokenizer half (merges + vocab) — every consumer needs it.
-    if (!spark.catalog.tableExists(s"${tablePrefix}_merges")) {
-      if (filesExist(spark, s"$basePath/merges"))
-        register(spark, tablePrefix, basePath)
-      else {
-        val m = Bpe.trainByteLevel(docs, textCol, numMerges)
-        import spark.implicits._
-        path(m.map(x => (x.rank.toLong, x.a, x.b, x.count))
-          .toDF("merge_rank", "pair_a", "pair_b", "pair_count")
-          .write.mode("overwrite").format("parquet"), "merges")
-          .saveAsTable(s"${tablePrefix}_merges")
-        path(Bpe.vocabTableByteLevel(spark, m)
-          .write.mode("overwrite").format("parquet"), "vocab")
-          .saveAsTable(s"${tablePrefix}_vocab")
-      }
+    store.ensure(tables: _*) {
+      val m = Bpe.trainByteLevel(docs, textCol, numMerges)
+      import spark.implicits._
+      store.write("merges", m.map(x => (x.rank.toLong, x.a, x.b, x.count))
+        .toDF("merge_rank", "pair_a", "pair_b", "pair_count"))
+      store.write("vocab", Bpe.vocabTableByteLevel(spark, m))
     }
-    if (!needIds) return
     // Ids half: bind, or tokenize the corpus through the stored
     // tokenizer and layer the table on.
-    if (spark.catalog.tableExists(s"${tablePrefix}_ids")) return
-    if (filesExist(spark, s"$basePath/ids")) {
-      register(spark, tablePrefix, basePath)
-      return
+    if (needIds) store.ensure("ids" -> None) {
+      val ids = Bpe.tokenizeToIdsByteLevel(docs, textCol, idCol,
+        merges(spark, tablePrefix), vocab(spark, tablePrefix))
+      store.write("ids", ids.select(col(idCol).cast("long").as("doc_id"),
+        col("token_ids")))
     }
-    val m = merges(spark, tablePrefix)
-    val ids = Bpe.tokenizeToIdsByteLevel(docs, textCol, idCol, m,
-      vocab(spark, tablePrefix))
-    path(ids.select(col(idCol).cast("long").as("doc_id"),
-        col("token_ids"))
-      .write.mode("overwrite").format("parquet"), "ids")
-      .saveAsTable(s"${tablePrefix}_ids")
   }
+
+  /** The token store's layout: three unbucketed tables (`_ids` may be
+    * absent — a `needIds = false` materialization).
+    */
+  val tables: Seq[(String, Option[String])] =
+    Seq("merges" -> None, "vocab" -> None, "ids" -> None)
 
   /** The trained merge table as the driver-side Seq consumers feed the
     * native tokenize expression — vocabulary-sized by construction
@@ -109,26 +96,4 @@ object TokenStore {
   /** (doc_id, token_ids) at document grain. */
   def ids(spark: SparkSession, tablePrefix: String): DataFrame =
     spark.table(s"${tablePrefix}_ids")
-
-  /** Rebind an existing materialization into THIS session's catalog
-    * (restart path — the [[VectorIndex.registerVectorIndex]]
-    * discipline). Idempotent.
-    */
-  def register(
-      spark: SparkSession, tablePrefix: String, basePath: String): Unit = {
-    def ddl(name: String): String =
-      spark.read.parquet(s"$basePath/$name").schema.toDDL
-    // ids may legitimately be absent (a needIds=false materialization).
-    for (name <- Seq("merges", "vocab", "ids"))
-      if (!spark.catalog.tableExists(s"${tablePrefix}_$name") &&
-          filesExist(spark, s"$basePath/$name"))
-        spark.sql(s"CREATE TABLE ${tablePrefix}_$name (${ddl(name)}) " +
-          s"USING PARQUET LOCATION '$basePath/$name'")
-  }
-
-  private def filesExist(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))
-  }
 }

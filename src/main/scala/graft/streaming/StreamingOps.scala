@@ -463,7 +463,7 @@ object StreamingOps {
     * of re-deriving shingles from the store parquet every micro-batch:
     * the daily-append loop at its cheapest. First batch builds the
     * index at `indexPath`; every later batch (re)binds the catalog
-    * entries ([[graft.ops.Dedup.registerCorpusIndex]] — restart-safe:
+    * entries ([[graft.core.StandingStore.rebind]] — restart-safe:
     * catalog entries are session-scoped, the index files are not),
     * cascades against the bucketed tables, appends survivors to BOTH
     * the document store and the index
@@ -495,7 +495,8 @@ object StreamingOps {
         val hasIndex = graft.core.FsUtil.exists(spark, s"$indexPath/meta")
         val kept =
           if (hasIndex) {
-            graft.ops.Dedup.registerCorpusIndex(spark, tablePrefix, indexPath)
+            graft.core.StandingStore(spark, tablePrefix, indexPath)
+              .rebind(graft.ops.Dedup.corpusIndexTables: _*)
             graft.ops.DedupCascade
               .cascadeAgainstIndex(selfKept, textCol, idCol, threshold, tablePrefix)
               .where(col("stage") === "kept")

@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
   * invariant, print one verdict line per row and an N/M summary, and
   * exit 1 when any row fails.
   *
-  * Modes (each builds its own copy of `srcDir` in a temp dir):
+  * Modes (`null`, `empty`, `single` and `respell` each build their own
+  * copy of `srcDir` in a temp dir, deleted when the mode finishes):
   *   - `null`: content columns nulled on a deterministic row slice
   *     (every 7th row by id: documents.{text, lang, source, n_chars},
   *     embeddings.{embedding, label}, events.{event_type, value}); ids,
@@ -75,8 +76,16 @@ object Sweep {
       Files.copy(Paths.get(s"$src/$t.parquet"), Paths.get(s"$dir/$t.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
 
-  private def nulledDir(spark: SparkSession, src: String): String = {
-    val dir = Files.createTempDirectory("graft-null-sweep").toString
+  /** `body` over a temp copy of the dataset that `fill` writes; the copy
+    * is deleted once `body` returns or throws.
+    */
+  private def inTempCopy[A](label: String)(fill: String => Unit)(body: String => A): A = {
+    val dir = Files.createTempDirectory(s"graft-$label-sweep").toFile
+    try { fill(dir.toString); body(dir.toString) }
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  private def writeNulled(spark: SparkSession, src: String, dir: String): Unit = {
     def nullify(cond: Column)(cols: String*)(df: DataFrame) =
       cols.foldLeft(df)((d, c) =>
         d.withColumn(c, when(cond, lit(null)).otherwise(col(c))))
@@ -90,20 +99,15 @@ object Sweep {
       graft.core.Tables.events(spark, src))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     copyTpch(src, dir)
-    dir
   }
 
-  private def truncatedDir(spark: SparkSession, src: String, label: String,
-      rows: Int): String = {
-    val dir = Files.createTempDirectory(s"graft-$label-sweep").toString
+  private def writeTruncated(spark: SparkSession, src: String, rows: Int,
+      dir: String): Unit =
     for (t <- tpch ++ Seq("events", "documents", "embeddings"))
       spark.read.parquet(s"$src/$t.parquet").limit(rows).coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    dir
-  }
 
-  private def respelledDir(spark: SparkSession, src: String): String = {
-    val dir = Files.createTempDirectory("graft-respell-sweep").toString
+  private def writeRespelled(spark: SparkSession, src: String, dir: String): Unit = {
     spark.read.parquet(s"$src/documents.parquet")
       .withColumn("doc_id", col("doc_id").cast(IntegerType))
       .withColumn("n_chars", col("n_chars").cast(IntegerType))
@@ -119,7 +123,6 @@ object Sweep {
       .withColumn("ts", col("ts").cast(TimestampNTZType))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     copyTpch(src, dir)
-    dir
   }
 
   /** Canonical value rendering: widths legitimately follow the input
@@ -155,17 +158,18 @@ object Sweep {
     spark.sparkContext.setLogLevel("ERROR")
     val rows = graft.SparkEntry.suite()
 
-    def collecting(label: String, dir: String, tag: String) =
-      overQueries(rows, s"$label sweep") { (name, fn) =>
-        Right(s"OK   $tag$name (${fn(spark, dir).collect().length} rows)")
+    def collecting(label: String, tag: String)(fill: String => Unit) =
+      inTempCopy(label)(fill) { dir =>
+        overQueries(rows, s"$label sweep") { (name, fn) =>
+          Right(s"OK   $tag$name (${fn(spark, dir).collect().length} rows)")
+        }
       }
 
     val bad = try mode match {
-      case "null" => collecting("null", nulledDir(spark, src), "")
-      case "empty" => collecting("empty", truncatedDir(spark, src, "empty", 0), "[empty] ")
-      case "single" => collecting("single", truncatedDir(spark, src, "single", 1), "[single] ")
-      case "respell" =>
-        val dir = respelledDir(spark, src)
+      case "null" => collecting("null", "")(writeNulled(spark, src, _))
+      case "empty" => collecting("empty", "[empty] ")(writeTruncated(spark, src, 0, _))
+      case "single" => collecting("single", "[single] ")(writeTruncated(spark, src, 1, _))
+      case "respell" => inTempCopy("respell")(writeRespelled(spark, src, _)) { dir =>
         overQueries(rows, "respell sweep", summaryWord = "invariant") { (name, fn) =>
           val a = canon(fn(spark, src))
           graft.core.Caches.releaseAll(); graft.core.Caches.releaseShared()
@@ -178,6 +182,7 @@ object Sweep {
               s"  resp: ${b.lift(math.max(d, 0)).getOrElse("")}")
           }
         }
+      }
       case "lint" =>
         val verbose = sys.env.contains("SPARK_GRAFT_ONLY")
         overQueries(rows, "plan lint") { (name, fn) =>

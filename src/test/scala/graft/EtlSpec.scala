@@ -25,7 +25,7 @@ class EtlSpec extends SparkSpec {
     doc(3, "vidC", Seq(TranscriptChunk("clean [ __ ] content", 5.0)), publishedAt = 0L))
 
   private def writeFixtures(): String = {
-    val dir = Files.createTempDirectory("graft-etl").toFile.getAbsolutePath
+    val dir = tempDir("graft-etl")
     // One pretty-printed JSON object per file, in nested subdirs, like
     // the reference's raw/<year>/<month>/<video_id>.json layout.
     docs.zipWithIndex.foreach { case (d, i) =>
@@ -82,7 +82,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("Extract: partitioned sink derives year/month with epoch-0 unknown") {
-    val dir = Files.createTempDirectory("graft-sink").toFile.getAbsolutePath
+    val dir = tempDir("graft-sink")
     Extract.writePartitioned(docs.toDF(), dir)
     val dirs = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("year=")).sorted
     assert(dirs.toSeq == Seq("year=2023", "year=unknown"))
@@ -91,7 +91,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("Extract: JSON sink round-trips every doc through readRawDocs") {
-    val dir = Files.createTempDirectory("graft-roundtrip").toFile.getAbsolutePath
+    val dir = tempDir("graft-roundtrip")
     // 60 docs over three months, so each write task meets several docs
     // of the same year/month partition.
     val months = Seq(1672531200L, 1675209600L, 1677628800L)
@@ -162,14 +162,14 @@ class EtlSpec extends SparkSpec {
   }
 
   test("Extract: snapshot is one-time; skip-state roundtrip with absent-file default") {
-    val snap = Files.createTempDirectory("graft-snap").toFile.getAbsolutePath + "/cat"
+    val snap = tempDir("graft-snap") + "/cat"
     var builds = 0
     def source = { builds += 1; Seq("vidA", "vidB").toDF("video_id") }
     assert(Extract.ensureSnapshot(spark, source, snap).count() == 2)
     assert(Extract.ensureSnapshot(spark, source, snap).count() == 2)
     assert(builds == 1) // second call reads the cache, never re-queries
 
-    val skipPath = Files.createTempDirectory("graft-skip").toFile.getAbsolutePath + "/skip"
+    val skipPath = tempDir("graft-skip") + "/skip"
     assert(Extract.readSkipState(spark, skipPath).count() == 0) // absent -> empty
     // Legacy reason-less checkpoint still reads (reason -> null).
     Extract.writeSkipState(Seq("vidZ").toDF("video_id"), skipPath)
@@ -190,7 +190,7 @@ class EtlSpec extends SparkSpec {
       TranscriptFetchRow("vid-silent", "error", None, Seq.empty))
 
     // Only the permanent skips land in skip state, WITH their reasons.
-    val skipPath = Files.createTempDirectory("graft-skip2").toFile.getAbsolutePath + "/skip"
+    val skipPath = tempDir("graft-skip2") + "/skip"
     val skips = Extract.fetchTranscriptsDetailed(ids, new StubTranscriptFetcher)
       .where(col("status") === "skipped")
       .select(col("video_id"), col("reason"))
@@ -224,7 +224,7 @@ class EtlSpec extends SparkSpec {
 
   test("pipeline end-to-end: extract -> clean -> explode -> embed -> store roundtrip") {
     val dir = writeFixtures()
-    val store = Files.createTempDirectory("graft-store").toFile.getAbsolutePath
+    val store = tempDir("graft-store")
     val raw = Extract.readRawDocs(spark, dir)
     val cleaned = Transform.cleanVideos(raw, new StubChunkCleaner())
     val chunks = Load.explodeChunks(cleaned)
@@ -237,7 +237,7 @@ class EtlSpec extends SparkSpec {
 
   test("Pipeline.run: one entry point chains the stages; re-runs are idempotent") {
     val dir = writeFixtures()
-    val out = Files.createTempDirectory("graft-pipeline").toFile.getAbsolutePath
+    val out = tempDir("graft-pipeline")
     val store = Pipeline.run(spark, dir, out, cleaner = new CountingCleaner)
     assert(store.count() == 3) // vidA 2 chunks + vidC 1; vidB aborted
     assert(spark.read.json(s"$out/cleaned").count() == 2) // cleaned mirror written
@@ -266,8 +266,11 @@ class EtlSpec extends SparkSpec {
 
   test("Pipeline.run: a resume with no new work reads the store with its declared schema") {
     val dir = writeFixtures()
-    val out = Files.createTempDirectory("graft-pipeline-jobs").toFile.getAbsolutePath
+    val out = tempDir("graft-pipeline-jobs")
     Pipeline.run(spark, dir, out)
+    def storeFiles(): Int =
+      new java.io.File(s"$out/store").list().count(_.endsWith(".parquet"))
+    val filesBefore = storeFiles()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -288,6 +291,9 @@ class EtlSpec extends SparkSpec {
     assert(jobs.size <= 5, s"resume launched ${jobs.size} Spark jobs: $jobs")
     assert(store.schema == spark.read.parquet(s"$out/store").schema)
     assert(store.count() == 3)
+    // Nothing new to store appends no (empty) part file.
+    assert(storeFiles() == filesBefore,
+      s"resume changed the store's part files: $filesBefore -> ${storeFiles()}")
   }
 }
 

@@ -299,7 +299,7 @@ class FunctionsSpec extends SparkSpec {
     // arithmetic (unix_micros, interval bins, RANGE frames) requires
     // TimestampType, so events() must canonicalize the NTZ spelling —
     // under a UTC session the cast is exact.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ntz").toString
+    val dir = tempDir("graft-ntz")
     val naive = java.time.LocalDateTime.of(2026, 1, 2, 3, 4, 5)
     Seq((1L, naive)).toDF("event_id", "ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -766,7 +766,7 @@ class OpsSpec extends SparkSpec {
     * training collects run real scan jobs over several partitions.
     */
   private def pqStore(parts: Int): org.apache.spark.sql.DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
+    val dir = tempDir("graft-pq")
     clusteredFixture(nClusters = 8, perCluster = 20, dim = 64, eps = 0.15f)._1
       .repartition(parts).write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
@@ -1791,7 +1791,7 @@ class OpsSpec extends SparkSpec {
   test("materialized vector index: full-probe search == brute force; probes prune buckets; append/rebind") {
     import graft.ops.VectorIndex
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft-vecidx").toString
+    val dir = tempDir("graft-vecidx")
     VectorIndex.writeIvfIndex(emb, "embedding", "vec_id", nlist = 8,
       refineIters = 1, tablePrefix = "t_vec", basePath = s"$dir/idx")
     val queries = emb.where(col("vec_id") < 5)
@@ -1830,7 +1830,7 @@ class OpsSpec extends SparkSpec {
       s"appended duplicate vector must surface: ${after.toSeq.filter(_._1 == 0L).sorted}")
     // Rebind after catalog loss.
     for (t <- Seq("meta", "store", "centroids")) spark.sql(s"DROP TABLE IF EXISTS t_vec_$t")
-    VectorIndex.registerVectorIndex(spark, "t_vec", s"$dir/idx")
+    graft.core.StandingStore(spark, "t_vec", s"$dir/idx").rebind(VectorIndex.coarseTables: _*)
     val rebound = VectorIndex.searchIvfIndex(queries, "q_embedding", "q_id",
         k = 2, nprobe = 8, tablePrefix = "t_vec")
       .select("q_id", "vec_id", "rank").as[(Long, Long, Int)].collect()
@@ -1841,7 +1841,7 @@ class OpsSpec extends SparkSpec {
   test("index-backed SemDeDup: exact mode == unblocked exact closure; tight knobs only refine") {
     import graft.ops.{Components, Dedup, VectorIndex}
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft-semdd").toString
+    val dir = tempDir("graft-semdd")
     val n = emb.count().toInt
     // Exact reference: UNBLOCKED ≥-threshold pairs (constant block)
     // closed under connectivity — what dedupClustersIndexed must equal
@@ -1894,7 +1894,7 @@ class OpsSpec extends SparkSpec {
   test("D4 composition: SemDeDup survivors feed the prototype prune, in that order") {
     import graft.ops.{Components, Prototypes}
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft-d4").toString
+    val dir = tempDir("graft-d4")
     val n = emb.count().toInt
     val d4 = Prototypes.d4Prune(emb, "embedding", "vec_id",
         threshold = 0.4, nlist = 8, nprobe = 8, k = n, shortlist = n,
@@ -1946,6 +1946,51 @@ class OpsSpec extends SparkSpec {
         "pruned_domain_is_survivors"))
       assert(env.getAs[Boolean](c), c)
     graft.core.Caches.releaseAll()
+  }
+
+  test("every standing store rebinds from its files: rows and bucket specs survive a catalog loss") {
+    import graft.core.StandingStore
+    import graft.ops.{Boilerplate, TokenStore, VectorIndex}
+    val dir = tempDir("graft-rebind")
+    val docs = (0L until 24L).map(i =>
+      (i, s"doc $i says hello\nshared footer line\nword ${i % 5} and more text"))
+      .toDF("doc_id", "text")
+    val emb = clusteredFixture(nClusters = 8, perCluster = 20, dim = 64, eps = 0.15f)._1
+    Dedup.writeCorpusIndex(docs, "text", "doc_id", threshold = 0.5, shingleN = 2,
+      tablePrefix = "t_rb_idx", basePath = s"$dir/idx", numBuckets = 4)
+    Boilerplate.writeLineStats(docs, "text", "doc_id", tablePrefix = "t_rb_ls",
+      basePath = s"$dir/ls", numBuckets = 4)
+    TokenStore.ensure(docs, "text", "doc_id", 20, "t_rb_tok", s"$dir/tok")
+    VectorIndex.ensureIvfPqIndex(emb, "embedding", "vec_id", nlist = 8, m = 4,
+      ksub = 16, dim = 64, tablePrefix = "t_rb_vec", basePath = s"$dir/vec")
+    graft.core.Caches.releaseAll()
+    val stores = Seq(
+      ("t_rb_idx", s"$dir/idx", Dedup.corpusIndexTables),
+      ("t_rb_ls", s"$dir/ls", Boilerplate.lineStatsTables),
+      ("t_rb_tok", s"$dir/tok", TokenStore.tables),
+      ("t_rb_vec", s"$dir/vec", VectorIndex.coarseTables ++ VectorIndex.pqTables))
+    def rows(table: String): Seq[String] =
+      spark.table(table).collect().map(_.toString).sorted.toSeq
+    def bucketSpec(table: String): Map[String, String] =
+      spark.sql(s"DESCRIBE TABLE EXTENDED $table").collect()
+        .map(r => r.getString(0) -> r.getString(1))
+        .filter(kv => Set("Num Buckets", "Bucket Columns", "Sort Columns")(kv._1))
+        .toMap
+    for ((prefix, base, tables) <- stores) {
+      val names = tables.map(t => s"${prefix}_${t._1}")
+      val before = names.map(n => n -> (rows(n), bucketSpec(n))).toMap
+      for ((n, (r, _)) <- before) assert(r.nonEmpty, s"$n is empty: the pin is vacuous")
+      for (((_, bucketCol), n) <- tables.zip(names))
+        assert(before(n)._2.get("Bucket Columns") == bucketCol.map(c => s"[`$c`]"),
+          s"$n was written with bucket spec ${before(n)._2}")
+      names.foreach(n => spark.sql(s"DROP TABLE $n"))
+      assert(names.forall(n => !spark.catalog.tableExists(n)))
+      StandingStore(spark, prefix, base).rebind(tables: _*)
+      for (n <- names) {
+        assert(rows(n) == before(n)._1, s"$n rows changed across the rebind")
+        assert(bucketSpec(n) == before(n)._2, s"$n bucket spec changed across the rebind")
+      }
+    }
   }
 
   test("materialized corpus index: index-backed join/cascade == direct; append == rebuild") {
@@ -2461,7 +2506,7 @@ class OpsSpec extends SparkSpec {
       (9L, 10L), (10L, 11L), (11L, 12L)).toDF("a", "b")
     val base = Components.connectedComponents(pairs, "a", "b")
       .as[(Long, Long)].collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set("spark.graft.reliableCheckpoint", "true")
     try {

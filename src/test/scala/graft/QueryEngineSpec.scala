@@ -118,7 +118,7 @@ class QueryEngineSpec extends SparkSpec {
   }
 
   test("retrieve: the result is a local relation, also when nothing is searched") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-qe-store").toString + "/store"
+    val dir = tempDir("graft-qe-store") + "/store"
     store().write.parquet(dir)
     val engine = new QueryEngine(spark.read.parquet(dir), parser, new EchoAnswerer(), embedder)
     for (q <- Seq("""tell me about "spark" please""", "completely unconstrained question")) {
@@ -147,7 +147,7 @@ class QueryEngineSpec extends SparkSpec {
   }
 
   test("process: citing and rendering launch no Spark job after retrieve returns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-qe-jobs").toString + "/store"
+    val dir = tempDir("graft-qe-jobs") + "/store"
     store().write.parquet(dir)
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {

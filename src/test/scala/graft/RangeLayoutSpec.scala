@@ -204,7 +204,7 @@ class RangeLayoutSpec extends SparkSpec {
     // square tiles, so the same box touches only the tiles it covers.
     val grid = spark.range(4096).select(
       (col("id") % 64).as("x"), (col("id") / 64).as("y"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val dir = tempDir("graft-zorder")
     ZOrder.zorderLayout(grid, ZOrder.mortonKey(col("x"), col("y")), 16)
       .write.mode("overwrite").parquet(s"$dir/z")
     grid.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))

@@ -25,7 +25,7 @@ class RespellSpec extends SparkSpec {
 
   private val src = "/root/testdata/sf0.001"
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-respell").toString
+    val d = tempDir("graft-respell")
     val s = spark
     // documents: narrow the integer columns
     s.read.parquet(s"$src/documents.parquet")

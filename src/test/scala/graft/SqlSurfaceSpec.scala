@@ -350,14 +350,15 @@ class SqlSurfaceSpec extends SparkSpec {
       .toDF("video_id", "start_time", "text")
     val cited = (0 until 20 by 2).map(i => (s"vid$i", i))
       .toDF("video_id", "times")
-    graft.core.Layout.writeBucketed(chunks, "b_chunks", "video_id", 4)
-    graft.core.Layout.writeBucketed(cited, "b_cited", "video_id", 4)
+    val store = graft.core.StandingStore(spark, "b", null)
+    store.writeBucketed("chunks", chunks, "video_id", 4)
+    store.writeBucketed("cited", cited, "video_id", 4)
     // Disable auto-broadcast so the sort-merge path shows the property
     // under test: matching bucket specs -> zero Exchange.
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = graft.core.Layout.bucketedJoin(spark, "b_chunks", "b_cited", "video_id")
+      val joined = store.table("chunks").join(store.table("cited"), Seq("video_id"))
       assert(joined.count() == 100)
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"expected shuffle-free bucketed join, got:\n$plan")
@@ -373,7 +374,8 @@ class SqlSurfaceSpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val assigned = graft.ops.Similarity.ivfAssign(emb, nlist = 8)
       .join(emb, Seq("vec_id"))
-    graft.core.Layout.writeBucketed(assigned, "b_ivf_store", "centroid_id", 8)
+    graft.core.StandingStore(spark, "b", null)
+      .writeBucketed("ivf_store", assigned, "centroid_id", 8)
     val store = spark.table("b_ivf_store")
     val probedLists = store.select("centroid_id").distinct()
       .as[Long].collect().sorted.take(2)

@@ -3,7 +3,6 @@ package graft
 import graft.streaming._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -215,8 +214,8 @@ class StreamingSpec extends SparkSpec {
 
   test("incrementalStoreSink: replayed chunks are idempotent via anti-join") {
     implicit val sqlCtx = spark.sqlContext
-    val store = Files.createTempDirectory("graft-stream-store").toFile.getAbsolutePath + "/st"
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toFile.getAbsolutePath
+    val store = tempDir("graft-stream-store") + "/st"
+    val ckpt = tempDir("graft-stream-ckpt")
 
     val input = MemoryStream[(String, Double, String)]
     val df = input.toDF().toDF("video_id", "start_time", "text")
@@ -391,7 +390,7 @@ class StreamingSpec extends SparkSpec {
 
   test("nearDedupStoreSink: exact + near dups dropped across batches; replays idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-neardedup").toString
+    val dir = tempDir("graft-neardedup")
     val store = s"$dir/store"
     val base = (0 until 30).map(i => s"w$i").mkString(" ")
     val nearA = base + " extra"        // trigram J vs base well above 0.8
@@ -425,7 +424,7 @@ class StreamingSpec extends SparkSpec {
 
   test("nearDedupStoreSinkIndexed: same dedup semantics via the corpus index; survives catalog loss") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-neardedup-idx").toString
+    val dir = tempDir("graft-neardedup-idx")
     val store = s"$dir/store"
     val index = s"$dir/index"
     val base = (0 until 30).map(i => s"w$i").mkString(" ")
@@ -450,8 +449,8 @@ class StreamingSpec extends SparkSpec {
     assert(storedIds() == Set(1L, 3L, 12L),
       s"exact replay + near-dup vs index must drop: ${storedIds()}")
     // Restart simulation: the catalog forgets the index tables (a new
-    // session would), the files remain — registerCorpusIndex inside
-    // the sink must rebind and keep deduping.
+    // session would), the files remain — the sink's StandingStore
+    // rebind must restore them and keep deduping.
     for (t <- Seq("meta", "sets", "prefix", "texts"))
       spark.sql(s"DROP TABLE IF EXISTS t_sinkidx_$t")
     runBatch(3, (20L, "completely different content here"), (21L, base))
@@ -462,7 +461,7 @@ class StreamingSpec extends SparkSpec {
 
   test("familyStoreSink: store == from-scratch ensemble after every batch; replays idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-famsink").toString
+    val dir = tempDir("graft-famsink")
     val docsPath = s"$dir/docs"
     val famPath = s"$dir/fams"
     val base = (0 until 30).map(i => s"w$i").mkString(" ")
@@ -517,7 +516,7 @@ class StreamingSpec extends SparkSpec {
 
   test("lineStatsStoreSink: streamed partials == direct lineStats; replays idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-stream-lines").toFile.getAbsolutePath
+    val dir = tempDir("graft-stream-lines")
     val prefix = "t_stream_linestats"
     // Store must exist before the stream: initialize EMPTY.
     graft.ops.Boilerplate.writeLineStats(

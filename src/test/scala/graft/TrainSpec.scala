@@ -816,7 +816,7 @@ class TrainSpec extends SparkSpec {
       (200L, Seq(0.8f, 0.3f)), (250L, Seq(-0.5f, -1f)))
       .toDF("vec_id", "embedding")
       .withColumn("label", lit("all"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-trip").toString
+    val dir = tempDir("graft-trip")
     try {
       val exact = graft.ops.ContrastivePairs
         .hardTriplets(df, "embedding", "vec_id", "label", 0.5)
@@ -847,7 +847,7 @@ class TrainSpec extends SparkSpec {
       (200L, Seq(0.8f, 0.3f)), (250L, Seq(-0.5f, -1f)))
       .toDF("vec_id", "embedding")
       .withColumn("label", lit("all"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-trip-adc").toString
+    val dir = tempDir("graft-trip-adc")
     try {
       val plain = graft.ops.ContrastivePairs
         .hardTripletsAnn(df, "embedding", "vec_id",
@@ -915,7 +915,7 @@ class TrainSpec extends SparkSpec {
     val d = "/root/testdata/sf0.01"
     val emb = graft.core.Tables.embeddings(spark, d)
     val anchors = emb.where(col("vec_id") % 50 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-trip-floor").toString
+    val dir = tempDir("graft-trip-floor")
     try {
       val n = graft.ops.ContrastivePairs.hardTripletsAnn(
         emb, "embedding", "vec_id", anchors, posThreshold = 0.4,
