@@ -2322,12 +2322,11 @@ object SparkEntry {
         .select((col("doc_id") + 300000L).as("doc_id"),
           concat(col("text"), lit(" zz")).as("text"))
       val batch = fresh.unionByName(replay).unionByName(nearMiss)
-      val prefix = s"graft_idx_q141_$runToken"
-      val base = s"${System.getProperty("java.io.tmpdir")}/${prefix}_" +
-        java.lang.Integer.toHexString(d.hashCode)
+      val store = runStore(s, "idx_q141", d, "")
       Dedup.writeCorpusIndex(corpus, "text", "doc_id", threshold = 0.8,
-        shingleN = 3, tablePrefix = prefix, basePath = base)
-      graft.ops.DedupCascade.cascadeAgainstIndex(batch, "text", "doc_id", 0.8, prefix)
+        shingleN = 3, tablePrefix = store.tablePrefix, basePath = store.basePath)
+      graft.ops.DedupCascade.cascadeAgainstIndex(batch, "text", "doc_id", 0.8,
+          store.tablePrefix)
         .orderBy(col("id"))
     }),
     "q142_bloom_anti" -> ((s, d) => {
@@ -2429,15 +2428,14 @@ object SparkEntry {
       // STORE machinery end to end (build + catalog + bucketed scan +
       // rank), fresh tables per run for hermetic Verify/Bench.
       val emb = embeddings(s, d)
-      val prefix = s"graft_idx_q144_$runToken"
-      val base = s"${System.getProperty("java.io.tmpdir")}/${prefix}_" +
-        java.lang.Integer.toHexString(d.hashCode)
+      val store = runStore(s, "idx_q144", d, "")
       graft.ops.VectorIndex.writeIvfIndex(emb, "embedding", "vec_id",
-        nlist = 16, refineIters = 1, tablePrefix = prefix, basePath = base)
+        nlist = 16, refineIters = 1, tablePrefix = store.tablePrefix,
+        basePath = store.basePath)
       val queries = emb.where(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_embedding"))
       graft.ops.VectorIndex.searchIvfIndex(queries, "q_embedding", "q_id",
-          k = 5, nprobe = 16, tablePrefix = prefix)
+          k = 5, nprobe = 16, tablePrefix = store.tablePrefix)
         .select(col("q_id"), col("vec_id"), round(col("score"), 4).as("score"),
           col("rank"))
         .orderBy(col("q_id"), col("rank"))
@@ -2670,10 +2668,9 @@ object SparkEntry {
       // micro-unit weights, hard-sigmoid link, floor-division updates
       // — so the DuckDB oracle replays the entire 3-epoch schedule
       // bit for bit (z -> residual -> gradient -> weight, all BIGINT).
-      // Label: long documents (>= 250 chars). Per epoch: one
-      // broadcast join + doc-grain margin agg, one doc-grain residual
-      // join + bucket-grain gradient agg — shuffles at doc grain,
-      // weight state = 64 rows, no driver collect.
+      // Label: long documents (>= 250 chars). The doc-grain feature
+      // relation is built once; each epoch is one Spark job (one
+      // aggregate over it) and the 64 weights live on the driver.
       graft.ops.LinearTrainer.train(documents(s, d), "text", "doc_id",
         when(length(col("text")) >= 250, lit(1L)).otherwise(lit(0L)),
         buckets = 64, epochs = 3)),
@@ -2689,8 +2686,7 @@ object SparkEntry {
       // from-scratch.
       val docs = documents(s, d)
       val batch = docs.where(isFamilyBatch(col("doc_id")))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_fam_q156_${runToken}_" +
-        java.lang.Integer.toHexString(d.hashCode)
+      val base = runStore(s, "fam_q156", d, "").basePath
       familyPrior(s, d).write.mode("overwrite").parquet(base)
       val prior = s.read.parquet(base)
       graft.ops.EnsembleDedup.assignToFamilies(batch, "doc_id", prior,
@@ -3247,12 +3243,11 @@ object SparkEntry {
           when(col("doc_id") % 5 === 3,
             lit("\nall rights reserved worldwide")).otherwise(lit("")))
           .as("text"))
-      val prefix = s"graft_linestats_q176_$runToken"
-      val base = s"${System.getProperty("java.io.tmpdir")}/${prefix}_" +
-        java.lang.Integer.toHexString(d.hashCode)
+      val store = runStore(s, "linestats_q176", d, "")
+      val prefix = store.tablePrefix
       graft.ops.Boilerplate.writeLineStats(
         withFooters.where(col("doc_id") % 2 === 0), "text", "doc_id",
-        tablePrefix = prefix, basePath = base)
+        tablePrefix = prefix, basePath = store.basePath)
       graft.ops.Boilerplate.appendToLineStats(
         withFooters.where(col("doc_id") % 2 =!= 0), "text", "doc_id",
         tablePrefix = prefix)
@@ -3697,11 +3692,21 @@ object SparkEntry {
     * fixed strings). Per-JVM stable so in-JVM re-runs of a query stay
     * idempotent (every writer uses overwrite mode); pid + nanotime
     * makes cross-JVM collision practically impossible. Naming only —
-    * results never depend on it.
+    * results never depend on it. The run's store files are run-scoped
+    * too: one JVM shutdown hook deletes every `graft_*_<runToken>_*`
+    * directory under `java.io.tmpdir`.
     */
-  private[graft] val runToken: String =
-    java.lang.Long.toHexString(ProcessHandle.current().pid()) + "t" +
+  private[graft] val runToken: String = {
+    val token = java.lang.Long.toHexString(ProcessHandle.current().pid()) + "t" +
       java.lang.Long.toHexString(System.nanoTime() & 0xffffffffL)
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    sys.addShutdownHook {
+      val mine = tmp.listFiles((_: java.io.File, name: String) =>
+        name.startsWith("graft_") && name.contains(s"_${token}_"))
+      if (mine != null) mine.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    }
+    token
+  }
 
   /** STANDING TOKENIZATION STORE per (run, data dir) — the round-13
     * amortization: q177/q178/q180/q185 all need the SAME trained

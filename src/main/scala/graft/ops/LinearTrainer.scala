@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed TRAINING for the hashed-feature linear quality
   * classifier (§2.11 extensions): full-batch gradient descent on a
@@ -23,21 +25,22 @@ import org.apache.spark.sql.functions._
   * quotient is exact under BOTH truncating and flooring integer
   * division — engine-portable by construction.
   *
-  * Scale shape: the token→bucket relation is built ONCE (one corpus
-  * scan + one (doc, bucket)-grain aggregation, the label fused on as a
-  * rider column) and persisted; each epoch is (1) a broadcast join of
-  * the bucket-count relation with the `buckets`-row weight table + a
-  * doc-grain margin-and-residual aggregation (the fused label makes
-  * the residual part of the same exchange), and (2) a doc-grain
-  * gradient join + bucket-grain aggregation — both map-side
-  * combinable, shuffles at doc grain only, gradient state exactly
-  * `buckets` rows (the tree-aggregation equivalent, expressed
-  * declaratively). Weight state between steps is CONFIG-BOUNDED
-  * (`buckets` rows): within [[DriverStateMaxBuckets]] it rides the
-  * driver as a LocalRelation (one bounded collect per step — the same
-  * discipline as the minibatch doc counts), past the bound it stays a
-  * `localCheckpoint`ed DataFrame; the per-step expression tree is
-  * identical either way.
+  * Scale shape: weight state between steps is CONFIG-BOUNDED
+  * (`buckets` rows). Within [[DriverStateMaxBuckets]] it lives on the
+  * driver and each gradient step is ONE Spark job: a doc-grain feature
+  * relation (per doc: batch, label, bucket ids with their counts) is
+  * built from `df` once, in one aggregation, and persisted as a typed
+  * RDD; every step is one `RDD.aggregate` over it that returns a
+  * `buckets`-long gradient, and the weight update runs on the driver
+  * (the Spark MLlib shape for iterative learners: one aggregate per
+  * iteration over a cached featurized relation). The kernel's
+  * arithmetic is the SQL spelling's, value for value: `Math.*Exact`
+  * where ANSI SQL fails on overflow, `fdiv` as
+  * `((x - pmod(x, d)).toDouble / d).toLong` (SQL `/` on BIGINT is
+  * double division), and the SQL null rules (see [[gradientStep]]).
+  * Past the bound the weights stay a `localCheckpoint`ed DataFrame and
+  * each step is a SQL plan over a persisted (doc, bucket) COO relation
+  * — the reference TrainSpec pins the kernel against, row for row.
   *
   * Learning rate = 1/(lrFactor × n_docs) in micro-units — the integer
   * grid schedule. Deterministic by construction: full-batch (no
@@ -48,12 +51,28 @@ object LinearTrainer {
   /** Micro-unit scale: 1e6 = probability 1. */
   val Scale = 1000000L
 
+  /** The tokenizer every trainer and [[score]] share: lower-cased,
+    * trimmed, whitespace-split, empty tokens dropped; null text has no
+    * tokens.
+    */
+  private def tokens(textCol: String): Column =
+    filter(split(lower(trim(coalesce(col(textCol), lit("")))), "\\s+"),
+      t => t =!= lit(""))
+
   /** h60 bucket of a token: first 15 md5 hex digits as a 60-bit long,
     * mod `buckets` — the [[graft.functions.HashedLinearOps]] hash, in
     * its portable column spelling.
     */
   private def bucketOf(tok: Column, buckets: Int): Column =
     conv(substring(md5(tok), 1, 15), 16, 10).cast("long") % buckets
+
+  /** Mini-batch id: h60 of the salted id string, mod numBatches — the
+    * same portable hash spelling as the feature buckets. Null for a
+    * null id, which therefore joins no batch.
+    */
+  private def batchOf(id: Column, salt: String, numBatches: Int): Column =
+    conv(substring(md5(concat(lit(salt), lit(":"), id.cast("string"))),
+      1, 15), 16, 10).cast("long") % numBatches
 
   /** Exact floor division (see object doc). */
   private def fdiv(x: Column, d: Column): Column =
@@ -63,62 +82,173 @@ object LinearTrainer {
   private def hardSigmoid(z: Column): Column =
     least(greatest(fdiv(z, lit(4L)) + lit(Scale / 2), lit(0L)), lit(Scale))
 
-  /** Weight-state dispatch bound (round 14): the weight table is
-    * `buckets` rows — bounded by CONFIG, never by data — so for every
-    * realistic hashed-linear configuration it is DRIVER-BOUNDED state,
-    * exactly like the minibatch doc counts. Holding it as a driver-side
-    * LocalRelation between steps (instead of an eagerly
-    * localCheckpointed DataFrame) removes the per-step fixed costs that
-    * dominated q164: the broadcast-build job (a LocalRelation
-    * broadcasts without a collect job), the checkpoint persist, and one
-    * AQE replan per step — measured 9.5 s → per-step job count 3 → 1 at
-    * identical values (every update is still computed BY SPARK
-    * EXPRESSIONS; the driver only carries rows between steps, so the
-    * integer arithmetic, null propagation, and floor-division spelling
-    * are untouched). Configs past these bounds (weights or trajectory
-    * too big to hold on the driver) keep the original
-    * localCheckpoint-chained path.
+  /** [[fdiv]] on the driver-state kernel's longs: ANSI `-`, Spark's
+    * `pmod` (= `floorMod` for d > 0), double division, truncating cast.
+    */
+  private def fdivExact(x: Long, d: Long): Long =
+    (Math.subtractExact(x, Math.floorMod(x, d)).toDouble / d).toLong
+
+  /** [[hardSigmoid]] on the driver-state kernel's longs. */
+  private def hardSigmoidExact(z: Long): Long =
+    math.min(math.max(Math.addExact(fdivExact(z, 4L), Scale / 2), 0L), Scale)
+
+  /** Weight-state dispatch bound: the weight table is `buckets` rows —
+    * bounded by CONFIG, never by data — so for every realistic
+    * hashed-linear configuration it is driver-bounded state. Within
+    * these bounds the weights are an `Array[Long]` of at most 2^16
+    * entries on the driver (and captured by each step's tasks), the
+    * trajectory accumulates on the driver, and each gradient step is
+    * one Spark job (see [[gradientStep]]); driver and task memory are
+    * bounded by these two caps. Configs past them (weights or
+    * trajectory too big to hold on the driver) keep the
+    * localCheckpoint-chained DataFrame path.
     */
   private val DriverStateMaxBuckets = 1 << 16
   private val DriverStateMaxTrajectory = 1L << 22
 
-  /** One-exchange gradient step for the driver-state path: the margin
-    * aggregation CARRIES each doc's (bucket, count) feature list
-    * through the doc-grain exchange (collect_list rider), so the
-    * gradient explodes it back out of the same aggregate instead of
-    * re-joining the COO relation at doc grain — per step: ONE exchange
-    * of the (already bucket-joined) COO rows plus the map-side-combined
-    * bucket-grain gradient exchange, versus the two-aggregation
-    * spelling's extra COO re-exchange + sort-merge join (guide §2.4).
-    * Values are IDENTICAL: every gradient term r·x is the same 64-bit
-    * integer, integer sums are order-independent, and null residuals
-    * (null labels) drop from `sum` exactly as before; TrainSpec pins
-    * fused == two-aggregation row for row. The fallback DataFrame path
-    * keeps the two-aggregation shape — past the driver-state bound a
-    * doc's feature list is `buckets`-wide and the rider would dominate
-    * the exchange.
+  /** One document of the driver-state feature relation: its batch (-1
+    * when its id joins no batch), how many input rows carry its id, its
+    * label (null when no token-bearing row has one), and its distinct
+    * buckets with their token counts.
     */
-  private def fusedGrad(cooTok: DataFrame, w: DataFrame): DataFrame =
-    cooTok.join(broadcast(w), Seq("__b"))
-      .groupBy(col("__id"))
-      .agg(sum(col("__x") * col("__wt")).as("__z"), max(col("__y")).as("__yy"),
-        collect_list(struct(col("__b"), col("__x"))).as("__f"))
-      .select((hardSigmoid(col("__z")) - col("__yy") * lit(Scale)).as("__r"),
-        explode(col("__f")).as("__e"))
-      .groupBy(col("__e.__b").as("__b"))
-      .agg(sum(col("__r") * col("__e.__x")).as("__g"))
+  private final case class Doc(batch: Int, rows: Long, label: java.lang.Long,
+      buckets: Array[Int], counts: Array[Long])
 
-  private def localWeights(
-      spark: org.apache.spark.sql.SparkSession,
-      rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__b",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("__wt",
-        org.apache.spark.sql.types.LongType, nullable = true)))
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
+  /** The doc-grain feature relation, from `df` in ONE aggregation at
+    * doc grain: the label is the max over the doc's token-bearing rows
+    * (the rows the COO relation keeps), `rows` counts every input row
+    * (the learning-rate denominators), and each doc's token buckets
+    * are counted into parallel (bucket, count) arrays. Not persisted.
+    */
+  private def docRelation(df: DataFrame, textCol: String, idCol: String,
+      labelCol: Column, buckets: Int, batch: Column => Column): RDD[Doc] =
+    df.select(col(idCol).as("__id"), labelCol.cast("long").as("__y0"),
+        transform(tokens(textCol), t => bucketOf(t, buckets)).as("__bs"))
+      .groupBy(col("__id"))
+      .agg(count(lit(1)).as("__n"),
+        max(when(size(col("__bs")) > 0, col("__y0"))).as("__y"),
+        collect_list(col("__bs")).as("__bs"))
+      .select(batch(col("__id")), col("__n"), col("__y"), col("__bs"))
+      .rdd.map { r =>
+        val bs = r.getSeq[scala.collection.Seq[Long]](3).iterator.flatten
+          .map(_.toInt).toArray
+        java.util.Arrays.sort(bs)
+        val ids = Array.newBuilder[Int]
+        val counts = Array.newBuilder[Long]
+        var i = 0
+        while (i < bs.length) {
+          var j = i + 1
+          while (j < bs.length && bs(j) == bs(i)) j += 1
+          ids += bs(i); counts += (j - i).toLong
+          i = j
+        }
+        Doc(if (r.isNullAt(0)) -1 else r.getLong(0).toInt, r.getLong(1),
+          if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2)),
+          ids.result(), counts.result())
+      }
+
+  /** ONE gradient step of the driver-state kernel: one `RDD.aggregate`
+    * over the docs of `batch` — one job, one stage, no exchange. Given
+    * the weights `w` (`wNull(b)` = the weight is null), returns the
+    * `buckets`-long gradient Σ r·x and, per bucket, whether any term
+    * of that sum is non-null. SQL semantics: a weight-term x·w with a
+    * null weight drops from the doc's margin; a doc whose margin has no
+    * non-null term, or whose label is null, has a null residual and
+    * contributes nothing.
+    */
+  private def gradientStep(docs: RDD[Doc], batch: Int, w: Array[Long],
+      wNull: Array[Boolean]): (Array[Long], Array[Boolean]) = {
+    val buckets = w.length
+    docs.aggregate((new Array[Long](buckets), new Array[Boolean](buckets)))(
+      { case (acc @ (g, has), d) =>
+        if (d.batch == batch) {
+          var z = 0L
+          var zSet = false
+          var i = 0
+          while (i < d.buckets.length) {
+            val b = d.buckets(i)
+            if (!wNull(b)) {
+              z = Math.addExact(z, Math.multiplyExact(d.counts(i), w(b)))
+              zSet = true
+            }
+            i += 1
+          }
+          if (zSet) {
+            val s = hardSigmoidExact(z)
+            if (d.label != null) {
+              val r = Math.subtractExact(s, Math.multiplyExact(d.label.longValue, Scale))
+              i = 0
+              while (i < d.buckets.length) {
+                val b = d.buckets(i)
+                g(b) = Math.addExact(g(b), Math.multiplyExact(r, d.counts(i)))
+                has(b) = true
+                i += 1
+              }
+            }
+          }
+        }
+        acc
+      },
+      { case (acc @ (g, has), (g2, has2)) =>
+        var b = 0
+        while (b < buckets) {
+          g(b) = Math.addExact(g(b), g2(b))
+          has(b) |= has2(b)
+          b += 1
+        }
+        acc
+      })
+  }
+
+  /** The driver-state path of both trainers: builds the doc relation,
+    * finds the occupied buckets and the per-batch row counts in one
+    * `aggregate`, then runs `epochs × numBatches` [[gradientStep]]s,
+    * one job each, and updates the weights on the driver. `miniBatch`
+    * picks the update's SQL spelling: the mini-batch LEFT join carries
+    * a bucket with no non-null gradient term unchanged; the full-batch
+    * inner join sets its weight to null. A null weight stays null.
+    * Returns the trajectory as a local relation, `(epoch, [batch,]
+    * bucket, weight)`; the doc relation is unpersisted before return.
+    */
+  private def trainOnDriver(df: DataFrame, textCol: String, idCol: String,
+      labelCol: Column, buckets: Int, epochs: Int, numBatches: Int,
+      lrFactor: Long, batch: Column => Column, miniBatch: Boolean): DataFrame = {
+    val docs = docRelation(df, textCol, idCol, labelCol, buckets, batch)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (occupied, batchRows) = docs.aggregate(
+          (new Array[Boolean](buckets), new Array[Long](numBatches)))(
+        { case (acc @ (occ, n), d) =>
+          d.buckets.foreach(occ(_) = true)
+          if (d.batch >= 0) n(d.batch) += d.rows
+          acc
+        },
+        { case (acc @ (occ, n), (occ2, n2)) =>
+          for (b <- occ.indices) occ(b) |= occ2(b)
+          for (k <- n.indices) n(k) += n2(k)
+          acc
+        })
+      val occ = (0 until buckets).filter(occupied(_))
+      val w = new Array[Long](buckets)
+      val wNull = new Array[Boolean](buckets)
+      val rows = new java.util.ArrayList[Row]()
+      for (e <- 1 to epochs; b <- 0 until numBatches) {
+        val lrd = math.max(1L, lrFactor * batchRows(b))
+        val (g, has) = gradientStep(docs, b, w, wNull)
+        occ.foreach { k =>
+          if (!miniBatch && !has(k)) wNull(k) = true
+          else if (!wNull(k))
+            w(k) = Math.subtractExact(w(k), fdivExact(if (has(k)) g(k) else 0L, lrd))
+          val wt = if (wNull(k)) null else java.lang.Long.valueOf(w(k))
+          rows.add(if (miniBatch) Row(e.toLong, b.toLong, k.toLong, wt)
+            else Row(e.toLong, k.toLong, wt))
+        }
+      }
+      val keys = if (miniBatch) Seq("epoch", "batch", "bucket") else Seq("epoch", "bucket")
+      val schema = StructType(keys.map(StructField(_, LongType, nullable = false)) :+
+        StructField("weight", LongType, nullable = true))
+      df.sparkSession.createDataFrame(rows, schema).orderBy(keys.map(col): _*)
+    } finally docs.unpersist(blocking = false)
   }
 
   /** Train `epochs` full-batch rounds; returns the weight trajectory
@@ -149,6 +279,9 @@ object LinearTrainer {
       driverState: Boolean): DataFrame = {
     require(epochs >= 1 && buckets >= 1 && lrFactor >= 1,
       s"bad config: epochs=$epochs buckets=$buckets lrFactor=$lrFactor")
+    if (driverState)
+      return trainOnDriver(df, textCol, idCol, labelCol, buckets, epochs,
+        numBatches = 1, lrFactor, batch = _ => lit(0L), miniBatch = false)
     // (doc, bucket, count, label): the feature matrix in COO form with
     // the LABEL fused on as a rider column (constant per doc), one
     // corpus scan, reused by every epoch. Fusing the label means each
@@ -165,9 +298,7 @@ object LinearTrainer {
     // it).
     val tok = graft.core.Caches.persistTracked(
       df.select(col(idCol).as("__id"), labelCol.cast("long").as("__y0"),
-          explode(filter(
-            split(lower(trim(coalesce(col(textCol), lit("")))), "\\s+"),
-            t => t =!= lit(""))).as("__tok"))
+          explode(tokens(textCol)).as("__tok"))
         .select(col("__id"), col("__y0"), bucketOf(col("__tok"), buckets).as("__b"))
         .groupBy(col("__id"), col("__b"))
         .agg(count(lit(1)).as("__x"), max(col("__y0")).as("__y"))
@@ -177,41 +308,6 @@ object LinearTrainer {
     // job up front is the documented price of a deterministic
     // denominator; max(1,_) keeps the empty corpus well-defined.
     val lrd = lit(math.max(1L, lrFactor * df.count()))
-
-    if (driverState) {
-      // Same per-epoch PLAN as the checkpointed path — margin agg,
-      // gradient join, weight-update join, all Spark expressions — but
-      // the `buckets`-row weight state rides the driver between steps
-      // as a LocalRelation: one collect job per epoch, no broadcast
-      // build job, no checkpoint. Values are computed by the identical
-      // expression tree, so the trajectory is bit-equal (TrainSpec pins
-      // driver-state == checkpoint-chained row for row).
-      val spark = df.sparkSession
-      var wRows: Seq[org.apache.spark.sql.Row] =
-        tok.select(col("__b")).distinct()
-          .select(col("__b"), lit(0L).as("__wt"))
-          .collect().toSeq
-      val snaps = Seq.newBuilder[org.apache.spark.sql.Row]
-      for (e <- 1 to epochs) {
-        val w = localWeights(spark, wRows)
-        wRows = w.join(fusedGrad(tok, w), Seq("__b"))
-          .select(col("__b"), (col("__wt") - fdiv(col("__g"), lrd)).as("__wt"))
-          .collect().toSeq
-        wRows.foreach(r => snaps += org.apache.spark.sql.Row(
-          e.toLong, r.getLong(0), if (r.isNullAt(1)) null else r.getLong(1)))
-      }
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("epoch",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("bucket",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("weight",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(snaps.result()).asJava),
-        outSchema).orderBy(col("epoch"), col("bucket"))
-    }
 
     var w = tok.select(col("__b")).distinct()
       .select(col("__b"), lit(0L).as("__wt"))
@@ -249,14 +345,11 @@ object LinearTrainer {
     * weight-table snapshot per gradient step, all BIGINT, so a DuckDB
     * oracle replays the full epochs × batches schedule bit for bit.
     *
-    * Scale shape: same as [[train]] — the COO feature relation is
-    * built once and persisted with the batch id as a rider column;
-    * each step filters it to one hash bucket (a scan-side predicate,
-    * no extra shuffle), joins the broadcast `buckets`-row weight
-    * table, and aggregates at doc then bucket grain. Per-batch doc
-    * counts are ONE bounded collect (`numBatches` rows, the argmax
-    * discipline). The weight update is a LEFT join: buckets absent
-    * from a batch keep their weights.
+    * Scale shape: same as [[train]] — the feature relation carries
+    * each doc's batch id, and each step reads only its batch's docs:
+    * one Spark job per step within the driver-state bound. The weight
+    * update is a LEFT join: a bucket with no gradient in a batch keeps
+    * its weight.
     */
   def trainMiniBatch(
       df: DataFrame,
@@ -287,71 +380,29 @@ object LinearTrainer {
     require(epochs >= 1 && buckets >= 1 && numBatches >= 1 && lrFactor >= 1,
       s"bad config: epochs=$epochs buckets=$buckets " +
         s"numBatches=$numBatches lrFactor=$lrFactor")
-    // Batch id: h60 of the salted id string, mod numBatches — the same
-    // portable hash spelling as the feature buckets.
-    def batchOf(id: Column): Column =
-      conv(substring(md5(concat(lit(salt), lit(":"), id.cast("string"))),
-        1, 15), 16, 10).cast("long") % numBatches
+    if (driverState)
+      return trainOnDriver(df, textCol, idCol, labelCol, buckets, epochs,
+        numBatches, lrFactor, batch = batchOf(_, salt, numBatches),
+        miniBatch = true)
     // Label fused onto the COO relation as in [[train]] — each step's
     // residual computes inside its margin aggregation, no per-step
-    // z ⋈ label join. The doc-grain label relation below survives only
-    // for the per-batch doc counts (they count ALL docs, token-less
-    // included — the lrd denominator).
+    // z ⋈ label join. The per-batch doc counts below count ALL docs,
+    // token-less included — the lrd denominator.
     val tok = graft.core.Caches.persistTracked(
       df.select(col(idCol).as("__id"), labelCol.cast("long").as("__y0"),
-          explode(filter(
-            split(lower(trim(coalesce(col(textCol), lit("")))), "\\s+"),
-            t => t =!= lit(""))).as("__tok"))
+          explode(tokens(textCol)).as("__tok"))
         .select(col("__id"), col("__y0"), bucketOf(col("__tok"), buckets).as("__b"))
         .groupBy(col("__id"), col("__b"))
         .agg(count(lit(1)).as("__x"), max(col("__y0")).as("__y"))
-        .withColumn("__mb", batchOf(col("__id")))
+        .withColumn("__mb", batchOf(col("__id"), salt, numBatches))
         // Doc-grain partitioning established ONCE at build — each of
         // the epochs x numBatches step aggregations reuses it instead
         // of re-exchanging its batch slice (guide §2.4).
         .repartition(col("__id")))
     // numBatches rows — bounded by construction.
-    val batchN = df.select(batchOf(col(idCol)).as("__mb"))
+    val batchN = df.select(batchOf(col(idCol), salt, numBatches).as("__mb"))
       .groupBy(col("__mb")).agg(count(lit(1)).as("__n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    if (driverState) {
-      // Driver-bounded weight state (see [[DriverStateMaxBuckets]]):
-      // identical per-step expression tree, one collect job per
-      // gradient step, snapshots accumulate on the driver (steps x
-      // occupied-buckets rows, guarded by the dispatch bound).
-      val spark = df.sparkSession
-      var wRows: Seq[org.apache.spark.sql.Row] =
-        tok.select(col("__b")).distinct()
-          .select(col("__b"), lit(0L).as("__wt"))
-          .collect().toSeq
-      val snaps = Seq.newBuilder[org.apache.spark.sql.Row]
-      for (e <- 1 to epochs; b <- 0 until numBatches) {
-        val lrd = lit(math.max(1L, lrFactor * batchN.getOrElse(b.toLong, 0L)))
-        val btok = tok.where(col("__mb") === b)
-        val w = localWeights(spark, wRows)
-        wRows = w.join(fusedGrad(btok, w), Seq("__b"), "left")
-          .select(col("__b"), (col("__wt") -
-            fdiv(coalesce(col("__g"), lit(0L)), lrd)).as("__wt"))
-          .collect().toSeq
-        wRows.foreach(r => snaps += org.apache.spark.sql.Row(
-          e.toLong, b.toLong, r.getLong(0),
-          if (r.isNullAt(1)) null else r.getLong(1)))
-      }
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("epoch",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("batch",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("bucket",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("weight",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(snaps.result()).asJava),
-        outSchema).orderBy(col("epoch"), col("batch"), col("bucket"))
-    }
 
     var w = tok.select(col("__b")).distinct()
       .select(col("__b"), lit(0L).as("__wt"))
@@ -391,10 +442,7 @@ object LinearTrainer {
       idCol: String,
       weights: DataFrame,
       buckets: Int = 64): DataFrame = {
-    val tok = df.select(col(idCol).as("__id"),
-        explode(filter(
-          split(lower(trim(coalesce(col(textCol), lit("")))), "\\s+"),
-          t => t =!= lit(""))).as("__tok"))
+    val tok = df.select(col(idCol).as("__id"), explode(tokens(textCol)).as("__tok"))
       .select(col("__id"), bucketOf(col("__tok"), buckets).as("bucket"))
     val z = tok.join(broadcast(weights), Seq("bucket"), "left")
       .groupBy(col("__id"))

@@ -152,7 +152,7 @@ class SqlSurfaceSpec extends SparkSpec {
           nprobe = 16, k = 4, shortlist = 4, m = 2, ksub = 16, dim = 2,
           nClusters = 2, refineRounds = 1, epsNum = 1L, epsDen = 4L,
           tablePrefix = pfx,
-          basePath = s"${System.getProperty("java.io.tmpdir")}/$pfx"))
+          basePath = tempDir("graft-d4spec") + "/store"))
     }
     val wpm = graft.ops.WordPiece.train(docs, "text", 6)
     pin("SELECT * FROM wordpiece_train('tvf_docs', 'text', 6)",

@@ -573,10 +573,10 @@ class TrainSpec extends SparkSpec {
   }
 
   test("driver-state weight path == checkpoint-chained path, row for row") {
-    // Round 14: within the config bound the per-step weight table rides
-    // the driver as a LocalRelation (one collect job per step) instead
-    // of an eager localCheckpoint chain. The expression tree is shared,
-    // so the trajectories must be BIT-identical — full-batch and
+    // Within the config bound the weights live on the driver and each
+    // step is one RDD.aggregate instead of an eager localCheckpoint
+    // chain of SQL plans. The kernel copies the SQL arithmetic and null
+    // rules, so the trajectories must be BIT-identical — full-batch and
     // mini-batch, including a batch that owns zero documents (left-join
     // carry path).
     val pos = (0 until 15).map(i => (i.toLong, "good clean prose text", 1L))
@@ -599,6 +599,116 @@ class TrainSpec extends SparkSpec {
       miniB.schema.map(f => (f.name, f.dataType)))
     assert(miniA.collect().toSeq == miniB.collect().toSeq)
     graft.core.Caches.releaseAll()
+  }
+
+  test("driver-state kernel == checkpoint-chained path on edge cases, at 1, 3 and 8 partitions") {
+    val buckets = 64
+    def bucketOf(w: org.apache.spark.sql.Column) =
+      conv(substring(md5(w), 1, 15), 16, 10).cast("long") % buckets
+    val labeledWords = Seq("good", "clean", "prose", "text", "spam", "junk",
+      "noise", "words", "more")
+    val labeledBuckets = labeledWords.toDF("w").select(bucketOf(col("w")))
+      .as[Long].collect().toSet
+    // A word whose bucket only null-label docs touch: its full-batch
+    // weight goes null, its mini-batch weight is carried.
+    val orphan = (0 until 200).map(i => s"orphan$i")
+      .find(w => !labeledBuckets(Seq(w).toDF("w").select(bucketOf(col("w")))
+        .as[Long].head())).get
+    val rows = Seq[(Long, String, java.lang.Long)](
+      (1L, "good clean prose text", 1L),
+      (2L, "spam junk noise words", 0L),
+      (3L, null, 1L),
+      (4L, "", 0L),
+      (5L, "   ", 1L),
+      (6L, "Good SPAM  prose", null),
+      (7L, s"$orphan $orphan", null),
+      (8L, "clean clean text", 1L),
+      (9L, "junk words", 0L),
+      // Duplicate ids: doc 1 merges both rows' tokens, max label over its
+      // token-bearing rows; doc 2's token-less row counts toward the
+      // learning rate but does not raise its label.
+      (1L, "more good prose", 0L),
+      (2L, "", 1L))
+    val df = rows.toDF("doc_id", "text", "y")
+    val numBatches = 8
+    val owned = df.select((conv(substring(md5(concat(lit("mb1"), lit(":"),
+        col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long") % numBatches)
+        .as("b")).distinct().count()
+    assert(owned < numBatches, "the fixture needs a batch that owns zero docs")
+    val orphanBucket = Seq(orphan).toDF("w").select(bucketOf(col("w"))).as[Long].head()
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
+      assert(a.schema.map(f => (f.name, f.dataType)) == b.schema.map(f => (f.name, f.dataType)))
+      assert(a.collect().toSeq == b.collect().toSeq)
+    }
+    try {
+      for (parts <- Seq(1, 3, 8)) {
+        val in = df.repartition(parts)
+        val full = LinearTrainer.trainImpl(in, "text", "doc_id", col("y"),
+          buckets, epochs = 3, lrFactor = 16L, driverState = true)
+        same(full, LinearTrainer.trainImpl(in, "text", "doc_id", col("y"),
+          buckets, epochs = 3, lrFactor = 16L, driverState = false))
+        assert(full.where(col("bucket") === orphanBucket).select("weight")
+          .collect().forall(_.isNullAt(0)), "full-batch null weight")
+        val mini = LinearTrainer.trainMiniBatchImpl(in, "text", "doc_id",
+          col("y"), buckets, epochs = 2, numBatches, lrFactor = 16L,
+          salt = "mb1", driverState = true)
+        same(mini, LinearTrainer.trainMiniBatchImpl(in, "text", "doc_id",
+          col("y"), buckets, epochs = 2, numBatches, lrFactor = 16L,
+          salt = "mb1", driverState = false))
+        assert(mini.where(col("bucket") === orphanBucket).select("weight")
+          .as[Long].collect().toSet == Set(0L), "mini-batch carry")
+      }
+    } finally graft.core.Caches.releaseAll()
+  }
+
+  test("driver-state trainers run one Spark job per gradient step") {
+    val df = (0 until 40).map(i =>
+      (i.toLong, if (i % 2 == 0) "alpha beta gamma" else "delta epsilon",
+        (i % 2).toLong)).toDF("doc_id", "text", "y")
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val ended = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        started.incrementAndGet(); ()
+      }
+      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        ended.incrementAndGet(); ()
+      }
+    }
+    // The listener bus is async: wait until every started job has ended
+    // and the count has held still for a few polls.
+    def settled(): Int = {
+      var last = -1
+      var still = 0
+      val deadline = System.nanoTime() + 20000000000L
+      while (still < 3 && System.nanoTime() < deadline) {
+        Thread.sleep(100)
+        val now = started.get()
+        if (now == last && now == ended.get()) still += 1 else still = 0
+        last = now
+      }
+      last
+    }
+    def jobsOf(train: => org.apache.spark.sql.DataFrame): Int = {
+      val before = settled()
+      train
+      settled() - before
+    }
+    val numBatches = 4
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val mini = Seq(1, 2).map(e => jobsOf(LinearTrainer.trainMiniBatch(df,
+        "text", "doc_id", col("y"), buckets = 16, epochs = e, numBatches = numBatches)))
+      assert(mini(1) - mini(0) == numBatches,
+        s"mini-batch jobs at epochs 1, 2: $mini; one epoch must add $numBatches")
+      val full = Seq(1, 2).map(e => jobsOf(LinearTrainer.train(df,
+        "text", "doc_id", col("y"), buckets = 16, epochs = e)))
+      assert(full(1) - full(0) == 1,
+        s"full-batch jobs at epochs 1, 2: $full; one epoch must add 1")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      graft.core.Caches.releaseAll()
+    }
   }
 
   test("linear trainer epoch-1 update matches the closed form") {
