@@ -429,11 +429,8 @@ object GraftFunctions {
       val merges = graft.ops.WordPiece.train(docs, textCol,
         longLit(args(3), "numMerges").toInt)
       val vocab = graft.ops.WordPiece.vocabTable(docs, textCol, merges)
-      val vs = vocab.select("token").collect().map(_.getString(0))
-        .toSeq.sorted
       plan(graft.ops.WordPiece.tokenizeToIds(docs, textCol,
-        strLit(args(2), "idCol"), vocab, vs,
-        longLit(args(4), "maxChars").toInt))
+        strLit(args(2), "idCol"), vocab, longLit(args(4), "maxChars").toInt))
     },
     // Unigram-LM (SentencePiece) training (q190's relation; trainer
     // at resolution time, the wordpiece_train convention):

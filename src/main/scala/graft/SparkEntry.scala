@@ -3414,9 +3414,9 @@ object SparkEntry {
     }),
     "q183_wordpiece_ids" -> ((s, d) => {
       // §2.11 tokenization: WordPiece GREEDY LONGEST-MATCH encode to
-      // integer ids — q178's dictionary-join shape with the matcher
-      // swapped for the BERT inference algorithm
-      // (functions/WordPieceTokenize.scala), which is NOT the training
+      // integer ids, map-only: each row's words run through the BERT
+      // inference algorithm (functions/WordPieceTokenize.scala) and
+      // resolve to ids in one projection. Longest match is NOT the training
       // composition: the vocabulary is a string SET and longest match
       // can disagree with the merge decomposition on the same vocab,
       // so the oracle replays longest-match itself (an unrolled step
@@ -3428,27 +3428,10 @@ object SparkEntry {
       // ['[UNK]'] (id 0) — so n_unk > 0 rows exist at every scale,
       // unlike the byte-level family's unk-free-by-construction q178.
       import s.implicits._
-      val docs = documents(s, d).select(col("doc_id"), col("text"))
-      val merges = sharedWpMerges(s, d)
-      val vocab = graft.ops.WordPiece.vocabTable(docs, "text", merges)
-      // Vocabulary-sized collect (the vocabTable base-alphabet
-      // discipline); sorted so the expression's per-JVM cache key is
-      // run-stable.
-      val vocabStrings = vocab.select(col("token")).collect()
-        .map(_.getString(0)).toSeq.sorted
-      val planted = Seq(
-        ((1L << 41) + 1L, "zz unmatchableverylongword zz"),
-        ((1L << 41) + 2L, "ordinary ωμέγα words"))
-        .toDF("doc_id", "text")
-      graft.ops.WordPiece.tokenizeToIds(docs.unionByName(planted), "text",
-          "doc_id", vocab, vocabStrings, maxChars = wpMaxChars)
-        .select(col("doc_id"),
-          array_join(transform(col("token_ids"), i => i.cast("string")),
-            " ").as("ids_str"),
-          size(col("token_ids")).cast("long").as("n_tokens"),
-          size(filter(col("token_ids"), i => i === 0L)).cast("long")
-            .as("n_unk"))
-        .orderBy(col("doc_id"))
+      val vocab = sharedWpVocab(s, d).toDF("token", "token_id")
+      plantedIds(s, documents(s, d).select(col("doc_id"), col("text")))(
+        graft.ops.WordPiece.tokenizeToIds(_, "text", "doc_id", vocab,
+          maxChars = wpMaxChars))
     }),
     "q184_unimax_mixture" -> ((s, d) =>
       // §2.11 mixtures: UniMax per-language budget allocation (Chung
@@ -3597,7 +3580,7 @@ object SparkEntry {
     }),
     "q191_unigram_ids" -> ((s, d) => {
       // §2.11 tokenization: unigram VITERBI encode to integer ids —
-      // q183's dictionary-join shape with the matcher swapped for the
+      // q183's map-only shape with the matcher swapped for the
       // min-cost DP (which can disagree with greedy longest-match:
       // UnigramSpec pins the structural cases). PLANTS (the q183
       // discipline): an over-length word and unseen code points, both
@@ -3609,23 +3592,11 @@ object SparkEntry {
       // the top-N race as organic counts grow — the q167 has_triplets
       // non-vacuity lesson, so the tie SEMANTICS pin lives in
       // UnigramSpec's hand corpora).
-      import s.implicits._
-      val docs = documents(s, d).select(col("doc_id"), col("text"))
       val pieces = sharedUnigramPieces(s, d)
       val vocab = graft.ops.Unigram.vocabTable(s, pieces)
-      val planted = Seq(
-        ((1L << 41) + 1L, "zz unmatchableverylongword zz"),
-        ((1L << 41) + 2L, "ordinary ωμέγα words"))
-        .toDF("doc_id", "text")
-      graft.ops.Unigram.tokenizeToIds(docs.unionByName(planted), "text",
-          "doc_id", pieces, vocab, ugMaxChars, ugMaxPieceLen)
-        .select(col("doc_id"),
-          array_join(transform(col("token_ids"), i => i.cast("string")),
-            " ").as("ids_str"),
-          size(col("token_ids")).cast("long").as("n_tokens"),
-          size(filter(col("token_ids"), i => i === 0L)).cast("long")
-            .as("n_unk"))
-        .orderBy(col("doc_id"))
+      plantedIds(s, documents(s, d).select(col("doc_id"), col("text")))(
+        graft.ops.Unigram.tokenizeToIds(_, "text", "doc_id", pieces, vocab,
+          ugMaxChars, ugMaxPieceLen))
     }),
     "q192_unigram_fertility" -> ((s, d) => {
       // §2.11 tokenization: q185's fertility/compression eval
@@ -3641,6 +3612,28 @@ object SparkEntry {
         .orderBy(col("grp"))
     }),
   )
+
+  /** q183/q191's ids row: `encode` over `docs` plus the two constant
+    * [UNK] plants both oracles replay verbatim (an over-length word,
+    * code points no training corpus holds), summarized per doc as
+    * (doc_id, ids_str, n_tokens, n_unk) in doc_id order.
+    */
+  private def plantedIds(s: SparkSession, docs: DataFrame)(
+      encode: DataFrame => DataFrame): DataFrame = {
+    import s.implicits._
+    val planted = Seq(
+      ((1L << 41) + 1L, "zz unmatchableverylongword zz"),
+      ((1L << 41) + 2L, "ordinary ωμέγα words"))
+      .toDF("doc_id", "text")
+    encode(docs.unionByName(planted))
+      .select(col("doc_id"),
+        array_join(transform(col("token_ids"), i => i.cast("string")),
+          " ").as("ids_str"),
+        size(col("token_ids")).cast("long").as("n_tokens"),
+        size(filter(col("token_ids"), i => i === 0L)).cast("long")
+          .as("n_unk"))
+      .orderBy(col("doc_id"))
+  }
 
   /** The q180/q189 decontamination plants (constant rows, replayed
     * verbatim by both oracles): train docs 1-3 share ONLY the rare
@@ -3794,9 +3787,11 @@ object SparkEntry {
   /** SESSION-MEMOIZED trained tokenizers (driver-side merge/piece
     * tables — pure values bounded by the round/seed caps, NOT Spark
     * resources): the char-level BPE trains in SIX queries per suite run
-    * (q153/q154/q165/q166/q168/q169), WordPiece in two (q182/q183),
-    * unigram-LM in three (q190/q191/q192) — each train re-scanning the
-    * corpus for the same word histogram. Training is deterministic per
+    * (q153/q154/q165/q166/q168/q169), WordPiece in two (q182/q183;
+    * q183 also keeps its vocabulary rows, whose base alphabet is one
+    * more corpus aggregate), unigram-LM in three (q190/q191/q192) —
+    * each train re-scanning the corpus for the same word histogram.
+    * Training is deterministic per
     * (dataset, params), so one train per key serves every consumer;
     * each consumer's oracle still replays training from scratch in
     * DuckDB, value-pinning the memoized tables every round. Keys carry
@@ -3818,6 +3813,15 @@ object SparkEntry {
     memoTrained(s"wp:$d:$wpRounds") {
       graft.ops.WordPiece.train(documents(s, d), "text", wpRounds)
     }
+  /** q183's vocabulary rows, kept beside the merges they extend. */
+  private def sharedWpVocab(s: SparkSession, d: String): Seq[(String, Long)] = {
+    val merges = sharedWpMerges(s, d)
+    memoTrained(s"wpv:$d:$wpRounds") {
+      import s.implicits._
+      graft.ops.WordPiece.vocabTable(documents(s, d), "text", merges)
+        .as[(String, Long)].collect().toSeq
+    }
+  }
   private def sharedUnigramPieces(
       s: SparkSession, d: String): Seq[graft.ops.Unigram.Piece] =
     memoTrained(s"ug:$d:$ugSeedSize:$ugMaxPieceLen:$ugEmRounds:" +

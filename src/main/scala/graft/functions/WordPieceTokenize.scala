@@ -20,10 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * instead of joining the training word table the way q154/q178 can.
   *
   * Input grain is a WORD, not a text: the corpus convention (suite
-  * lowercase whitespace split) stays in the Column layer and the
-  * dictionary path maps only DISTINCT words through this expression,
-  * so per-word memoization happens at the relation level and the
-  * per-JVM cache here only accelerates repeated dictionary builds.
+  * lowercase whitespace split) stays in the Column layer, which maps
+  * every word OCCURRENCE through this expression; the per-JVM word
+  * cache (one per vocabulary, shared by every task) is the per-word
+  * memoization, so no relation-level dictionary is needed.
   *
   * Semantics contract (mirrored verbatim by the DuckDB oracle's
   * unrolled step CTEs):

@@ -208,7 +208,8 @@ object LinearTrainer {
     * a bucket with no non-null gradient term unchanged; the full-batch
     * inner join sets its weight to null. A null weight stays null.
     * Returns the trajectory as a local relation, `(epoch, [batch,]
-    * bucket, weight)`; the doc relation is unpersisted before return.
+    * bucket, weight)` in key order, the order the loop adds them; the
+    * doc relation is unpersisted before return.
     */
   private def trainOnDriver(df: DataFrame, textCol: String, idCol: String,
       labelCol: Column, buckets: Int, epochs: Int, numBatches: Int,
@@ -247,7 +248,7 @@ object LinearTrainer {
       val keys = if (miniBatch) Seq("epoch", "batch", "bucket") else Seq("epoch", "bucket")
       val schema = StructType(keys.map(StructField(_, LongType, nullable = false)) :+
         StructField("weight", LongType, nullable = true))
-      df.sparkSession.createDataFrame(rows, schema).orderBy(keys.map(col): _*)
+      df.sparkSession.createDataFrame(rows, schema)
     } finally docs.unpersist(blocking = false)
   }
 
@@ -319,7 +320,9 @@ object LinearTrainer {
         .agg(sum(col("__x") * col("__wt")).as("__z"), max(col("__y")).as("__yy"))
         .select(col("__id"),
           (hardSigmoid(col("__z")) - col("__yy") * lit(Scale)).as("__r"))
-      val grad = tok.join(resid, Seq("__id"))
+      // Null-safe: a null id is one doc, as in the margin groupBy.
+      val grad = tok.join(resid.withColumnRenamed("__id", "__rid"),
+          col("__id") <=> col("__rid"))
         .groupBy(col("__b"))
         .agg(sum(col("__r") * col("__x")).as("__g"))
       w = w.join(grad, Seq("__b"))
@@ -399,8 +402,10 @@ object LinearTrainer {
         // the epochs x numBatches step aggregations reuses it instead
         // of re-exchanging its batch slice (guide §2.4).
         .repartition(col("__id")))
-    // numBatches rows — bounded by construction.
+    // numBatches rows — bounded by construction. A null id joins no
+    // batch, so its rows count toward none.
     val batchN = df.select(batchOf(col(idCol), salt, numBatches).as("__mb"))
+      .where(col("__mb").isNotNull)
       .groupBy(col("__mb")).agg(count(lit(1)).as("__n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 

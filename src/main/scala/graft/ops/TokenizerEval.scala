@@ -18,13 +18,12 @@ import org.apache.spark.sql.functions._
   * divisions of exact long sums (bytes * 1000 DIV tokens,
   * tokens * 1000 DIV pretokens) — engine-portable, no doubles.
   *
-  * Scale shape: pretokens explode map-side; the per-distinct-pretoken
-  * subword counts come from ONE dictionary (vocabulary-sized,
-  * persisted, folded through the native byte-level expression exactly
-  * once per distinct pretoken — [[Bpe.tokenizeToIdsByteLevel]]'s
-  * dictionary discipline); the join is AQE-broadcast and the final
-  * aggregation is group-grain, map-side combinable. No corpus-sized
-  * shuffle anywhere.
+  * Scale shape: pretokens explode map-side; the byte-level subword
+  * counts come from ONE persisted dictionary folded once per distinct
+  * pretoken ([[Bpe.tokenizeToIdsByteLevel]]'s discipline, joined back
+  * by AQE broadcast), the unigram ones from the Viterbi kernel per
+  * occurrence (it memoizes words per JVM); the final aggregation is
+  * group-grain, map-side combinable. No corpus-sized shuffle anywhere.
   */
 object TokenizerEval {
 
@@ -32,9 +31,7 @@ object TokenizerEval {
     * n_tokens, bytes_per_token_milli, fertility_milli). Empty texts
     * contribute no pretokens; a group whose texts yield NO pretokens
     * emits NO row at all (the relation is built by exploding
-    * pretokens), so the zero-denominator CASE branches below are
-    * unreachable — they are kept only for spelling parity with the
-    * DuckDB oracle, which agrees on the absent-row semantics.
+    * pretokens), which the DuckDB oracle agrees on.
     */
   def fertilityByGroup(
       df: DataFrame,
@@ -49,17 +46,40 @@ object TokenizerEval {
           size(Bpe.tokenizeByteLevel(col("__w"), merges)).cast("long")
             .as("__nsub"),
           octet_length(col("__w")).cast("long").as("__nb")))
-    words.join(dict, Seq("__w"))
+    withRatios(words.join(dict, Seq("__w"))
       .groupBy(col("grp"))
       .agg(count(lit(1)).as("n_pretokens"),
         sum(col("__nb")).as("n_bytes"),
-        sum(col("__nsub")).as("n_tokens"))
-      .withColumn("bytes_per_token_milli", expr(
-        "CASE WHEN n_tokens > 0 THEN (n_bytes * 1000) DIV n_tokens " +
-          "ELSE CAST(0 AS BIGINT) END"))
-      .withColumn("fertility_milli", expr(
-        "CASE WHEN n_pretokens > 0 THEN (n_tokens * 1000) DIV n_pretokens " +
-          "ELSE CAST(0 AS BIGINT) END"))
+        sum(col("__nsub")).as("n_tokens")))
+  }
+
+  /** [[fertilityByGroup]] under the UNIGRAM convention — the eval
+    * parameterized over the second trained-vocabulary family (Rust
+    * 2021 compares tokenizers exactly this way): the pretoken grain
+    * is the suite WORD (unigram trains on the word histogram, not
+    * byte-level pretokens) and a word's token count is its Viterbi
+    * piece count, with [UNK]-wholesale words counting 1 — so a
+    * vocabulary that fails to cover a slice shows up as that slice's
+    * fertility DROPPING toward 1 while its [UNK] share explodes
+    * (q191 carries the n_unk column; the two read together). Same
+    * milli grids and absent-row semantics as the byte-level spelling;
+    * no dictionary, so the group aggregate is the plan's one exchange.
+    */
+  def fertilityByGroupUnigram(
+      df: DataFrame,
+      textCol: String,
+      grpCol: String,
+      pieces: Seq[Unigram.Piece],
+      maxChars: Int = 16,
+      maxPieceLen: Int = 4): DataFrame = {
+    val costs = pieces.map(p => (p.token, p.costMicro))
+    withRatios(df.select(col(grpCol).as("grp"),
+        explode(WordPiece.words(col(textCol))).as("__w"))
+      .groupBy(col("grp"))
+      .agg(count(lit(1)).as("n_pretokens"),
+        sum(octet_length(col("__w")).cast("long")).as("n_bytes"),
+        sum(size(Unigram.viterbiPieces(col("__w"), costs, maxChars,
+          maxPieceLen)).cast("long")).as("n_tokens")))
   }
 
   /** [[fertilityByGroup]] over a PRE-TOKENIZED corpus — the
@@ -75,56 +95,13 @@ object TokenizerEval {
     * ([[fertilityByGroup]]'s absent-row semantics); such documents
     * carry zero tokens/bytes, so the drop never changes a sum.
     */
-  /** [[fertilityByGroup]] under the UNIGRAM convention — the eval
-    * parameterized over the second trained-vocabulary family (Rust
-    * 2021 compares tokenizers exactly this way): the pretoken grain
-    * is the suite WORD (unigram trains on the word histogram, not
-    * byte-level pretokens) and a word's token count is its Viterbi
-    * piece count, with [UNK]-wholesale words counting 1 — so a
-    * vocabulary that fails to cover a slice shows up as that slice's
-    * fertility DROPPING toward 1 while its [UNK] share explodes
-    * (q191 carries the n_unk column; the two read together). Same
-    * dictionary discipline, same milli grids, same absent-row
-    * semantics as the byte-level spelling.
-    */
-  def fertilityByGroupUnigram(
-      df: DataFrame,
-      textCol: String,
-      grpCol: String,
-      pieces: Seq[Unigram.Piece],
-      maxChars: Int = 16,
-      maxPieceLen: Int = 4): DataFrame = {
-    val costs = pieces.map(p => (p.token, p.costMicro))
-    val words = df.select(col(grpCol).as("grp"),
-      explode(filter(
-        split(lower(trim(coalesce(col(textCol), lit("")))), "\\s+"),
-        t => t =!= lit(""))).as("__w"))
-    val dict = graft.core.Caches.persistTracked(
-      words.select(col("__w")).distinct()
-        .select(col("__w"),
-          size(Unigram.viterbiPieces(col("__w"), costs, maxChars,
-            maxPieceLen)).cast("long").as("__nsub"),
-          octet_length(col("__w")).cast("long").as("__nb")))
-    words.join(dict, Seq("__w"))
-      .groupBy(col("grp"))
-      .agg(count(lit(1)).as("n_pretokens"),
-        sum(col("__nb")).as("n_bytes"),
-        sum(col("__nsub")).as("n_tokens"))
-      .withColumn("bytes_per_token_milli", expr(
-        "CASE WHEN n_tokens > 0 THEN (n_bytes * 1000) DIV n_tokens " +
-          "ELSE CAST(0 AS BIGINT) END"))
-      .withColumn("fertility_milli", expr(
-        "CASE WHEN n_pretokens > 0 THEN (n_tokens * 1000) DIV n_pretokens " +
-          "ELSE CAST(0 AS BIGINT) END"))
-  }
-
   def fertilityByGroupFromIds(
       df: DataFrame,
       textCol: String,
       grpCol: String,
       idCol: String,
       ids: DataFrame): DataFrame =
-    df.select(col(grpCol).as("grp"), col(idCol),
+    withRatios(df.select(col(grpCol).as("grp"), col(idCol),
         Bpe.pretokenizeByteLevel(col(textCol)).as("__ws"))
       .withColumn("__np", size(col("__ws")).cast("long"))
       .where(col("__np") > 0)
@@ -135,7 +112,15 @@ object TokenizerEval {
       .groupBy(col("grp"))
       .agg(sum(col("__np")).as("n_pretokens"),
         sum(col("__nb")).as("n_bytes"),
-        sum(col("__nt")).as("n_tokens"))
+        sum(col("__nt")).as("n_tokens")))
+
+  /** The two milli-grid ratio columns over (grp, n_pretokens, n_bytes,
+    * n_tokens). The zero-denominator branches are unreachable (a group
+    * with no pretokens has no row) and kept for spelling parity with
+    * the DuckDB oracle.
+    */
+  private def withRatios(stats: DataFrame): DataFrame =
+    stats
       .withColumn("bytes_per_token_milli", expr(
         "CASE WHEN n_tokens > 0 THEN (n_bytes * 1000) DIV n_tokens " +
           "ELSE CAST(0 AS BIGINT) END"))

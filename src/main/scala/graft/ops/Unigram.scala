@@ -255,32 +255,18 @@ object Unigram {
       .toDF("token", "token_id")
   }
 
-  /** Viterbi tokenize to INTEGER IDS — (idCol, token_ids array<long>),
-    * the [[WordPiece.tokenizeToIds]] dictionary shape: distinct words
-    * segment through the native expression once, ids resolve through
-    * the broadcast vocab ([UNK] = 0 by construction), occurrences
-    * reassemble in document order.
+  /** Viterbi tokenize to INTEGER IDS — (idCol, token_ids
+    * array<bigint>), [[WordPiece.tokenizeToIds]]'s map-only shape with
+    * the Viterbi kernel per word ([UNK] = 0 by construction; a piece
+    * `vocab` lacks reads -1).
     */
   def tokenizeToIds(
       df: DataFrame, textCol: String, idCol: String,
       pieces: Seq[Piece], vocab: DataFrame,
       maxChars: Int = 16, maxPieceLen: Int = 4): DataFrame = {
     val costs = pieces.map(p => (p.token, p.costMicro))
-    val words = df.select(col(idCol).as("__id"),
-        posexplode(filter(
-          split(lower(trim(coalesce(col(textCol), lit("")))), "\\s+"),
-          t => t =!= lit(""))))
-      .select(col("__id"), col("pos").as("__p"), col("col").as("__w"))
-    val dict = graft.core.Caches.persistTracked(
-      words.select(col("__w")).distinct()
-        .select(col("__w"),
-          viterbiPieces(col("__w"), costs, maxChars, maxPieceLen)
-            .as("__t")))
-    // Eager: true dict stats before the occurrence join plans (see
-    // Bpe.wordsAndDict — unknown cached-relation size put the broadcast
-    // on the occurrence side).
-    dict.count()
-    Bpe.idsReassemble(df, idCol, words, dict, vocab)
+    WordPiece.idsByWord(df, textCol, idCol, WordPiece.vocabEntries(vocab),
+      viterbiPieces(_, costs, maxChars, maxPieceLen))
   }
 
   /** Viterbi pieces of ONE word column (array<string>; ['[UNK]'] on

@@ -4,6 +4,8 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Distributed WORDPIECE tokenizer training (§2.11 extensions,
   * tokenization family) — the BERT-family convention (Schuster &
@@ -238,8 +240,9 @@ object WordPiece {
     * the whole union (unlike BPE, a merged string can collide with a
     * base symbol too — "#"+"##"→"###" composes exist in '#'-bearing
     * corpora — and the vocabulary is a string set, so the collapse is
-    * total). Both relations are vocabulary-sized; the driver sort is
-    * bounded by the corpus's distinct code points.
+    * total). The union is deduped on the driver (its base alphabet is
+    * bounded by the corpus's distinct code points) and returned as a
+    * local relation, so reading it runs no Spark job.
     */
   def vocabTable(
       df: DataFrame, textCol: String, merges: Seq[Merge]): DataFrame = {
@@ -256,23 +259,18 @@ object WordPiece {
       (baseToks.zipWithIndex.map { case (t, i) => (t, i + 1L) } ++
         merges.sortBy(_.rank)
           .map(m => (mergedSym(m.a, m.b), nBase + m.rank))).toSeq
-    rows.toDF("token", "__id")
-      .groupBy(col("token")).agg(min(col("__id")).as("token_id"))
-      .select(col("token"), col("token_id"))
+    rows.groupMapReduce(_._1)(_._2)(math.min).toSeq.sortBy(_._2)
+      .toDF("token", "token_id")
   }
 
   /** Greedy longest-match tokenize to INTEGER IDS — (idCol, token_ids
-    * array<long>), one row per input row, empty/null text -> empty
-    * array. The dictionary path: distinct words map through the native
-    * longest-match expression once each, token strings resolve through
-    * the broadcast vocab (every emitted token is in the vocabulary by
-    * construction — including [UNK] at id 0 — so the -1 coalesce is
-    * inert), and occurrences reassemble in document order. One
-    * token-grain shuffle, the [[Bpe.tokenizeToIds]] shape.
-    *
-    * `vocabStrings` must be the token column of `vocab` (the set the
-    * matcher probes); `maxChars` is the [UNK]-wholesale cap, counted
-    * in code points (see [[graft.functions.WordPieceTokenizeExpr]]).
+    * array<bigint>), one row per input row (its own tokens, whatever its
+    * id; empty for null or blank text) in one projection with no
+    * exchange: see [[idsByWord]]. Every emitted token is in `vocab` by
+    * construction, [UNK] at id 0, so the -1 for an unknown string is
+    * inert. The matcher probes `vocab`'s token strings; `maxChars` is
+    * the [UNK]-wholesale cap in code points
+    * ([[graft.functions.WordPieceTokenizeExpr]]).
     *
     * CASING CONTRACT: input is lowercased before the whitespace split
     * (the BERT-uncased convention) — this matches [[Bpe.wordCounts]],
@@ -283,32 +281,41 @@ object WordPiece {
     */
   def tokenizeToIds(
       df: DataFrame, textCol: String, idCol: String,
-      vocab: DataFrame, vocabStrings: Seq[String],
-      maxChars: Int = 16): DataFrame = {
-    val words = df.select(col(idCol).as("__id"),
-        posexplode(filter(
-          split(lower(trim(coalesce(col(textCol), lit("")))), "\\s+"),
-          t => t =!= lit(""))))
-      .select(col("__id"), col("pos").as("__p"), col("col").as("__w"))
-    val dict = graft.core.Caches.persistTracked(
-      words.select(col("__w")).distinct()
-        .select(col("__w"), tokenizeWord(col("__w"), vocabStrings, maxChars)
-          .as("__t")))
-    // Eager: true dict stats before the occurrence join plans (see
-    // Bpe.wordsAndDict — unknown cached-relation size put the broadcast
-    // on the occurrence side).
-    dict.count()
-    Bpe.idsReassemble(df, idCol, words, dict, vocab)
+      vocab: DataFrame, maxChars: Int = 16): DataFrame = {
+    val entries = vocabEntries(vocab)
+    idsByWord(df, textCol, idCol, entries,
+      tokenizeWord(_, entries.map(_._1).distinct, maxChars))
   }
+
+  /** The suite words of a text column, [[Bpe.wordCounts]]'s spelling. */
+  private[ops] def words(text: Column): Column =
+    filter(split(lower(trim(coalesce(text, lit("")))), "\\s+"),
+      t => t =!= lit(""))
+
+  /** `vocab`'s (token, token_id) rows, sorted so the kernels' per-JVM
+    * table keys are run-stable (job-free for a local relation).
+    */
+  private[ops] def vocabEntries(vocab: DataFrame): Seq[(String, Long)] =
+    vocab.select(col("token"), col("token_id")).collect()
+      .map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+
+  /** The ids projection of both vocabulary conventions: each row's
+    * [[words]] through the per-word kernel `perWord` in order (the
+    * kernels memoize words per JVM and cap each word's cost), flattened,
+    * and resolved against `vocab`. The element type stays nullable, as
+    * the ids schema always was.
+    */
+  private[ops] def idsByWord(df: DataFrame, textCol: String, idCol: String,
+      vocab: Seq[(String, Long)], perWord: Column => Column): DataFrame =
+    df.select(col(idCol), Bridge.column(graft.functions.TokenIdsExpr(
+        Bridge.expression(flatten(transform(words(col(textCol)), perWord))),
+        vocab)).cast(ArrayType(LongType)).as("token_ids"))
 
   /** Longest-match tokens of ONE word column (array<string>; [UNK] on
     * no-match or over-length words) — the native expression.
     */
   def tokenizeWord(word: Column, vocabStrings: Seq[String],
       maxChars: Int = 16): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.WordPieceTokenizeExpr(
-        org.apache.spark.sql.graftbridge.Bridge.expression(
-          coalesce(word, lit(""))),
-        vocabStrings, maxChars))
+    Bridge.column(graft.functions.WordPieceTokenizeExpr(
+      Bridge.expression(coalesce(word, lit(""))), vocabStrings, maxChars))
 }

@@ -159,10 +159,8 @@ class SqlSurfaceSpec extends SparkSpec {
       wpm.map(m => (m.rank.toLong, m.a, m.b, m.count, m.score))
         .toDF("merge_rank", "pair_a", "pair_b", "pair_count", "score"))
     val wpv = graft.ops.WordPiece.vocabTable(docs, "text", wpm)
-    val wps = wpv.select("token").collect().map(_.getString(0)).toSeq.sorted
     pin("SELECT * FROM wordpiece_ids('tvf_docs', 'text', 'doc_id', 6, 16)",
-      graft.ops.WordPiece.tokenizeToIds(docs, "text", "doc_id", wpv, wps,
-        16))
+      graft.ops.WordPiece.tokenizeToIds(docs, "text", "doc_id", wpv, 16))
     pin("SELECT * FROM tokenizer_fertility('tvf_docs', 'text', 'doc_id', 4)",
       graft.ops.TokenizerEval.fertilityByGroup(docs, "text", "doc_id",
         graft.ops.Bpe.trainByteLevel(docs, "text", 4)))

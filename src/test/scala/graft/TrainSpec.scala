@@ -661,6 +661,55 @@ class TrainSpec extends SparkSpec {
     } finally graft.core.Caches.releaseAll()
   }
 
+  test("driver-state trajectories come back in key order with no sort or exchange planned") {
+    val df = (0 until 12).map(i =>
+      (i.toLong, if (i % 3 == 0) "alpha beta gamma" else "delta epsilon zeta",
+        (i % 2).toLong)).toDF("doc_id", "text", "y")
+    def keyOrdered(out: org.apache.spark.sql.DataFrame, keys: Int): Unit = {
+      import org.apache.spark.sql.execution.SortExec
+      import org.apache.spark.sql.execution.exchange.Exchange
+      // The helper's collect also walks the plan inside an adaptive node.
+      val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      val plan = out.queryExecution.executedPlan
+      assert(aqe.collect(plan) { case p @ (_: SortExec | _: Exchange) => p }.isEmpty,
+        s"trajectory plan:\n$plan")
+      val ks = out.collect().toSeq.map(r => (0 until keys).map(r.getLong))
+      assert(ks.nonEmpty)
+      assert(ks.zip(ks.tail).forall { case (a, b) =>
+        a.zip(b).find { case (x, y) => x != y }.exists { case (x, y) => x < y }
+      }, "rows must be strictly ascending in their keys")
+    }
+    try {
+      keyOrdered(LinearTrainer.train(df, "text", "doc_id", col("y"),
+        buckets = 16, epochs = 3), keys = 2)
+      keyOrdered(LinearTrainer.trainMiniBatch(df, "text", "doc_id", col("y"),
+        buckets = 16, epochs = 2, numBatches = 3), keys = 3)
+    } finally graft.core.Caches.releaseAll()
+  }
+
+  test("fallback trainers treat a null doc_id as the kernel does") {
+    val df = Seq[(java.lang.Long, String, Long)](
+      (1L, "good clean prose", 1L),
+      (null, "spam junk words", 0L),
+      (2L, "noise text", 0L)).toDF("doc_id", "text", "y")
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
+      assert(a.schema.map(f => (f.name, f.dataType)) == b.schema.map(f => (f.name, f.dataType)))
+      assert(a.collect().toSeq == b.collect().toSeq)
+    }
+    try {
+      same(LinearTrainer.trainImpl(df, "text", "doc_id", col("y"), buckets = 64,
+          epochs = 2, lrFactor = 16L, driverState = true),
+        LinearTrainer.trainImpl(df, "text", "doc_id", col("y"), buckets = 64,
+          epochs = 2, lrFactor = 16L, driverState = false))
+      same(LinearTrainer.trainMiniBatchImpl(df, "text", "doc_id", col("y"),
+          buckets = 64, epochs = 2, numBatches = 2, lrFactor = 16L,
+          salt = "mb1", driverState = true),
+        LinearTrainer.trainMiniBatchImpl(df, "text", "doc_id", col("y"),
+          buckets = 64, epochs = 2, numBatches = 2, lrFactor = 16L,
+          salt = "mb1", driverState = false))
+    } finally graft.core.Caches.releaseAll()
+  }
+
   test("driver-state trainers run one Spark job per gradient step") {
     val df = (0 until 40).map(i =>
       (i.toLong, if (i % 2 == 0) "alpha beta gamma" else "delta epsilon",

@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.{Bpe, TokenizerEval, UniMax, WordPiece}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Round-12 additions: WordPiece training + greedy longest-match
   * tokenize, UniMax budget allocation, tokenizer fertility eval.
@@ -78,8 +79,7 @@ class WordPieceSpec extends SparkSpec {
     val train = Seq((1L, "aaab ab"), (2L, "aaab")).toDF("doc_id", "text")
     val m = WordPiece.train(train, "text", 6)
     val v = WordPiece.vocabTable(train, "text", m)
-    val vs = v.select("token").collect().map(_.getString(0)).toSeq.sorted
-    val out = WordPiece.tokenizeToIds(docs, "text", "doc_id", v, vs)
+    val out = WordPiece.tokenizeToIds(docs, "text", "doc_id", v)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1)))
     // aaab -> 6 (whole-word token), ab -> 7, zzz -> [UNK]=0.
@@ -122,6 +122,179 @@ class WordPieceSpec extends SparkSpec {
     val df = Seq(Tuple1("abc")).toDF("w")
       .select(WordPiece.tokenizeWord(col("w"), vocab, 16).as("t"))
     assert(df.collect()(0).getSeq[String](0) === Seq("ab", "##c"))
+  }
+
+  // ------------------------- map-only ids (WordPiece and Unigram alike)
+
+  private val idsTrain =
+    Seq((1L, "aaab ab"), (2L, "aaab cd")).toDF("doc_id", "text")
+
+  /** The ids-path edge fixture, read back from Parquet so its plans scan
+    * a file: null, empty and blank text, a word over the 16-code-point
+    * cap, unseen code points, a null id and a duplicated id.
+    */
+  private lazy val idsEdge: org.apache.spark.sql.DataFrame = {
+    val path = tempDir("graft-ids-edge") + "/docs"
+    Seq[(java.lang.Long, String)](
+      (1L, "aaab ab aaab"), (2L, "AB  zzz\tab"), (3L, null), (4L, ""),
+      (5L, "  \t \n "), (6L, "a" * 20 + "b ab"), (7L, "ωμέγα ab cd"),
+      (null, "ab aaab"), (8L, "ab"), (8L, "aaab cd ab"))
+      .toDF("doc_id", "text").write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  /** Plain-Scala reference of an ids path: the suite word split, each
+    * word through the kernel `pieces`, token strings looked up in
+    * `vocab` (-1 when absent) — one entry per input row.
+    */
+  private def refIds(df: org.apache.spark.sql.DataFrame,
+      vocab: org.apache.spark.sql.DataFrame,
+      pieces: String => Seq[String]): Seq[(Option[Long], Seq[Long])] = {
+    val ids = vocab.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    df.select("doc_id", "text").collect().toSeq.map { r =>
+      val words = Option(r.getString(1)).toSeq
+        .flatMap(_.toLowerCase(java.util.Locale.ROOT).split("\\s+"))
+        .filter(_.nonEmpty)
+      (Option(r.get(0)).map(_.asInstanceOf[Long]),
+        words.flatMap(pieces).map(ids.getOrElse(_, -1L)))
+    }.sortBy(_.toString)
+  }
+
+  private def engineIds(out: org.apache.spark.sql.DataFrame)
+      : Seq[(Option[Long], Seq[Long])] =
+    out.collect().toSeq.map(r =>
+      (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getSeq[Long](1).toSeq))
+      .sortBy(_.toString)
+
+  private def strings(a: org.apache.spark.sql.catalyst.util.ArrayData): Seq[String] =
+    a.toObjectArray(org.apache.spark.sql.types.StringType).toSeq.map(_.toString)
+
+  test("wordpiece and unigram ids == a per-word reference on edge rows, at 1, 3 and 8 partitions") {
+    import graft.functions.{UnigramViterbiOps, WordPieceTokenizeOps}
+    import org.apache.spark.unsafe.types.UTF8String
+    val wpVocab = WordPiece.vocabTable(idsTrain, "text",
+      WordPiece.train(idsTrain, "text", 6))
+    val wpTable = WordPieceTokenizeOps.tableFor(
+      wpVocab.collect().map(_.getString(0)).toSeq.sorted, 16)
+    val wpPieces = (w: String) =>
+      strings(WordPieceTokenizeOps.tokenizeWord(UTF8String.fromString(w), wpTable))
+    val pieces = graft.ops.Unigram.train(idsTrain, "text", seedSize = 4,
+      maxPieceLen = 3, emRounds = 1, pruneCount = 1)
+    val ugTable = UnigramViterbiOps.tableFor(
+      pieces.map(p => (p.token, p.costMicro)), 16, 4)
+    val ugPieces = (w: String) =>
+      strings(UnigramViterbiOps.segmentWord(UTF8String.fromString(w), ugTable))
+    // Leave one emitted piece out of the unigram vocabulary: it must
+    // read -1, as the reference's lookup does.
+    val ugVocab = graft.ops.Unigram.vocabTable(spark, pieces)
+      .where(col("token") =!= ugPieces("ab").head)
+    val wpRef = refIds(idsEdge, wpVocab, wpPieces)
+    val ugRef = refIds(idsEdge, ugVocab, ugPieces)
+    assert(wpRef.length == 10 && ugRef.flatMap(_._2).contains(-1L))
+    // Every row keeps its own tokens: the null id has its words, and
+    // the two rows of id 8 stay apart.
+    assert(wpRef.count(_._1 == Some(8L)) == 2 &&
+      wpRef.find(_._1.isEmpty).get._2.nonEmpty)
+    // The over-length word and the unseen code points are [UNK] (id 0).
+    assert(Seq(6L, 7L).forall(id => wpRef.find(_._1 == Some(id)).get._2.head == 0L))
+    for (parts <- Seq(1, 3, 8)) {
+      val in = idsEdge.repartition(parts)
+      val wp = WordPiece.tokenizeToIds(in, "text", "doc_id", wpVocab)
+      val ug = graft.ops.Unigram.tokenizeToIds(in, "text", "doc_id", pieces,
+        ugVocab)
+      for (out <- Seq(wp, ug))
+        assert(out.schema.toString == StructType(Seq(
+          StructField("doc_id", LongType, nullable = true),
+          StructField("token_ids", ArrayType(LongType, containsNull = true),
+            nullable = false))).toString)
+      assert(engineIds(wp) == wpRef, s"wordpiece at $parts partitions")
+      assert(engineIds(ug) == ugRef, s"unigram at $parts partitions")
+    }
+  }
+
+  /** `out`'s exchanges and cached-relation scans, read through any
+    * adaptive node in its physical plan.
+    */
+  private def exchangesAndCaches(out: org.apache.spark.sql.DataFrame)
+      : (Seq[org.apache.spark.sql.execution.exchange.Exchange], Int) = {
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val plan = out.queryExecution.executedPlan
+    (aqe.collect(plan) { case e: org.apache.spark.sql.execution.exchange.Exchange => e },
+      aqe.collect(plan) { case m: org.apache.spark.sql.execution.columnar
+        .InMemoryTableScanExec => m }.length)
+  }
+
+  test("wordpiece and unigram ids plans hold no exchange and no cached relation") {
+    val vocab = WordPiece.vocabTable(idsTrain, "text",
+      WordPiece.train(idsTrain, "text", 6))
+    val pieces = graft.ops.Unigram.train(idsTrain, "text", 4, 3, 1, 1)
+    try {
+      for ((name, out) <- Seq(
+          "wordpiece" -> WordPiece.tokenizeToIds(idsEdge, "text", "doc_id", vocab),
+          "unigram" -> graft.ops.Unigram.tokenizeToIds(idsEdge, "text",
+            "doc_id", pieces, graft.ops.Unigram.vocabTable(spark, pieces)))) {
+        val (ex, cached) = exchangesAndCaches(out)
+        assert(ex.isEmpty && cached == 0, s"$name ids plan: $ex, $cached cached")
+      }
+      // The fertility eval's one exchange is its group aggregate's.
+      val (ex, cached) = exchangesAndCaches(TokenizerEval
+        .fertilityByGroupUnigram(idsEdge.withColumn("g", col("doc_id") % 2),
+          "text", "g", pieces))
+      assert(cached == 0, "fertility plan reads no cached relation")
+      assert(ex.length == 1 && (ex.head.outputPartitioning match {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+          h.expressions.flatMap(_.references.map(_.name)) == Seq("grp")
+        case _ => false
+      }), s"fertility exchanges: $ex")
+    } finally graft.core.Caches.releaseAll()
+  }
+
+  test("collecting wordpiece or unigram ids over a local vocabulary is one Spark job") {
+    val wpVocab = Seq(("[UNK]", 0L), ("a", 1L), ("ab", 2L), ("##a", 3L),
+      ("##b", 4L), ("c", 5L), ("##d", 6L)).toDF("token", "token_id")
+    val pieces = Seq(("a", 10L), ("b", 12L), ("ab", 15L), ("c", 11L),
+      ("d", 11L)).map { case (t, c) => graft.ops.Unigram.Piece(t, 1L, c) }
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val ended = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        started.incrementAndGet(); ()
+      }
+      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        ended.incrementAndGet(); ()
+      }
+    }
+    // The listener bus is async: wait until every started job has ended
+    // and the count has held still for a few polls.
+    def settled(): Int = {
+      var last = -1
+      var still = 0
+      val deadline = System.nanoTime() + 20000000000L
+      while (still < 3 && System.nanoTime() < deadline) {
+        Thread.sleep(100)
+        val now = started.get()
+        if (now == last && now == ended.get()) still += 1 else still = 0
+        last = now
+      }
+      last
+    }
+    def jobsOf(run: => Any): Int = {
+      val before = settled()
+      run
+      settled() - before
+    }
+    val docs = idsEdge
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val wp = jobsOf(WordPiece.tokenizeToIds(docs, "text", "doc_id", wpVocab)
+        .collect())
+      val ug = jobsOf(graft.ops.Unigram.tokenizeToIds(docs, "text", "doc_id",
+        pieces, graft.ops.Unigram.vocabTable(spark, pieces)).collect())
+      assert(wp == 1 && ug == 1, s"jobs: wordpiece $wp, unigram $ug")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      graft.core.Caches.releaseAll()
+    }
   }
 
   // ----------------------------------------------------------- UniMax
