@@ -892,7 +892,7 @@ object SparkEntry {
       val emb = embeddings(s, d)
       val qs = emb.where(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_embedding"))
-      annEnvelope(Similarity.lshTopK(emb, qs, dim = 64, k = 5, numPlanes = 8), emb)
+      annEnvelope(Similarity.lshTopK(emb, qs, k = 5, numPlanes = 8), emb)
     }),
     "q52_ivf_assign" -> ((s, d) => {
       // IVF assignment through an argmax-verification envelope: the
@@ -956,7 +956,7 @@ object SparkEntry {
       // construction must not launch a scan job (the eager count()
       // here was a round-4 finding).
       val pairs = Dedup.embeddingNearDuplicatesLsh(emb, "embedding", "vec_id",
-        dim = 64, threshold = 0.4,
+        threshold = 0.4,
         numPlanes = adaptivePlanes(parquetRowCount(s, s"$d/embeddings.parquet")))
       pairSoundnessEnvelope(emb, pairs, 0.4)
     }),

@@ -224,17 +224,16 @@ object ContrastivePairs {
     import graft.functions.VectorFunctions.vecCosine
     val corpus = graft.core.Caches.persistTracked(
       df.select(col(idCol).cast("long").as("__idb"), col(embCol).as("__eb"),
-        Similarity.lshBucket(embCol, 0, numPlanes).as("__bkt")))
+        Similarity.lshBucket(embCol, numPlanes).as("__bkt")))
     val anch = graft.core.Caches.persistTracked(
       anchors.select(col(idCol).cast("long").as("anchor_id"),
         col(embCol).as("__ea"),
-        Similarity.lshBucket(embCol, 0, numPlanes).as("__bkt0")))
-    val probes = array(col("__bkt0") +: (0 until numPlanes).map(p =>
-      col("__bkt0").bitwiseXOR(lit(1L << p))): _*)
+        Similarity.lshBucket(embCol, numPlanes).as("__bkt0")))
     val posW = Window.partitionBy(col("anchor_id"))
       .orderBy(col("__c").desc, col("__idb").asc)
     anch
-      .select(col("anchor_id"), col("__ea"), explode(probes).as("__bkt"))
+      .select(col("anchor_id"), col("__ea"),
+        explode(Similarity.lshProbes(col("__bkt0"), numPlanes)).as("__bkt"))
       .join(corpus, Seq("__bkt"))
       .where(col("anchor_id") =!= col("__idb"))
       .select(col("anchor_id"), col("__idb"),

@@ -681,7 +681,8 @@ object Dedup {
     * pair candidates are same-bucket only — no data column needed and
     * no quadratic blow-up on organic corpora. Multi-probe on one side
     * (each row additionally joins against every bucket at Hamming
-    * distance 1 in sign-pattern space) recovers most pairs that
+    * distance 1 in sign-pattern space, [[Similarity.lshProbes]])
+    * recovers most pairs that
     * straddle a hyperplane; like all LSH methods recall < 1 by design —
     * tune `numPlanes` DOWN toward log2(expected cluster count) or raise
     * probing for higher recall. Only the probe side explodes (the base
@@ -698,17 +699,14 @@ object Dedup {
       df: DataFrame,
       embCol: String,
       idCol: String,
-      dim: Int,
       threshold: Double,
       numPlanes: Int = 8): DataFrame = {
     import graft.functions.VectorFunctions.vecCosine
     val bucketed = graft.core.Caches.persistTracked(
       df.select(col(idCol).as("id"), col(embCol).as("emb"),
-        Similarity.lshBucket(embCol, dim, numPlanes).as("bucket")))
-    val probes = array(col("bucket") +: (0 until numPlanes).map(p =>
-      col("bucket").bitwiseXOR(lit(1L << p))): _*)
+        Similarity.lshBucket(embCol, numPlanes).as("bucket")))
     val a = bucketed.select(col("id").as("id_a"), col("emb").as("emb_a"),
-      explode(probes).as("bucket"))
+      explode(Similarity.lshProbes(col("bucket"), numPlanes)).as("bucket"))
     val b = bucketed.select(col("id").as("id_b"), col("emb").as("emb_b"), col("bucket"))
     a.join(b, Seq("bucket"))
       .where(col("id_a") < col("id_b"))

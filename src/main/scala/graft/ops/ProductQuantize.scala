@@ -33,8 +33,9 @@ import org.apache.spark.sql.{DataFrame, Row}
   * against a broadcast LUT and partial-aggregates the per-pair sum
   * map-side. Flat-PQ ADC still
   * scores every store row per query (its win is bytes, not candidate
-  * count) — [[ivfPqTopK]] composes the IVF coarse pruning on top so
-  * probes touch `nprobe/nlist` of the codes, the full IVFADC shape.
+  * count) — [[VectorIndex.searchIvfAdcRelations]] composes the IVF
+  * coarse pruning on top so probes touch `nprobe/nlist` of the codes,
+  * the full IVFADC shape.
   *
   * Everything is deterministic: seeds are the `ksub` vectors with the
   * smallest `xxhash64(id)` (the [[Similarity.pickCentroids]] trick),
@@ -291,55 +292,10 @@ object ProductQuantize {
       storeEmbCol, queryEmbCol, storeIdCol, queryIdCol)
   }
 
-  /** IVFADC: IVF coarse lists prune the candidate set (probe
-    * `nprobe`/`nlist` of the corpus), PQ codes compress what the probe
-    * scans, exact re-rank fixes the scores — the full FAISS-style
-    * composition of [[Similarity.ivfTopK]] and flat PQ.
-    */
-  def ivfPqTopK(
-      store: DataFrame,
-      queries: DataFrame,
-      nlist: Int,
-      nprobe: Int,
-      m: Int,
-      ksub: Int,
-      dim: Int,
-      k: Int,
-      shortlist: Int,
-      iters: Int = 2,
-      storeEmbCol: String = "embedding",
-      queryEmbCol: String = "q_embedding",
-      storeIdCol: String = "vec_id",
-      queryIdCol: String = "q_id"): DataFrame = {
-    val cents = Similarity.pickCentroids(store, nlist, storeEmbCol, storeIdCol)
-    val assigned = Similarity.ivfAssign(store, nlist, storeEmbCol, storeIdCol, Some(cents))
-    val books = trainCodebooks(store, m, ksub, dim, iters, storeEmbCol, storeIdCol)
-    val codes = encode(store, books, m, dim, storeEmbCol, storeIdCol)
-      .join(assigned.select(col(storeIdCol).as("id"), col("centroid_id")), "id")
-    val probeW = Window.partitionBy(col("q_id")).orderBy(col("__qsim").desc, col("centroid_id"))
-    val probes = queries.select(col(queryIdCol).as("q_id"), col(queryEmbCol).as("__qe"))
-      .crossJoin(broadcast(cents))
-      .withColumn("__qsim", vecCosine(col("__qe"), col("centroid_emb")))
-      .withColumn("__pr", row_number().over(probeW))
-      .where(col("__pr") <= nprobe)
-      .select(col("q_id"), col("centroid_id"))
-    val lut = adcLut(queries, books, m, dim, queryEmbCol, queryIdCol)
-    // Restrict the ADC join to probed (query, list) pairs: the code
-    // store is filtered by the broadcast probe relation BEFORE any
-    // scoring, so a probe touches nprobe/nlist of the codes.
-    val probedCodes = codes.join(broadcast(probes), Seq("centroid_id"))
-    val adc = probedCodes.join(broadcast(lut),
-        probedCodes("q_id") === lut("q_id") &&
-        probedCodes("sub") === lut("sub") && probedCodes("code") === lut("code_id"))
-      .groupBy(probedCodes("q_id"), col("id"))
-      .agg(sum(col("ip")).as("adc"))
-    rerank(adc, store, queries, k, shortlist,
-      storeEmbCol, queryEmbCol, storeIdCol, queryIdCol)
-  }
-
   /** Exact re-rank of an ADC shortlist: window-prune to `shortlist`
     * per query on the approximate score (ties toward the lower id),
-    * join the raw vectors back, emit true-cosine top-k.
+    * join the raw vectors back, emit true-cosine top-k
+    * ([[Similarity.topKPerQuery]]).
     */
   private def rerank(
       adc: DataFrame,
@@ -356,15 +312,12 @@ object ProductQuantize {
       .where(col("__sl") <= shortlist)
       .select(col("q_id"), col("id"))
     val q2 = queries.select(col(queryIdCol).as("__rq_id"), col(queryEmbCol).as("__rq_emb"))
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col(storeIdCol))
-    cand
-      .join(store.select(col(storeIdCol), col(storeEmbCol)),
-        cand("id") === col(storeIdCol))
-      .join(broadcast(q2), col("q_id") === col("__rq_id"))
-      .withColumn("score", vecCosine(col(storeEmbCol), col("__rq_emb")))
-      .withColumn("rank", row_number().over(rankW))
-      .where(col("rank") <= k)
-      .select(col("q_id").as(queryIdCol), col(storeIdCol), col("score"), col("rank"))
+    Similarity.topKPerQuery(cand
+        .join(store.select(col(storeIdCol), col(storeEmbCol)),
+          cand("id") === col(storeIdCol))
+        .join(broadcast(q2), col("q_id") === col("__rq_id"))
+        .withColumn("score", vecCosine(col(storeEmbCol), col("__rq_emb"))),
+      "q_id", storeIdCol, k)
+      .withColumnRenamed("q_id", queryIdCol)
   }
 }

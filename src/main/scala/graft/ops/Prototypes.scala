@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,12 +15,12 @@ import org.apache.spark.sql.functions._
   * prototypical `epsNum/epsDen` fraction of every cluster — keeping
   * the hard, diverse examples large-data regimes want.
   *
-  * Scale shape: centroids are k rows (picked by the deterministic
-  * [[Similarity.pickCentroids]] hash sample, refined by
-  * [[Similarity.refineCentroids]] Lloyd rounds whose shuffles carry
-  * only map-side pre-aggregated (centroid, dim) means); assignment is
-  * a broadcast cross-score with a map-side-combinable max_by — the
-  * store never shuffles raw vectors; the per-cluster rank window
+  * Scale shape: centroids are k rows ([[Similarity.trainCentroids]]:
+  * the deterministic hash-sample pick, refined by Lloyd rounds whose
+  * shuffles carry only map-side pre-aggregated (centroid, dim) means);
+  * assignment is [[Similarity.nearestCentroid]]'s broadcast
+  * cross-score with a map-side-combinable max_by — the store never
+  * shuffles raw vectors; the per-cluster rank window
   * shuffles one skinny row per vector keyed by centroid. The drop
   * count is the exact integer floor(size * epsNum / epsDen) per
   * cluster, so the boundary is deterministic given the scores.
@@ -55,7 +55,7 @@ object Prototypes {
       centroidsOpt: Option[DataFrame] = None): DataFrame = {
     require(nClusters >= 1 && refineRounds >= 0 && epsNum >= 0 && epsDen >= 1)
     val cents = centroidsOpt.getOrElse(
-      centroids(store, embCol, idCol, nClusters, refineRounds))
+      Similarity.trainCentroids(store, nClusters, refineRounds, embCol, idCol))
     val assigned = assignBest(store, cents, embCol, idCol)
     val w = Window.partitionBy(col("centroid_id"))
       .orderBy(col("proto_micro").desc, col(idCol).asc)
@@ -68,49 +68,17 @@ object Prototypes {
       .withColumn("kept", col("rank") > col("drop_n"))
   }
 
-  /** The deterministic-seed Lloyd centroids ([[Similarity]] pick +
-    * refine rounds; each round persisted so round N doesn't recompute
-    * round N-1's assignment).
-    */
-  def centroids(
-      store: DataFrame, embCol: String, idCol: String,
-      nClusters: Int, refineRounds: Int): DataFrame = {
-    var c = Similarity.pickCentroids(store, nClusters, embCol, idCol)
-    var r = 0
-    while (r < refineRounds) {
-      // limit(nClusters) is a NO-OP on values (refine groups by the
-      // <= nClusters surviving centroid ids, so the relation already
-      // holds at most nClusters rows) but makes the bound STRUCTURAL:
-      // the broadcast build side of the assignment cross-join ends in
-      // a GlobalLimit the plan linter can prove bounded — the
-      // ProductQuantize codebook-cap discipline.
-      c = graft.core.Caches.persistTracked(
-        Similarity.refineCentroids(store, c, embCol, idCol)
-          .limit(nClusters))
-      r += 1
-    }
-    c
-  }
-
-  /** Broadcast cross-score assignment with the chosen centroid AND its
-    * grid score: (idCol, centroid_id, proto_micro). Ties break toward
-    * the lower centroid id (the [[Similarity.ivfAssign]] convention);
-    * the max cosine equals the chosen pair's cosine under ties by
-    * definition, so max() is exact for the score column.
+  /** [[Similarity.nearestCentroid]] with the chosen centroid's grid
+    * score: (idCol, centroid_id, proto_micro). The max cosine equals
+    * the chosen pair's cosine under ties by definition, so the winning
+    * similarity is exact for the score column.
     */
   private def assignBest(
       store: DataFrame, cents: DataFrame,
       embCol: String, idCol: String): DataFrame =
-    store.crossJoin(broadcast(cents))
-      .withColumn("__sim",
-        graft.functions.VectorFunctions.vecCosine(
-          col(embCol), col("centroid_emb")))
-      .groupBy(col(idCol))
-      .agg(
-        max_by(col("centroid_id"), struct(col("__sim"), -col("centroid_id")))
-          .as("centroid_id"),
-        rint(max(col("__sim")) * lit(1000000.0)).cast("long")
-          .as("proto_micro"))
+    Similarity.nearestCentroid(store, cents, embCol, col(idCol))
+      .select(col(idCol), col("centroid_id"),
+        rint(col("centroid_sim") * lit(1000000.0)).cast("long").as("proto_micro"))
 
   /** The ENVELOPE row for the oracle (one row): n_vecs plus the four
     * in-engine soundness booleans (see object doc). `TRUE` on the
@@ -124,8 +92,7 @@ object Prototypes {
       refineRounds: Int,
       epsNum: Long,
       epsDen: Long): DataFrame = {
-    val cents = graft.core.Caches.persistTracked(
-      centroids(store, embCol, idCol, nClusters, refineRounds))
+    val cents = Similarity.trainCentroids(store, nClusters, refineRounds, embCol, idCol)
     val pruned = graft.core.Caches.persistTracked(
       prunePrototypical(store, embCol, idCol, nClusters, refineRounds,
         epsNum, epsDen, centroidsOpt = Some(cents)))
@@ -303,8 +270,7 @@ object Prototypes {
       .join(clusters.where(col("is_canonical")).select(col(idCol)),
         Seq(idCol))
       .localCheckpoint()
-    val cents = graft.core.Caches.persistTracked(
-      centroids(survivors, embCol, idCol, nClusters, refineRounds))
+    val cents = Similarity.trainCentroids(survivors, nClusters, refineRounds, embCol, idCol)
     val pruned = graft.core.Caches.persistTracked(
       prunePrototypical(survivors, embCol, idCol, nClusters, refineRounds,
         epsNum, epsDen, centroidsOpt = Some(cents)))

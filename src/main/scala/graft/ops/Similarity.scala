@@ -3,7 +3,7 @@ package graft.ops
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
   * column. Baseline is exact brute force ([[graft.query.Retriever]]);
@@ -16,8 +16,18 @@ import org.apache.spark.sql.DataFrame
   *    vector assigned to its nearest centroid; queries probe `nprobe`
   *    nearest lists. At 100 TB the store is bucketed/partitioned by
   *    centroid id so a probe touches only those partitions.
+  *
+  * This object is the one ANN kernel: [[nearestCentroid]],
+  * [[trainCentroids]], [[probeLists]], [[lshProbes]] and
+  * [[topKPerQuery]] carry the tie policy every IVF/PQ/LSH operator
+  * shares — a vector's centroid is the highest cosine, ties to the
+  * lower centroid id; a query probes its `nprobe` nearest lists, ties
+  * to the lower list id; top-k ties go to the lower vector id.
+  * [[VectorIndex]], [[ProductQuantize]], [[Prototypes]] and the LSH arms
+  * of [[Dedup]] and [[ContrastivePairs]] call it instead of spelling it.
   */
 object Similarity {
+  import graft.core.Caches
 
   /** Deterministic pseudo-random unit-ish hyperplane components derived
     * from (plane, dim) via a hash — no RNG, stable across runs/executors.
@@ -30,11 +40,10 @@ object Similarity {
   /** Sign-pattern LSH bucket id from `numPlanes` fixed hyperplanes —
     * native codegen'd expression ([[graft.functions.LshBucketExpr]];
     * the HOF fold it replaces was interpreted per row and re-evaluated
-    * per plan reference). `dim` is retained for signature stability but
-    * the plane components are derived from the array's own length
-    * (identical values when they agree, which every caller guarantees).
+    * per plan reference). The plane components are derived from the
+    * array's own length.
     */
-  def lshBucket(embCol: String, dim: Int, numPlanes: Int = 12) =
+  def lshBucket(embCol: String, numPlanes: Int = 12) =
     graft.functions.LshBucketOps.lshBucketNative(col(embCol), numPlanes)
 
   /** The original HOF composition, kept as the bit-parity witness for
@@ -49,6 +58,25 @@ object Similarity {
       when(dot >= 0.0, lit(1L << p)).otherwise(lit(0L))
     }
     bits.reduce((a, b) => a.bitwiseOR(b))
+  }
+
+  /** The LSH multi-probe set: `bucket` plus every bucket at Hamming
+    * distance 1 in sign-pattern space (one of `numPlanes` bits
+    * flipped), as an array of 1 + numPlanes pairwise-distinct keys.
+    */
+  def lshProbes(bucket: Column, numPlanes: Int): Column =
+    array(bucket +: (0 until numPlanes).map(p => bucket.bitwiseXOR(lit(1L << p))): _*)
+
+  /** Per-query top-`k` of scored rows (a `score` column per (query,
+    * vector) pair): highest score first, ties to the lower `idCol`, as
+    * (qIdCol, idCol, score, rank). Plans as a WindowGroupLimit, so the
+    * shuffle carries at most k rows per query and task.
+    */
+  def topKPerQuery(scored: DataFrame, qIdCol: String, idCol: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col(qIdCol)).orderBy(col("score").desc, col(idCol))
+    scored.withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select(col(qIdCol), col(idCol), col("score"), col("rank"))
   }
 
   /** ANN top-k per query via LSH buckets with MULTI-PROBE: each query
@@ -69,7 +97,6 @@ object Similarity {
   def lshTopK(
       store: DataFrame,
       queries: DataFrame,
-      dim: Int,
       k: Int,
       numPlanes: Int = 12,
       probeBits: Int = 1,
@@ -78,27 +105,15 @@ object Similarity {
       storeIdCol: String = "vec_id",
       queryIdCol: String = "q_id"): DataFrame = {
     require(probeBits >= 0 && probeBits <= 1, "probeBits 0 or 1 supported")
-    val s = store.withColumn("__bucket", lshBucket(storeEmbCol, dim, numPlanes))
-    val base = lshBucket(queryEmbCol, dim, numPlanes)
-    val probes =
-      if (probeBits == 0) array(base)
-      else array(base +: (0 until numPlanes).map(p => base.bitwiseXOR(lit(1L << p))): _*)
+    val s = store.withColumn("__bucket", lshBucket(storeEmbCol, numPlanes))
+    val base = lshBucket(queryEmbCol, numPlanes)
+    val probes = if (probeBits == 0) array(base) else lshProbes(base, numPlanes)
     val q = queries.withColumn("__bucket", explode(probes))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("score").desc, col(storeIdCol))
-    s.join(q, "__bucket")
-      .withColumn("score", vecCosine(col(storeEmbCol), col(queryEmbCol)))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col(queryIdCol), col(storeIdCol), col("score"), col("rank"))
+    topKPerQuery(s.join(q, "__bucket")
+        .withColumn("score", vecCosine(col(storeEmbCol), col(queryEmbCol))),
+      queryIdCol, storeIdCol, k)
   }
 
-  /** IVF coarse quantizer: pick `nlist` centroids deterministically (the
-    * vectors whose id hash is smallest — a seeded sample without RNG),
-    * assign every vector to its nearest centroid. Returns (id, centroid_id).
-    *
-    * The centroid set is tiny and broadcast; assignment is a map-side
-    * cross-score + min, no shuffle of the store.
-    */
   /** Deterministic coarse-centroid pick: the `nlist` vectors whose id
     * hash is smallest (a seeded sample without RNG). Persisted (tracked
     * via [[graft.core.Caches]] for release) — the relation is tiny and
@@ -107,11 +122,32 @@ object Similarity {
     */
   def pickCentroids(
       store: DataFrame, nlist: Int, embCol: String, idCol: String): DataFrame =
-    graft.core.Caches.persistTracked(store
+    Caches.persistTracked(store
       .withColumn("__h", xxhash64(col(idCol)))
       .orderBy(col("__h"))
       .limit(nlist)
       .select(col(idCol).as("centroid_id"), col(embCol).as("centroid_emb")))
+
+  /** The IVF coarse quantizer's assignment: each vector's nearest
+    * centroid by cosine, ties to the lower centroid id, grouped by
+    * `keys` — (keys..., centroid_id, centroid_sim), the winning
+    * similarity as a second aggregate (a caller that does not read it
+    * drops it, and Catalyst prunes it).
+    *
+    * The centroid set is tiny and broadcast; groupBy + max_by is
+    * map-side combinable (partial aggregation), so the N*nlist scored
+    * rows never shuffle — only one pre-aggregated row per key does.
+    * (A window over the cross product would shuffle all N*nlist rows
+    * keyed by vector id and sort them; at 100 TB that IS the job.)
+    */
+  def nearestCentroid(
+      vecs: DataFrame, centroids: DataFrame, embCol: String, keys: Column*): DataFrame =
+    vecs.crossJoin(broadcast(centroids))
+      .withColumn("__sim", vecCosine(col(embCol), col("centroid_emb")))
+      .groupBy(keys: _*)
+      .agg(max_by(col("centroid_id"), struct(col("__sim"), -col("centroid_id")))
+          .as("centroid_id"),
+        max(col("__sim")).as("centroid_sim"))
 
   /** One Lloyd (k-means) refinement iteration over the coarse
     * centroids: assign every store vector to its nearest centroid, then
@@ -120,8 +156,8 @@ object Similarity {
     * (the sampled pick can land two seeds in one natural cluster and
     * none in another; the mean re-centers both).
     *
-    * Scale shape: assignment is the same broadcast cross-score as
-    * [[ivfAssign]]; the mean is posexplode to (centroid, dim) grain +
+    * Scale shape: assignment is [[nearestCentroid]]'s broadcast
+    * cross-score; the mean is posexplode to (centroid, dim) grain +
     * avg — partial-aggregated map-side, so the shuffle carries at most
     * nlist*dim pre-combined rows per task, never raw vectors. Centroids
     * that attract no vectors drop out (standard k-means), leaving
@@ -131,42 +167,59 @@ object Similarity {
       store: DataFrame,
       centroids: DataFrame,
       embCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    val assigned = store.crossJoin(broadcast(centroids))
-      .withColumn("__sim", vecCosine(col(embCol), col("centroid_emb")))
-      .groupBy(col(idCol), col(embCol))
-      .agg(max_by(col("centroid_id"), struct(col("__sim"), -col("centroid_id")))
-        .as("centroid_id"))
-    assigned
+      idCol: String = "vec_id"): DataFrame =
+    nearestCentroid(store, centroids, embCol, col(idCol), col(embCol))
       .select(col("centroid_id"), posexplode(col(embCol)).as(Seq("__pos", "__v")))
       .groupBy(col("centroid_id"), col("__pos"))
       .agg(avg(col("__v")).as("__m"))
       .groupBy(col("centroid_id"))
       .agg(transform(array_sort(collect_list(struct(col("__pos"), col("__m")))),
         s => s.getField("__m")).as("centroid_emb"))
+
+  /** Trained coarse centroids: [[pickCentroids]] plus `refineIters`
+    * [[refineCentroids]] rounds, each persisted (tracked) so round N
+    * does not recompute round N-1's assignment and every consumer
+    * reads the last round from cache. `limit(nlist)` is a no-op on
+    * values (a round keeps at most the nlist ids it was given) but
+    * makes the bound STRUCTURAL: the broadcast side of every
+    * assignment cross-join ends in a GlobalLimit the plan linter can
+    * prove bounded.
+    */
+  def trainCentroids(
+      vecs: DataFrame, nlist: Int, refineIters: Int, embCol: String,
+      idCol: String): DataFrame =
+    (0 until refineIters).foldLeft(pickCentroids(vecs, nlist, embCol, idCol)) { (c, _) =>
+      Caches.persistTracked(refineCentroids(vecs, c, embCol, idCol).limit(nlist))
+    }
+
+  /** Each query's `nprobe` nearest lists (highest cosine to the list
+    * centroid, ties to the lower list id) as (qIdCol, qEmbCol,
+    * centroid_id). Lazy; the centroid side is broadcast.
+    */
+  def probeLists(queries: DataFrame, qEmbCol: String, qIdCol: String,
+      nprobe: Int, centroids: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col(qIdCol)).orderBy(col("__qsim").desc, col("centroid_id"))
+    queries.crossJoin(broadcast(centroids))
+      .withColumn("__qsim", vecCosine(col(qEmbCol), col("centroid_emb")))
+      .withColumn("__pr", row_number().over(w))
+      .where(col("__pr") <= nprobe)
+      .select(col(qIdCol), col(qEmbCol), col("centroid_id"))
   }
 
+  /** IVF assignment of `store` to `nlist` coarse lists: (idCol,
+    * centroid_id) by [[nearestCentroid]]. Callers that already hold the
+    * centroid relation pass it in — re-picking would duplicate the
+    * full-store sort + cache AND make agreement between the two picks
+    * load-bearing (q52's envelope).
+    */
   def ivfAssign(
       store: DataFrame,
       nlist: Int,
       embCol: String = "embedding",
       idCol: String = "vec_id",
       centroidsOpt: Option[DataFrame] = None): DataFrame = {
-    // Callers that already hold the centroid relation pass it in —
-    // re-picking would duplicate the full-store sort + cache AND make
-    // agreement between the two picks load-bearing (q52's envelope).
     val centroids = centroidsOpt.getOrElse(pickCentroids(store, nlist, embCol, idCol))
-    // max_by over (similarity, -centroid_id): highest cosine similarity
-    // wins, ties broken toward the lowest centroid id. groupBy + max_by is
-    // map-side combinable (partial aggregation), so the N*nlist scored rows
-    // never shuffle — only one pre-aggregated row per vector id does.
-    // (The previous window-over-cross-product form shuffled all N*nlist
-    // rows keyed by vector id and sorted them; at 100 TB that IS the job.)
-    store.crossJoin(broadcast(centroids))
-      .withColumn("__sim", vecCosine(col(embCol), col("centroid_emb")))
-      .groupBy(col(idCol))
-      .agg(max_by(col("centroid_id"), struct(col("__sim"), -col("centroid_id")))
-        .as("centroid_id"))
+    nearestCentroid(store, centroids, embCol, col(idCol)).drop("centroid_sim")
   }
 
   /** End-to-end IVF search: assign the store to `nlist` coarse lists
@@ -192,33 +245,14 @@ object Similarity {
       storeIdCol: String = "vec_id",
       queryIdCol: String = "q_id",
       refineIters: Int = 0): DataFrame = {
-    var centroids = pickCentroids(store, nlist, storeEmbCol, storeIdCol)
-    // Optional Lloyd iterations; each refined set is persisted (tracked)
-    // because both the store assignment and the query probes read it.
-    for (_ <- 0 until refineIters)
-      centroids = graft.core.Caches.persistTracked(
-        refineCentroids(store, centroids, storeEmbCol, storeIdCol))
-    // ivfAssign's map-side max_by assignment, carrying the embedding
-    // through the groupBy so probed lists can score without a re-join.
-    val assigned = store.crossJoin(broadcast(centroids))
-      .withColumn("__sim", vecCosine(col(storeEmbCol), col("centroid_emb")))
-      .groupBy(col(storeIdCol), col(storeEmbCol))
-      .agg(max_by(col("centroid_id"), struct(col("__sim"), -col("centroid_id")))
-        .as("centroid_id"))
-    // Each query probes its nprobe nearest lists.
-    val probeW = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("__qsim").desc, col("centroid_id"))
-    val probes = queries.crossJoin(broadcast(centroids))
-      .withColumn("__qsim", vecCosine(col(queryEmbCol), col("centroid_emb")))
-      .withColumn("__pr", row_number().over(probeW))
-      .where(col("__pr") <= nprobe)
-      .select(col(queryIdCol), col(queryEmbCol), col("centroid_id"))
-    val rankW = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("score").desc, col(storeIdCol))
-    probes.join(assigned, Seq("centroid_id"))
-      .withColumn("score", vecCosine(col(storeEmbCol), col(queryEmbCol)))
-      .withColumn("rank", row_number().over(rankW))
-      .where(col("rank") <= k)
-      .select(col(queryIdCol), col(storeIdCol), col("score"), col("rank"))
+    val centroids = trainCentroids(store, nlist, refineIters, storeEmbCol, storeIdCol)
+    // The assignment carries the embedding through the groupBy so
+    // probed lists can score without a re-join.
+    val assigned = nearestCentroid(store, centroids, storeEmbCol,
+      col(storeIdCol), col(storeEmbCol))
+    topKPerQuery(probeLists(queries, queryEmbCol, queryIdCol, nprobe, centroids)
+        .join(assigned, Seq("centroid_id"))
+        .withColumn("score", vecCosine(col(storeEmbCol), col(queryEmbCol))),
+      queryIdCol, storeIdCol, k)
   }
 }

@@ -20,11 +20,11 @@ import org.apache.spark.sql.functions._
   * session-scoped, files are not, and a rebind of [[coarseTables]]
   * (plus [[pqTables]]) restores them after a restart.
   *
-  * One build pipeline serves both index forms: [[buildCoarse]] picks,
-  * refines and assigns, [[buildCodes]] encodes, and a sink decides
-  * where each derived relation goes — the store's tables for a
-  * standing index, `persistTracked` for a scratch index over a bounded
-  * subset ([[buildIvfPqRelations]]).
+  * One build pipeline serves both index forms: [[buildCoarse]] trains
+  * and assigns through [[Similarity]]'s ANN kernel, [[buildCodes]]
+  * encodes, and a sink decides where each derived relation goes — the
+  * store's tables for a standing index, `persistTracked` for a scratch
+  * index over a bounded subset ([[buildIvfPqRelations]]).
   *
   * BUCKET PRUNING caveat: Spark's planner auto-disables bucketed
   * reading for scans with no bucket-key join/agg
@@ -61,18 +61,15 @@ object VectorIndex {
     store.table(name)
   }
 
-  /** Train centroids (deterministic coarse pick + `refineIters` Lloyd
-    * steps — [[Similarity.pickCentroids]]/[[Similarity.refineCentroids]]),
-    * assign every vector, and hand both to `sink`; returns
-    * (centroids, store) as the sink gives them back.
+  /** Train centroids ([[Similarity.trainCentroids]]: deterministic
+    * coarse pick + `refineIters` Lloyd steps), assign every vector, and
+    * hand both to `sink`; returns (centroids, store) as the sink gives
+    * them back.
     */
   private def buildCoarse(vecs: DataFrame, embCol: String, idCol: String,
       nlist: Int, refineIters: Int, sink: Sink): (DataFrame, DataFrame) = {
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
-    var centroids = Similarity.pickCentroids(vecs, nlist, embCol, idCol)
-    for (_ <- 0 until refineIters)
-      centroids = Caches.persistTracked(
-        Similarity.refineCentroids(vecs, centroids, embCol, idCol))
+    val centroids = Similarity.trainCentroids(vecs, nlist, refineIters, embCol, idCol)
     // The index's tables have a CANONICAL id spelling (LongType)
     // independent of the caller's parquet width — centroid ids are
     // driver-collected as longs at search time, and an append must
@@ -83,17 +80,14 @@ object VectorIndex {
     (cents, sink("store", assign(vecs, cents, embCol, idCol)))
   }
 
-  /** Each vector's nearest centroid (ties to the lower centroid id), in
-    * the store's (id, emb, centroid_id) spelling — the build's and the
-    * append's one assignment.
+  /** Each vector's [[Similarity.nearestCentroid]] in the store's (id,
+    * emb, centroid_id) spelling — the build's and the append's one
+    * assignment.
     */
   private def assign(vecs: DataFrame, centroids: DataFrame, embCol: String,
       idCol: String): DataFrame =
-    vecs.crossJoin(broadcast(centroids))
-      .withColumn("__sim", vecCosine(col(embCol), col("centroid_emb")))
-      .groupBy(col(idCol).cast("long").as("id"), col(embCol).as("emb"))
-      .agg(max_by(col("centroid_id"), struct(col("__sim"), -col("centroid_id")))
-        .as("centroid_id"))
+    Similarity.nearestCentroid(vecs, centroids, embCol,
+      col(idCol).cast("long").as("id"), col(embCol).as("emb")).drop("centroid_sim")
 
   /** PQ-encode every stored vector against `books`, in ARRAY form (one
     * row per vector carrying m small ints) with its list id.
@@ -273,23 +267,16 @@ object VectorIndex {
       buildCodes(store, books, m, dim, scratchSink), m, ksub, dim)
   }
 
-  /** The probe step: each query's `nprobe` nearest lists (ties to the
-    * lower list id), persisted, and the sorted union of probed list
-    * ids. The union is a driver round-trip over at most `nlist` longs —
-    * the price of turning a dynamic probe set into a prunable literal
-    * (Spark has no dynamic bucket pruning); bounded by construction,
-    * never data-sized.
+  /** The probe step: [[Similarity.probeLists]], persisted, and the
+    * sorted union of probed list ids. The union is a driver round-trip
+    * over at most `nlist` longs — the price of turning a dynamic probe
+    * set into a prunable literal (Spark has no dynamic bucket pruning);
+    * bounded by construction, never data-sized.
     */
   private def probe(queries: DataFrame, qEmbCol: String, qIdCol: String,
       nprobe: Int, centroids: DataFrame): (DataFrame, Array[Long]) = {
-    val probeW = Window.partitionBy(col(qIdCol))
-      .orderBy(col("__qsim").desc, col("centroid_id"))
     val probes = Caches.persistTracked(
-      queries.crossJoin(broadcast(centroids))
-        .withColumn("__qsim", vecCosine(col(qEmbCol), col("centroid_emb")))
-        .withColumn("__pr", row_number().over(probeW))
-        .where(col("__pr") <= nprobe)
-        .select(col(qIdCol), col(qEmbCol), col("centroid_id")))
+      Similarity.probeLists(queries, qEmbCol, qIdCol, nprobe, centroids))
     (probes, probes.select(col("centroid_id")).distinct()
       .collect().map(_.getLong(0)).sorted)
   }
@@ -297,16 +284,11 @@ object VectorIndex {
   private def inLists(df: DataFrame, lists: Array[Long]): DataFrame =
     df.where(col("centroid_id").isin(lists.map(Long.box): _*))
 
-  /** Per-query top-`k` of scored (qIdCol, id, score) rows by score,
-    * ties to the lower id, as (qIdCol, vec_id, score, rank).
+  /** [[Similarity.topKPerQuery]] over scored (qIdCol, id, score) rows,
+    * as (qIdCol, vec_id, score, rank).
     */
-  private def topK(scored: DataFrame, qIdCol: String, k: Int): DataFrame = {
-    val rankW = Window.partitionBy(col(qIdCol))
-      .orderBy(col("score").desc, col("id"))
-    scored.withColumn("rank", row_number().over(rankW))
-      .where(col("rank") <= k)
-      .select(col(qIdCol), col("id").as("vec_id"), col("score"), col("rank"))
-  }
+  private def topK(scored: DataFrame, qIdCol: String, k: Int): DataFrame =
+    Similarity.topKPerQuery(scored, qIdCol, "id", k).withColumnRenamed("id", "vec_id")
 
   /** Execute `out` with bucketed scans forced on. The bucket-pruning
     * knob is read at PLANNING time, so the search executes eagerly
@@ -410,9 +392,9 @@ object VectorIndex {
       .select(col("q_id"),
         transform(sequence(lit(0), lit(m * ksub - 1)),
           p => coalesce(element_at(col("__lm"), p), lit(0.0d))).as("__lut"))
-    // Probed (query, list) restriction BEFORE scoring (the ivfPqTopK
-    // shape): a code row is scored only for queries that probed its
-    // list; the score is ONE fused m-lookup call per pair
+    // Probed (query, list) restriction BEFORE scoring: a code row is
+    // scored only for queries that probed its list; the score is ONE
+    // fused m-lookup call per pair
     // (AdcLutScoreExpr) — the join-by-subspace spelling costs m rows
     // per pair and measurably loses to the raw cosine it should
     // undercut.

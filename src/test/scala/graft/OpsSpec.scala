@@ -139,7 +139,7 @@ class OpsSpec extends SparkSpec {
       (i.toLong, Array(math.cos(angle).toFloat, math.sin(angle).toFloat))
     }.toDF("vec_id", "embedding")
     val queries = Seq((0L, Array(1f, 0.01f))).toDF("q_id", "q_embedding")
-    val out = Similarity.lshTopK(store, queries, dim = 2, k = 5, numPlanes = 4)
+    val out = Similarity.lshTopK(store, queries, k = 5, numPlanes = 4)
       .select("vec_id").as[Long].collect().toSeq
     assert(out.nonEmpty) // bucketed candidates exist and are ranked
   }
@@ -188,7 +188,7 @@ class OpsSpec extends SparkSpec {
     // 6 planes = 64 buckets for 8 clusters: buckets stay cluster-sized.
     // (8+ planes over-partitions this fixture and recall drops below the
     // floor — plane count must track log2(cluster count), not store size.)
-    val lshRecall = recall(Similarity.lshTopK(store, queries, dim = 64, k = k,
+    val lshRecall = recall(Similarity.lshTopK(store, queries, k = k,
       numPlanes = 6, probeBits = 1))
     info(f"LSH multi-probe recall@$k on clustered data: $lshRecall%.3f")
     assert(lshRecall >= 0.8, f"LSH recall $lshRecall%.3f below 0.8 floor")
@@ -209,6 +209,63 @@ class OpsSpec extends SparkSpec {
     assert(refined >= 0.8, f"refined single-probe recall $refined%.3f below 0.8 floor")
   }
 
+  test("ANN tie policy: both IVF paths == brute force, ties to the lower centroid, list and vector id, at 1, 3 and 8 partitions") {
+    import graft.ops.VectorIndex
+    // Centroids are the nlist ids with the smallest xxhash64(id) (no
+    // refinement). The first two get the SAME vector (axis 2), the next
+    // two axes 0 and 1, so every cosine to a centroid is v(axis)/|v| and
+    // equal components tie bit for bit. The other vectors are small-int
+    // patterns full of 2-, 3- and 4-way ties, plus exact duplicates.
+    val (n, nlist, k) = (40, 4, 5)
+    val seeds = spark.range(n).orderBy(xxhash64(col("id"))).limit(nlist)
+      .as[Long].collect()
+    val axisOf = Map(seeds(0) -> 2, seeds(1) -> 2, seeds(2) -> 0, seeds(3) -> 1)
+    def vec(i: Int): Array[Float] = axisOf.get(i.toLong) match {
+      case Some(a) => Array.tabulate(4)(j => if (j == a) 1f else 0f)
+      case None =>
+        val v = Array(i % 3, i / 3 % 3, i / 9 % 3, if (i % 5 == 0) 1 else 0).map(_.toFloat)
+        if (v.forall(_ == 0f)) Array(0f, 0f, 0f, 1f) else v
+    }
+    val rows = (0 until n).map(i => (i.toLong, vec(i)))
+    val queries = Seq((100L, Array(1f, 1f, 0f, 0f)), (101L, Array(0f, 0f, 1f, 0f)),
+      (102L, Array(1f, 1f, 1f, 1f)), (103L, Array(1f, 0f, 1f, 0f)))
+    // Expected nearest centroid: highest v(axis), ties to the lower id.
+    def nearest(v: Array[Float]): Long =
+      axisOf.toSeq.maxBy { case (cid, a) => (v(a), -cid) }._1
+    val expectAssign = rows.map { case (id, v) => id -> nearest(v) }.toSet
+    val tied = rows.count { case (_, v) =>
+      val sims = axisOf.values.toSeq.map(v(_))
+      sims.count(_ == sims.max) > 1
+    }
+    assert(tied > n / 4, s"only $tied of $n vectors tie between centroids")
+    val qs = queries.toDF("q_id", "q_embedding")
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.select("q_id", "vec_id", "rank").as[(Long, Long, Int)].collect().toSet
+    for (parts <- Seq(1, 3, 8)) {
+      val store = rows.toDF("vec_id", "embedding").repartition(parts)
+      val brute = triples(Retriever.neighbors(store, qs, k))
+      assert(brute.size == queries.size * k)
+      assert(triples(Similarity.ivfTopK(store, qs, nlist, nprobe = nlist, k = k)) == brute,
+        s"ivfTopK != brute force at $parts partitions")
+      val rel = VectorIndex.buildIvfPqRelations(store, "embedding", "vec_id", nlist,
+        m = 2, ksub = 4, dim = 4, refineIters = 0)
+      assert(triples(VectorIndex.searchIvfAdcRelations(qs, "q_embedding", "q_id", k,
+        nprobe = nlist, shortlist = n, rel)) == brute,
+        s"IVFADC search != brute force at $parts partitions")
+      assert(rel.centroids.select("centroid_id").as[Long].collect().toSet == seeds.toSet)
+      assert(Similarity.ivfAssign(store, nlist).as[(Long, Long)].collect().toSet ==
+        expectAssign, s"ivfAssign off the lower centroid id at $parts partitions")
+      assert(rel.store.select("id", "centroid_id").as[(Long, Long)].collect().toSet ==
+        expectAssign, s"index assignment off the lower centroid id at $parts partitions")
+      val probed = Similarity.probeLists(qs, "q_embedding", "q_id", 1,
+          Similarity.pickCentroids(store, nlist, "embedding", "vec_id"))
+        .select("q_id", "centroid_id").as[(Long, Long)].collect().toSet
+      assert(probed == queries.map { case (q, v) => q -> nearest(v) }.toSet,
+        s"nprobe=1 probe off the lower list id at $parts partitions")
+      graft.core.Caches.releaseAll()
+    }
+  }
+
   test("LSH-blocked embedding near-dup: high recall vs exact pairs on clustered data, no false positives") {
     val (store, _) = clusteredFixture(nClusters = 8, perCluster = 30, dim = 64, eps = 0.15f)
     val threshold = 0.9
@@ -220,7 +277,7 @@ class OpsSpec extends SparkSpec {
         vecCosine(col("emb_a"), col("emb_b")) >= threshold)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val lsh = Dedup.embeddingNearDuplicatesLsh(store, "embedding", "vec_id",
-        dim = 64, threshold = threshold, numPlanes = 6)
+        threshold = threshold, numPlanes = 6)
       .as[(Long, Long)].collect().toSeq
     assert(lsh.distinct.size == lsh.size, "duplicate pair emissions")
     val lshSet = lsh.toSet
@@ -739,7 +796,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("PQ exact mode: full shortlist returns brute-force top-k; modest shortlists keep recall") {
-    import graft.ops.ProductQuantize
+    import graft.ops.{ProductQuantize, VectorIndex}
     val (store, queries) = clusteredFixture(nClusters = 8, perCluster = 20, dim = 64, eps = 0.15f)
     val k = 10
     val brute = Retriever.neighbors(store, queries, k)
@@ -754,10 +811,13 @@ class OpsSpec extends SparkSpec {
       dim = 64, k = k, shortlist = 50))
     info(f"flat PQ shortlist=50 recall@$k: $flat%.3f")
     assert(flat >= 0.9, f"flat-PQ recall $flat%.3f below 0.9 floor")
-    val ivfpq = recall(ProductQuantize.ivfPqTopK(store, queries, nlist = 8, nprobe = 2,
-      m = 4, ksub = 16, dim = 64, k = k, shortlist = 50))
+    val rel = VectorIndex.buildIvfPqRelations(store, "embedding", "vec_id", nlist = 8,
+      m = 4, ksub = 16, dim = 64, refineIters = 0)
+    val ivfpq = recall(VectorIndex.searchIvfAdcRelations(queries, "q_embedding", "q_id",
+      k = k, nprobe = 2, shortlist = 50, rel))
     info(f"IVFPQ nprobe=2 shortlist=50 recall@$k: $ivfpq%.3f")
     assert(ivfpq >= 0.8, f"IVFPQ recall $ivfpq%.3f below 0.8 floor")
+    graft.core.Caches.releaseAll()
   }
 
   // ---- PQ codebook training on the driver ------------------------------

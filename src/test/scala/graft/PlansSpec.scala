@@ -213,7 +213,7 @@ class PlansSpec extends SparkSpec {
       // The rule's plan IS the hand-built operator's shape: same buckets,
       // same multi-probe — the pair sets must be identical.
       val handBuilt = graft.ops.Dedup.embeddingNearDuplicatesLsh(
-        df, "embedding", "vec_id", dim = 64, threshold = 0.6, numPlanes = 6)
+        df, "embedding", "vec_id", threshold = 0.6, numPlanes = 6)
         .as[(Long, Long)].collect().toSet
       assert(got.toSet == handBuilt,
         s"rule pairs diverge from embeddingNearDuplicatesLsh: ${got.toSet.diff(handBuilt)} / ${handBuilt.diff(got.toSet)}")

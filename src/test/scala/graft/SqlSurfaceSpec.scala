@@ -318,7 +318,7 @@ class SqlSurfaceSpec extends SparkSpec {
     val k = 10
     val brute = graft.query.Retriever.neighbors(emb, qs, k)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
-    val lsh = graft.ops.Similarity.lshTopK(emb, qs, dim = 64, k = k, numPlanes = 8)
+    val lsh = graft.ops.Similarity.lshTopK(emb, qs, k = k, numPlanes = 8)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
     val recall = lsh.intersect(brute).size.toDouble / brute.size
     // Deterministic (hash-derived planes, fixed data): document the
