@@ -2766,7 +2766,7 @@ object SparkEntry {
       // assignment (assignToFamiliesWithUpdates._2) — one row per
       // standing family pulled into the batch closure, with its new
       // family id and the merged family's final size/bitmask; the
-      // relation the streaming family-store sink applies to stay
+      // relation a writer applies to keep a standing family store
       // consistent. Oracle: full recompute — a standing (corpus-only
       // closure) family appears iff its full-closure component
       // contains a batch doc, new_family/size/signals read from the
@@ -4484,8 +4484,8 @@ Hosts: %s
            -- Strict > matches Spark session_window semantics exactly:
            -- each event's window is [ts, ts+gap) and TOUCHING windows
            -- merge, so an event at precisely gap distance CONTINUES the
-           -- session (pinned empirically by the streaming/batch parity
-           -- test in StreamingSpec, and by q73's inline fixture).
+           -- session (pinned by this row's derived touching pair and
+           -- by q73's inline fixture).
            CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) > INTERVAL '10 minutes'
                 OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL THEN 1 ELSE 0 END AS brk
            FROM base),

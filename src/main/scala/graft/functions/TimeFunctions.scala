@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Date/time column functions from SURVEY.md §2.7 (F1,F2,F4,F5,F6,F18,F19).
+/** Date/time column functions from SURVEY.md §2.7 (F1,F2,F4,F5,F6,F18).
   * All pure built-ins; session timezone is pinned UTC so epoch math is
   * deterministic across executors.
   */
@@ -55,7 +55,4 @@ object TimeFunctions {
   /** F18: number of fixed-size chunks covering a duration (audio chunking). */
   def chunkCount(durationSecs: Column, chunkSecs: Long): Column =
     ceil(durationSecs / chunkSecs.toDouble).cast("long")
-
-  /** F19: coalesce with a literal default. */
-  def withDefault(c: Column, default: Any): Column = coalesce(c, lit(default))
 }

@@ -170,12 +170,6 @@ object MultiModal {
       .otherwise(lit("unknown"))
   }
 
-  /** Payload stats: size + content hash (exact-dedup key for media). */
-  def payloadStats(df: DataFrame, payloadCol: String = "payload"): DataFrame =
-    df.withColumn("n_bytes", length(col(payloadCol)))
-      .withColumn("content_hash", sha2(col(payloadCol), 256))
-      .withColumn("format", sniffFormat(col(payloadCol)))
-
   /** Decode image assets through the external decoder in bounded
     * batches (the mapInPandas-batch shape, Scala-side).
     */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** URL/domain blocklist filtering — the curation stage every web-scale
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: the blocklist is host-grain (thousands to ~5M rows for
   * UT1 — kilobytes to ~100 MB), so membership is a BROADCAST probe:
   * host extraction is map-only column algebra on the scan, the
-  * anti-join never shuffles the corpus, and the word-ratio is a
+  * broadcast join never shuffles the corpus, and the word-ratio is a
   * per-row array intersection against a literal lexicon — all inside
   * whole-stage codegen.
   *
@@ -32,20 +32,6 @@ object Blocklist {
       lower(regexp_extract(url,
         "^(?:[a-z][a-zA-Z0-9+.-]*://)?(?:[^/@?#]*@)?([^/:?#]+)", 1)),
       "^www\\.", "")
-
-  /** Corpus rows whose canonical host is NOT blocklisted. The
-    * blocklist side is forced broadcast: a left-anti hash probe,
-    * map-only on the corpus side.
-    */
-  def filterBlockedHosts(
-      docs: DataFrame,
-      urlCol: String,
-      blocklist: DataFrame,
-      hostCol: String): DataFrame =
-    docs.withColumn("__host", urlHost(col(urlCol)))
-      .join(broadcast(blocklist.select(col(hostCol).as("__blocked"))),
-        col("__host") === col("__blocked"), "left_anti")
-      .drop("__host")
 
   /** Fraction of a text's DISTINCT words that appear in `lexicon`
     * (badwords density, the C4 signal). Literal-array intersection —

@@ -126,16 +126,7 @@ object Boilerplate {
     * APPEND CONTRACT: batches carry NEW documents (append-only corpus
     * ingest — the same contract as [[Dedup.appendToCorpusIndex]]), so
     * distinct-doc counts ADD across batches; re-appending the same
-    * documents would double-count them. Each partial row carries a
-    * `batch_id` (-1 for the base write and untracked appends): a
-    * WRITER that stamps a real batch id can probe
-    * [[lineStatsHasBatch]] before appending and skip a replayed
-    * batch whose partials already committed — the recovery seam
-    * [[graft.streaming.StreamingOps.lineStatsStoreSink]] uses (summed
-    * counts are not idempotent, so an at-least-once append would
-    * otherwise double-count after a crash between the stats append
-    * and the writer's own progress marker). [[storedLineStats]] sums
-    * across batch ids, so the column is free at read time.
+    * documents would double-count them.
     */
   def writeLineStats(
       df: DataFrame,
@@ -146,8 +137,7 @@ object Boilerplate {
       numBuckets: Int = 32): Unit = {
     val store = graft.core.StandingStore(df.sparkSession, tablePrefix, basePath)
     store.writeBucketed("stats",
-      lineStats(df, textCol, idCol).withColumn("batch_id", lit(-1L)),
-      "line_hash", numBuckets)
+      lineStats(df, textCol, idCol), "line_hash", numBuckets)
     store.writeMeta("num_buckets" -> numBuckets)
   }
 
@@ -157,29 +147,15 @@ object Boilerplate {
 
   /** Append a NEW batch's partial counts (see the append contract on
     * [[writeLineStats]]) — one skinny batch-grain aggregation, no
-    * history read. `batchId` stamps the partials for replay detection
-    * ([[lineStatsHasBatch]]); the -1 default means untracked.
+    * history read.
     */
   def appendToLineStats(
       batch: DataFrame,
       textCol: String,
       idCol: String,
-      tablePrefix: String = "graft_line_stats",
-      batchId: Long = -1L): Unit =
-    graft.core.StandingStore(batch.sparkSession, tablePrefix, null).append(("stats",
-      lineStats(batch, textCol, idCol).withColumn("batch_id", lit(batchId)), "line_hash"))
-
-  /** Whether a [[appendToLineStats]] with this `batchId` already
-    * committed — a bounded existence probe (limit-1 over the skinny
-    * partials table); the idempotent-replay guard for at-least-once
-    * writers.
-    */
-  def lineStatsHasBatch(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String,
-      batchId: Long): Boolean =
-    !spark.table(s"${tablePrefix}_stats")
-      .where(col("batch_id") === batchId).limit(1).isEmpty
+      tablePrefix: String = "graft_line_stats"): Unit =
+    graft.core.StandingStore(batch.sparkSession, tablePrefix, null).append(
+      ("stats", lineStats(batch, textCol, idCol), "line_hash"))
 
   /** The standing merged counts: per-batch partials summed bucket-
     * locally (the store is bucketed by line_hash, so this aggregation

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * functions of the token text, scores are int64 micro-unit sums
   * floor-divided by token count — an engine-portable grid with no
   * float accumulation order anywhere. The hash-derived weight table
-  * stands in for trained parameters; a production model swaps
-  * `weightMicro` for a broadcast lookup of the learned vector (same
+  * stands in for trained parameters; a production model swaps that
+  * table for a broadcast lookup of the learned vector (same
   * plan shape — a map-side expression), which is why the operator
   * keeps the whole computation per-row.
   *
@@ -44,13 +44,6 @@ object HashedClassifier {
   /** Feature bucket of a token under `buckets`-wide hashing. */
   def bucketOf(tok: Column, buckets: Int): Column =
     pmod(h60(tok), lit(buckets.toLong))
-
-  /** Deterministic per-bucket weight in micro-units, uniform on
-    * [-1e6, 1e6] — the stand-in for a trained weight vector (salted so
-    * the weight hash is independent of the bucketing hash).
-    */
-  def weightMicro(bucket: Column, salt: String): Column =
-    pmod(h60(concat(lit(salt), bucket.cast("string"))), lit(2000001L)) - lit(1000000L)
 
   /** (id, n_tokens, score_micro, label) per document: `score_micro` is
     * the mean hashed-token weight (0 for empty documents), `label` the

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -292,10 +291,10 @@ object ProductQuantize {
       storeEmbCol, queryEmbCol, storeIdCol, queryIdCol)
   }
 
-  /** Exact re-rank of an ADC shortlist: window-prune to `shortlist`
-    * per query on the approximate score (ties toward the lower id),
-    * join the raw vectors back, emit true-cosine top-k
-    * ([[Similarity.topKPerQuery]]).
+  /** Exact re-rank of an ADC shortlist: prune to `shortlist` per
+    * query on the approximate score, join the raw vectors back, emit
+    * true-cosine top-k (both cuts [[Similarity.topKPerQuery]], ties
+    * toward the lower id).
     */
   private def rerank(
       adc: DataFrame,
@@ -307,9 +306,8 @@ object ProductQuantize {
       queryEmbCol: String,
       storeIdCol: String,
       queryIdCol: String): DataFrame = {
-    val slW = Window.partitionBy(col("q_id")).orderBy(col("adc").desc, col("id"))
-    val cand = adc.withColumn("__sl", row_number().over(slW))
-      .where(col("__sl") <= shortlist)
+    val cand = Similarity.topKPerQuery(adc.withColumnRenamed("adc", "score"),
+        "q_id", "id", shortlist)
       .select(col("q_id"), col("id"))
     val q2 = queries.select(col(queryIdCol).as("__rq_id"), col(queryEmbCol).as("__rq_emb"))
     Similarity.topKPerQuery(cand

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions.vecCosine
+
 /** PROTOTYPICALITY pruning (§2.11 extensions, embedding-curation
   * family) — the diversification half of D4 (Tirumala et al. 2023,
   * "D4: Improving LLM Pretraining via Document De-Duplication and
@@ -107,37 +109,57 @@ object Prototypes {
     * pruned relation scored against (see [[prunePrototypical]]'s
     * centroidsOpt) or a near-tie can flip the argmax re-check.
     */
-  private def envelopeBools(
+  private[graft] def envelopeBools(
       store: DataFrame, cents: DataFrame, pruned: DataFrame,
       embCol: String, idCol: String): DataFrame = {
-    // (a) independent argmax re-score: the assigned centroid must be
-    // the max_by over a SECOND cross-score (same tie-break).
-    val recheck = assignBest(store, cents, embCol, idCol)
-      .withColumnRenamed("centroid_id", "__cid2")
-      .withColumnRenamed("proto_micro", "__pm2")
-    val argmaxOk = pruned.join(recheck, Seq(idCol))
-      .select((col("centroid_id") === col("__cid2") &&
-        col("proto_micro") === col("__pm2")).as("ok"))
-    // (b)+(c)+(d): per-cluster drop counts, score boundary, partition.
+    // (a) independent argmax, q52's spelling: score EVERY centroid per
+    // vector (no max_by); the assigned centroid must be one of them,
+    // beat each other one (ties toward the lower id) and carry its own
+    // score on the grid.
+    val perVec = Window.partitionBy(col(idCol))
+    val argmaxOk = store.select(col(idCol), col(embCol))
+      .join(pruned.select(col(idCol), col("centroid_id").as("__assigned"),
+        col("proto_micro")), Seq(idCol))
+      .crossJoin(broadcast(cents.select(col("centroid_id"), col("centroid_emb"))))
+      .withColumn("__sim", vecCosine(col(embCol), col("centroid_emb")))
+      .withColumn("__asim", max(when(col("centroid_id") === col("__assigned"),
+        col("__sim"))).over(perVec))
+      .groupBy(col(idCol))
+      .agg((count(when(col("centroid_id") === col("__assigned"), lit(1))) === 1 &&
+          every(col("__sim") < col("__asim") || (col("__sim") === col("__asim") &&
+            col("centroid_id") >= col("__assigned"))) &&
+          max(col("proto_micro")) ===
+            rint(max(col("__asim")) * lit(1000000.0)).cast("long")).as("ok"))
+    // (b)+(c): per-cluster drop counts and score boundary.
     val perCluster = pruned.groupBy(col("centroid_id"))
       .agg(
-        count(lit(1)).as("sz"),
         max(col("drop_n")).as("dn"),
         count(when(!col("kept"), lit(1))).as("n_drop"),
         min(when(!col("kept"), col("proto_micro"))).as("min_drop"),
         max(when(col("kept"), col("proto_micro"))).as("max_keep"))
       .select(
         (col("n_drop") === col("dn")).as("drop_ok"),
-        (col("n_drop") + (col("sz") - col("n_drop")) === col("sz"))
-          .as("part_ok"),
         (coalesce(col("min_drop") >= col("max_keep"), lit(true)))
           .as("order_ok"))
+    // (d) kept + dropped partition the store: no store id is missing
+    // from the pruned relation, no other id is in it (null-safe
+    // anti-joins both ways), and the row counts match, so no id repeats.
+    val sIds = store.select(col(idCol).as("__sid"))
+    val pIds = pruned.select(col(idCol).as("__pid"))
+    val partitionOk = sIds.join(pIds, col("__sid") <=> col("__pid"), "left_anti")
+      .agg(count(lit(1)).as("__missing"))
+      .crossJoin(pIds.join(sIds, col("__pid") <=> col("__sid"), "left_anti")
+        .agg(count(lit(1)).as("__extra")))
+      .crossJoin(sIds.agg(count(lit(1)).as("__n_store")))
+      .crossJoin(pIds.agg(count(lit(1)).as("__n_pruned")))
+      .select((col("__missing") === 0 && col("__extra") === 0 &&
+        col("__n_store") === col("__n_pruned")).as("kept_drop_partition"))
     argmaxOk.agg(coalesce(min(col("ok")), lit(true)).as("assigned_argmax"))
       .crossJoin(perCluster.agg(
         coalesce(min(col("drop_ok")), lit(true)).as("drop_count_exact"),
         coalesce(min(col("order_ok")), lit(true))
-          .as("dropped_are_most_prototypical"),
-        coalesce(min(col("part_ok")), lit(true)).as("kept_drop_partition")))
+          .as("dropped_are_most_prototypical")))
+      .crossJoin(partitionOk)
   }
 
   /** The FULL D4 pipeline (Tirumala et al. 2023 run SemDeDup THEN

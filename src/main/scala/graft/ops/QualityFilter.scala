@@ -145,28 +145,13 @@ object QualityFilter {
       element_at(v, 4).as("top_2gram_n"))
   }
 
-  /** Top-n-gram occurrence stats for one n: struct(n_ngrams,
-    * top_ngram_n) — the generalization behind Gopher's published
-    * top-{2,3,4}-gram fraction cuts (20% / 18% / 16%). Computed by the
-    * NATIVE one-pass [[graft.functions.MultiNgramStatsExpr]] (exact
-    * gram identity over interned token ids — no per-gram string
-    * materialization, no sort); [[topNgramStatsHashed]] and
-    * [[topNgramStatsStrings]] are the engine-portable reference
-    * spellings OpsSpec pins it against.
-    */
-  def topNgramStats(textCol: Column, n: Int): Column = {
-    require(n >= 2, s"n must be >= 2, got $n")
-    val v = TextAnalysis.multiNgramStats(textCol, Seq(n))
-    struct(
-      element_at(v, 3).as("n_ngrams"),
-      element_at(v, 4).as("top_ngram_n"))
-  }
-
-  /** HOF reference spelling over [[tokenHashes]]: gram identity is the
-    * xxhash64 of the n token hashes, the mode the longest equal-run of
-    * the sorted gram-hash array. Counts equal the native/string forms
-    * up to the 2^-64 collision trade — kept for the OpsSpec
-    * three-spelling pin and A/B measurement.
+  /** Top-n-gram occurrence stats for one n, struct(n_ngrams,
+    * top_ngram_n): the HOF reference spelling over [[tokenHashes]].
+    * Gram identity is the xxhash64 of the n token hashes, the mode the
+    * longest equal-run of the sorted gram-hash array. Counts equal the
+    * native [[TextAnalysis.multiNgramStats]] (elements 3 and 4) and
+    * the string form up to the 2^-64 collision trade — kept for the
+    * TrainSpec three-spelling pin.
     */
   def topNgramStatsHashed(tokHashes: Column, n: Int): Column = {
     require(n >= 2, s"n must be >= 2, got $n")
@@ -186,25 +171,6 @@ object QualityFilter {
     struct(
       greatest(size(toks) - (n - 1), lit(0)).cast("long").as("n_ngrams"),
       modeCount(nGrams(toks, n), "string").as("top_ngram_n"))
-  }
-
-  /** Gopher's full top-n-gram rule family, integer cross-multiplied:
-    * rule `top_<n>gram` fires when the most frequent n-gram takes more
-    * than `pct`% of the document's n-gram occurrences. Default cuts =
-    * the published Table A1 values. ONE native multi-n vector feeds
-    * every rule (the rules share the identical deterministic subtree,
-    * so whole-stage codegen's subexpression elimination evaluates it
-    * once per row even though each Rule column embeds its own copy).
-    */
-  def topNgramRules(
-      textCol: Column,
-      cuts: Seq[(Int, Int)] = Seq((2, 20), (3, 18), (4, 16))): Seq[Rule] = {
-    val v = TextAnalysis.multiNgramStats(textCol, cuts.map(_._1))
-    cuts.zipWithIndex.map { case ((n, pct), k) =>
-      Rule(s"top_${n}gram",
-        element_at(v, 4 + k * 5) * 100 >
-          lit(pct.toLong) * element_at(v, 3 + k * 5))
-    }
   }
 
   /** The Gopher repetition RULES over [[repetitionStats]], integer-exact
@@ -336,15 +302,4 @@ object QualityFilter {
       size(Lexical.tokens(col(textCol))).as("n_words"),
       verdict(rules).as("verdict"))
       .withColumn("passed", col("verdict") === "pass")
-
-  /** Aggregated funnel report: one row per verdict with its document
-    * count — the numbers that go in the datasheet.
-    */
-  def funnelReport(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      rules: Seq[Rule]): DataFrame =
-    funnel(df, textCol, idCol, rules)
-      .groupBy(col("verdict")).agg(count(lit(1)).as("n_docs"))
 }

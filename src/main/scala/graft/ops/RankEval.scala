@@ -74,25 +74,4 @@ object RankEval {
           .as("recall_micro"),
         coalesce(intDiv(lit(M), col("first_rank")), lit(0L)).as("rr_micro"))
   }
-
-  /** Corpus-level summary: mean recall and MRR over the evaluated
-    * queries, still exact — integer micro sums with the mean left as
-    * (sum, n) plus the floor-divided mean so no engine disagrees on a
-    * division order.
-    */
-  def rankEvalSummary(
-      retrieved: DataFrame,
-      relevant: DataFrame,
-      queryCol: String,
-      docCol: String,
-      rankCol: String,
-      k: Int): DataFrame =
-    rankEval(retrieved, relevant, queryCol, docCol, rankCol, k)
-      .agg(count(lit(1)).as("n_queries"),
-        sum(col("recall_micro")).as("sum_recall_micro"),
-        sum(col("rr_micro")).as("sum_rr_micro"))
-      .select(col("n_queries"), col("sum_recall_micro"), col("sum_rr_micro"),
-        intDiv(col("sum_recall_micro"), col("n_queries"))
-          .as("mean_recall_micro"),
-        intDiv(col("sum_rr_micro"), col("n_queries")).as("mrr_micro"))
 }

@@ -74,24 +74,6 @@ object Sketches {
       Literal(bloom, BinaryType),
       new XxHash64(Seq(Bridge.expression(key)))))
 
-  /** Incoming rows whose key is NOT in `processed` — exact anti-join
-    * semantics, bloom-accelerated: definite misses bypass the join
-    * (map-only), only bloom hits are shuffled for exact verification.
-    */
-  def newKeys(
-      incoming: DataFrame,
-      processed: DataFrame,
-      keyCol: String,
-      expectedItems: Long,
-      fpp: Double = 0.01): DataFrame = {
-    val bloom = bloomBuild(processed.select(keyCol), keyCol, expectedItems, fpp)
-    val hit = bloomMightContain(bloom, col(keyCol))
-    val definitelyNew = incoming.where(!hit)
-    val candidates = incoming.where(hit)
-      .join(processed.select(keyCol), Seq(keyCol), "left_anti")
-    definitelyNew.unionByName(candidates)
-  }
-
   /** Mergeable quantile-sketch envelope (the distributed-percentile
     * path at 100 TB: exact interpolated percentiles need every group's
     * full value set in one place, while `approx_percentile`'s

@@ -33,22 +33,4 @@ object Skew {
       explode(sequence(lit(0), lit(saltFactor - 1))))
     l.join(r, Seq(key, "__salt"), "inner").drop("__salt")
   }
-
-  /** Two-phase salted aggregation for count/sum-like measures on a
-    * skewed group key: pre-aggregate on (key, salt), then finish on
-    * key. (Spark's hash aggregate already map-side combines; this form
-    * additionally bounds the size of any single REDUCE-side group, for
-    * the case where even combined partials of one key overwhelm a
-    * task — e.g. collect-style measures downstream.)
-    */
-  def saltedCount(
-      df: DataFrame,
-      key: String,
-      discriminatorCol: String,
-      saltFactor: Int = 16): DataFrame =
-    df.withColumn("__salt", pmod(hash(col(discriminatorCol)), lit(saltFactor)))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as("n"))
 }

@@ -69,13 +69,4 @@ object SnapshotDiff {
           .when(col("__prev_h") === col("__cur_h"), lit("unchanged"))
           .otherwise(lit("changed")).as("status"))
   }
-
-  /** (status, n) totals — the audit row a pipeline logs per refresh. */
-  def diffSummary(
-      prev: DataFrame,
-      cur: DataFrame,
-      keyCol: String,
-      contentCols: Seq[String]): DataFrame =
-    diff(prev, cur, keyCol, contentCols)
-      .groupBy(col("status")).agg(count(lit(1)).as("n"))
 }

@@ -118,7 +118,7 @@ object TextAnalysis {
   /** `[total, top, dup]` n-gram occurrence counts in ONE local pass
     * (no n-gram-grain shuffle for a per-document statistic). Public so
     * callers deriving several statistics can bind the vector once in
-    * its own projection instead of re-evaluating it per fraction.
+    * its own projection instead of re-evaluating it per statistic.
     */
   def ngramRepetition(textCol: Column, n: Int): Column =
     Bridge.column(graft.functions.NgramRepetitionExpr(Bridge.expression(textCol), n))
@@ -134,27 +134,6 @@ object TextAnalysis {
   def multiNgramStats(textCol: Column, ns: Seq[Int]): Column =
     Bridge.column(graft.functions.MultiNgramStatsExpr(
       Bridge.expression(coalesce(textCol, lit(""))), ns))
-
-  /** Fraction of n-gram occurrences taken by the single most frequent
-    * n-gram (0 when the text has fewer than n tokens) — the Gopher
-    * "top n-gram fraction" repetition signal (Rae et al. 2021, A1.1):
-    * boilerplate and chant-like text score high.
-    */
-  def topNgramFraction(textCol: Column, n: Int): Column = {
-    val st = ngramRepetition(textCol, n)
-    when(st.getItem(0) === 0, lit(0.0))
-      .otherwise(st.getItem(1).cast("double") / st.getItem(0))
-  }
-
-  /** Fraction of n-gram occurrences whose n-gram appears at least
-    * twice in the document — the Gopher "duplicate n-gram fraction"
-    * (loops and copy-paste runs score high).
-    */
-  def dupNgramFraction(textCol: Column, n: Int): Column = {
-    val st = ngramRepetition(textCol, n)
-    when(st.getItem(0) === 0, lit(0.0))
-      .otherwise(st.getItem(2).cast("double") / st.getItem(0))
-  }
 
   /** Shannon entropy of the document's unigram (token) distribution in
     * micro-nats — the lexical-diversity quality signal (low entropy =

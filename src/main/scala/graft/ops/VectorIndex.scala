@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** MATERIALIZED IVF vector index — the storage half of a 100 TB ANN
@@ -406,12 +405,10 @@ object VectorIndex {
         org.apache.spark.sql.graftbridge.Bridge.expression(col("codes")),
         org.apache.spark.sql.graftbridge.Bridge.expression(col("__lut")),
         ksub))
-    val slW = Window.partitionBy(col("__q")).orderBy(col("adc").desc, col("id"))
-    val cand = inLists(rel.codes, lists)
-      .join(broadcast(probedPairs), Seq("centroid_id"))
-      .select(col("__q"), col("id"), adcScore.as("adc"))
-      .withColumn("__sl", row_number().over(slW))
-      .where(col("__sl") <= shortlist)
+    val cand = Similarity.topKPerQuery(inLists(rel.codes, lists)
+        .join(broadcast(probedPairs), Seq("centroid_id"))
+        .select(col("__q"), col("id"), adcScore.as("score")),
+        "__q", "id", shortlist)
       .select(col("__q"), col("id"))
     val q2 = queries.select(col(qIdCol), col(qEmbCol))
     withBucketPruning(topK(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) clustering key — multi-dimensional data layout for
@@ -45,16 +45,4 @@ object ZOrder {
     require(bits >= 1 && bits <= 16, s"bits must be in [1, 16], got $bits")
     spread(x, bits).bitwiseOR(shiftleft(spread(y, bits), 1))
   }
-
-  /** Cluster `df` into `numFiles` z-ordered output slices: range
-    * partition by the morton key (contiguous, balanced key ranges —
-    * one Exchange, sampled bounds) and sort within each. Written as
-    * one file per partition, every file's (x, y) min/max box is tight,
-    * which is exactly what format-level skipping consumes.
-    */
-  def zorderLayout(df: DataFrame, zKey: Column, numFiles: Int): DataFrame =
-    df.withColumn("__graft_z", zKey)
-      .repartitionByRange(numFiles, col("__graft_z"))
-      .sortWithinPartitions(col("__graft_z"))
-      .drop("__graft_z")
 }

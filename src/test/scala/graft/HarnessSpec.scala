@@ -6,9 +6,58 @@ import org.apache.spark.storage.StorageLevel
 import graft.tools.Sweep
 
 /** The shared pieces of the suite mains: the sweep harness's row loop
-  * and the JSON string escaper Bench and Verify write their output with.
+  * and the JSON string escaper Bench and Verify write their output with;
+  * and the guard against public defs nothing but tests reaches.
   */
 class HarnessSpec extends SparkSpec {
+
+  /** Public defs in `src/main` that no other line of `src/main` or
+    * `perfbench/` names, kept on purpose: the "keep" rows of the
+    * decision table in COVERAGE.md ("Unreached public defs").
+    */
+  private val keepUnreached = Set(
+    // reference implementations the tests compare the product paths to
+    "jaccardPairsWithinBlock", "tokenEntropyMicroHof", "vecCosineHof",
+    "topNgramStatsStrings",
+    // the reference repo's ETL and query surface
+    "readJdbcTable", "ensureSnapshot", "readSkipState",
+    "fetchTranscriptsDetailed", "writeStoreJdbc", "cleanVideosWithStats",
+    "parseQueryResponse", "toParsedQuery", "formatContext",
+    // the IVF index's append half (OpsSpec pins append then search)
+    "appendToIvfIndex")
+
+  test("every public def in src/main has a caller in src/main or perfbench, or a recorded keep") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
+      .takeWhile(_ != null).find(d => Files.isDirectory(d.resolve("src/main/scala/graft")))
+      .getOrElse(fail("no src/main/scala/graft above the working directory"))
+    def sources(dir: Path, exts: String*): Seq[Path] =
+      if (!Files.isDirectory(dir)) Nil
+      else Files.walk(dir).iterator().asScala
+        .filter(f => Files.isRegularFile(f) && exts.exists(f.toString.endsWith)).toSeq
+    val main = sources(root.resolve("src/main/scala"), ".scala")
+    val text = (main ++ sources(root.resolve("perfbench"), ".scala", ".py"))
+      .map(f => f -> Files.readString(f)).toMap
+    val ident = "[A-Za-z_][A-Za-z0-9_]*".r
+    val mentions = text.values.flatMap(ident.findAllIn).toSeq
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    // A public def: no access modifier or `override` before `def`.
+    val defLine = """^\s*(?:(?:final|implicit|@\w+)\s+)*def\s+([A-Za-z_][A-Za-z0-9_]*)""".r
+    val unreached = for {
+      f <- main
+      line <- text(f).linesIterator.toSeq
+      m <- defLine.findPrefixMatchOf(line)
+      name = m.group(1)
+      if mentions(name) == ident.findAllIn(line).count(_ == name)
+    } yield name -> root.relativize(f).toString
+    val unkept = unreached.filterNot(u => keepUnreached(u._1))
+    assert(unkept.isEmpty, "public defs with no caller in src/main or perfbench " +
+      "(call them, delete them, or add a keep row to COVERAGE.md and keepUnreached):\n" +
+      unkept.map { case (n, f) => s"$f: $n" }.sorted.mkString("\n"))
+    val stale = keepUnreached -- unreached.map(_._1)
+    assert(stale.isEmpty, s"keepUnreached names that now have a caller or are gone: $stale")
+  }
 
   test("Sweep.overQueries: counts Left and thrown rows, prints the ERR message, releases between rows") {
     var tracked: DataFrame = null

@@ -25,14 +25,6 @@ class MultiModalSpec extends SparkSpec {
     assert(out == Map(1L -> "png", 2L -> "jpeg", 3L -> "wav", 4L -> "mp4", 5L -> "unknown"))
   }
 
-  test("payloadStats: size, content hash, format in one pass") {
-    val out = MultiModal.payloadStats(assets.toDS().toDF())
-    val r = out.where(col("asset_id") === 1).head()
-    assert(r.getAs[Int]("n_bytes") == png.length + 9)
-    assert(r.getAs[String]("content_hash").length == 64)
-    assert(r.getAs[String]("format") == "png")
-  }
-
   test("decodeImages: deterministic stub decode with batch plumbing") {
     val feats = MultiModal.decodeImages(assets.toDS(), new StubImageDecoder, batchSize = 2)
       .collect().map(f => f.asset_id -> f).toMap

@@ -381,18 +381,16 @@ class OpsSpec extends SparkSpec {
       FilterSpec.Not(FilterSpec.Gt("x", 1)))).count() == 1)
   }
 
-  test("ngram repetition: hand-computed fractions, short/empty text -> 0") {
+  test("ngram repetition: hand-computed counts, short/empty text -> 0") {
     // "a b a b a": bigrams = [a b, b a, a b, b a] -> total 4, top 2,
     // dup 4; trigrams = [a b a, b a b, a b a] -> total 3, top 2, dup 2.
     val df = Seq("A b a B a", "solo", "").toDF("text").select(
-      TextAnalysis.topNgramFraction(col("text"), 2).as("top2"),
-      TextAnalysis.dupNgramFraction(col("text"), 2).as("dup2"),
-      TextAnalysis.topNgramFraction(col("text"), 3).as("top3"),
-      TextAnalysis.dupNgramFraction(col("text"), 3).as("dup3"))
-    val rows = df.as[(Double, Double, Double, Double)].collect()
-    assert(rows(0) == ((0.5, 1.0, 2.0 / 3, 2.0 / 3)))
-    assert(rows(1) == ((0.0, 0.0, 0.0, 0.0))) // one token: no bigrams
-    assert(rows(2) == ((0.0, 0.0, 0.0, 0.0)))
+      TextAnalysis.ngramRepetition(col("text"), 2).as("s2"),
+      TextAnalysis.ngramRepetition(col("text"), 3).as("s3"))
+    val rows = df.as[(Seq[Long], Seq[Long])].collect()
+    assert(rows(0) == ((Seq(4L, 2L, 4L), Seq(3L, 2L, 2L))))
+    assert(rows(1) == ((Seq(0L, 0L, 0L), Seq(0L, 0L, 0L)))) // one token: no bigrams
+    assert(rows(2) == ((Seq(0L, 0L, 0L), Seq(0L, 0L, 0L))))
   }
 
   test("ngrams array: space-joined windows, case-folded, SQL-registered") {
@@ -691,11 +689,6 @@ class OpsSpec extends SparkSpec {
     assert(out(4L)._3 == "low_stopword")
     assert(out(5L)._3 == "too_short") // first failing rule wins
     assert(out(1L)._2 == 18)
-    val report = QualityFilter.funnelReport(df, "text", "doc_id",
-        QualityFilter.gopherRules(col("text")))
-      .as[(String, Long)].collect().toMap
-    assert(report == Map("pass" -> 1L, "too_short" -> 2L,
-      "word_length" -> 1L, "low_stopword" -> 1L))
   }
 
   test("connected components: chain closes transitively, disjoint pairs stay apart") {
@@ -1020,26 +1013,16 @@ class OpsSpec extends SparkSpec {
     assert(again == sel)
   }
 
-  test("bloom newKeys equals exact anti-join; definite-new path has no join") {
+  test("bloom filter: no false negatives, sane false-positive count at fpp=0.01") {
     import graft.ops.Sketches
     // Aligned domains: processed covers every even below 1000, incoming
     // is every multiple of 3 below 1000, so the true-new set is exactly
     // the odd multiples of 3.
     val processed = (0L until 500L).map(i => i * 2).toDF("id")
     val incoming = (0L until 334L).map(i => i * 3).toDF("id")
-    val expected = (0L until 334L).map(_ * 3).filter(_ % 2 == 1).sorted
-    // Exact semantics must hold across the fpp spectrum — including a
-    // deliberately collision-heavy filter where nearly every probe is
-    // a (verified) false positive.
-    for (fpp <- Seq(0.01, 0.5)) {
-      val out = Sketches.newKeys(incoming, processed, "id",
-        expectedItems = 500, fpp = fpp)
-        .as[Long].collect().sorted.toSeq
-      assert(out == expected, s"fpp=$fpp: bloom path diverged from anti-join")
-    }
-    // The bloom actually prefilters: no false negatives is structural
-    // (every processed probe hits); the fp rate among the 167 truly-new
-    // keys must be sane for fpp=0.01, not just correct.
+    // No false negatives is structural (every processed probe hits);
+    // the fp rate among the 167 truly-new keys must be sane for
+    // fpp=0.01, not just correct.
     val bloom = Sketches.bloomBuild(processed, "id", 500, 0.01)
     val hits = incoming.where(Sketches.bloomMightContain(bloom, col("id")))
       .as[Long].collect()
@@ -1151,7 +1134,7 @@ class OpsSpec extends SparkSpec {
     assert(incremental == direct)
   }
 
-  test("blocklist: host canonicalization, broadcast anti-join, word ratio") {
+  test("blocklist: host canonicalization and word ratio") {
     import graft.ops.Blocklist
     val urls = Seq(
       "https://www.Bad.Example.org/path?q=1" -> "bad.example.org",
@@ -1165,17 +1148,6 @@ class OpsSpec extends SparkSpec {
     val hosts = urls.map(_._1).toDF("url")
       .select(Blocklist.urlHost(col("url"))).as[String].collect().toSeq
     assert(hosts == urls.map(_._2))
-
-    val docs = urls.map(_._1).zipWithIndex.map { case (u, i) => (i.toLong, u) }
-      .toDF("id", "url")
-    val bl = Seq("bad.example.org").toDF("host")
-    val kept = Blocklist.filterBlockedHosts(docs, "url", bl, "host")
-      .select("id").as[Long].collect().toSet
-    assert(kept == Set(3L, 4L, 5L, 6L, 7L))
-    val plan = Blocklist.filterBlockedHosts(docs, "url", bl, "host")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"blocklist probe must be a broadcast anti-join:\n$plan")
 
     val ratios = Seq("spark fast spark other", "  ", "none here")
       .toDF("t")
@@ -1512,10 +1484,6 @@ class OpsSpec extends SparkSpec {
     val byHash = SnapshotDiff.diffByHash(prev, cur, "doc_id", Seq("text", "source"))
       .as[(Long, String)].collect().toMap
     assert(byHash == out)
-    val summary = SnapshotDiff.diffSummary(prev, cur, "doc_id", Seq("text", "source"))
-      .as[(String, Long)].collect().toMap
-    assert(summary == Map("added" -> 1L, "removed" -> 1L, "changed" -> 1L,
-      "unchanged" -> 2L))
   }
 
   test("rank eval computes exact integer hits/recall/RR per query") {
@@ -1536,10 +1504,6 @@ class OpsSpec extends SparkSpec {
     assert(out == Seq(
       (1L, 1L, 3L, 333333L, 500000L),
       (2L, 0L, 1L, 0L, 0L)))
-    val s = RankEval.rankEvalSummary(retrieved, relevant, "q_id", "vec_id", "rank", k = 3)
-      .as[(Long, Long, Long, Long, Long)].collect().head
-    // mean recall = (333333+0)//2, mrr = (500000+0)//2
-    assert(s == ((2L, 333333L, 500000L, 166666L, 250000L)))
   }
 
   test("cross-corpus cosine contamination flags the planted near-match only") {

@@ -205,8 +205,11 @@ class RangeLayoutSpec extends SparkSpec {
     val grid = spark.range(4096).select(
       (col("id") % 64).as("x"), (col("id") / 64).as("y"))
     val dir = tempDir("graft-zorder")
-    ZOrder.zorderLayout(grid, ZOrder.mortonKey(col("x"), col("y")), 16)
-      .write.mode("overwrite").parquet(s"$dir/z")
+    // Range-partition on the morton key (balanced key ranges, one
+    // file per partition) and sort within each file.
+    grid.withColumn("z", ZOrder.mortonKey(col("x"), col("y")))
+      .repartitionByRange(16, col("z")).sortWithinPartitions(col("z"))
+      .drop("z").write.mode("overwrite").parquet(s"$dir/z")
     grid.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
       .write.mode("overwrite").parquet(s"$dir/linear")
     // File-level min/max boxes — what format metadata skipping sees.

@@ -260,16 +260,15 @@ class TrainSpec extends SparkSpec {
       (2L, distinct30),
       (3L, "")).toDF("doc_id", "text")
     val got = df.select(col("doc_id") +: Seq(2, 3, 4).flatMap { n =>
-        val st = QualityFilter.topNgramStats(col("text"), n)
-        Seq(st.getField("n_ngrams").as(s"n$n"),
-          st.getField("top_ngram_n").as(s"t$n")) }: _*)
+        val v = graft.ops.TextAnalysis.multiNgramStats(col("text"), Seq(n))
+        Seq(element_at(v, 3).as(s"n$n"), element_at(v, 4).as(s"t$n")) }: _*)
       .orderBy("doc_id")
       .as[(Long, Long, Long, Long, Long, Long, Long)].collect().toSeq
     assert(got(0) == ((1L, 7L, 4L, 6L, 3L, 5L, 3L)))
     assert(got(1) == ((2L, 29L, 1L, 28L, 1L, 27L, 1L)))
     assert(got(2) == ((3L, 0L, 0L, 0L, 0L, 0L, 0L)))
     val v = df.select(col("doc_id"),
-        QualityFilter.verdict(QualityFilter.topNgramRules(col("text"))).as("v"))
+        QualityFilter.verdict(QualityFilter.repetitionRules(col("text"))).as("v"))
       .orderBy("doc_id").as[(Long, String)].collect().toSeq
     assert(v == Seq((1L, "top_2gram"), (2L, "pass"), (3L, "pass")))
   }
@@ -323,15 +322,15 @@ class TrainSpec extends SparkSpec {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     val th = QualityFilter.tokenHashes(col("text"))
     val cols = Seq(2, 3, 4).flatMap { n =>
-      val nat = QualityFilter.topNgramStats(col("text"), n)
+      val nat = graft.ops.TextAnalysis.multiNgramStats(col("text"), Seq(n))
       val hsh = QualityFilter.topNgramStatsHashed(th, n)
       val str = QualityFilter.topNgramStatsStrings(col("text"), n)
       Seq(
-        (nat.getField("n_ngrams") === hsh.getField("n_ngrams") &&
-          nat.getField("n_ngrams") === str.getField("n_ngrams"))
+        (element_at(nat, 3) === hsh.getField("n_ngrams") &&
+          element_at(nat, 3) === str.getField("n_ngrams"))
           .as(s"tot_ok_$n"),
-        (nat.getField("top_ngram_n") === hsh.getField("top_ngram_n") &&
-          nat.getField("top_ngram_n") === str.getField("top_ngram_n"))
+        (element_at(nat, 4) === hsh.getField("top_ngram_n") &&
+          element_at(nat, 4) === str.getField("top_ngram_n"))
           .as(s"top_ok_$n"))
     }
     val allOk = docs.select(cols.reduce(_ && _).as("ok"))

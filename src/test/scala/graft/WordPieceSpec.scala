@@ -341,16 +341,31 @@ class WordPieceSpec extends SparkSpec {
 
   // ------------------------------------------- prototypicality (D4)
 
-  test("prototype pruning: floor share dropped, dropped dominate kept") {
-    // Two tight clusters around e1/e2 with one off-axis straggler each;
-    // 12 vectors, k=2, eps=1/4 -> each cluster of 6 drops exactly 1.
+  /** Two tight clusters around e1/e2 with one off-axis straggler each:
+    * ids 0-5 near e1, 6-11 near e2.
+    */
+  private def protoFixture = {
     def v(x: Double, y: Double): Array[Float] = {
       val n = math.sqrt(x * x + y * y)
       Array((x / n).toFloat, (y / n).toFloat)
     }
     val rows = (0 until 6).map(i => (i.toLong, v(1.0, 0.02 * i))) ++
       (6 until 12).map(i => (i.toLong, v(0.02 * (i - 6), 1.0)))
-    val df = rows.toDF("vec_id", "embedding")
+    rows.toDF("vec_id", "embedding")
+  }
+
+  /** The fixture's centroids and the prune relation scored against them. */
+  private def protoPruned(df: org.apache.spark.sql.DataFrame) = {
+    val cents = graft.ops.Similarity.trainCentroids(df, 2, 2, "embedding", "vec_id")
+      .localCheckpoint()
+    (cents, graft.ops.Prototypes.prunePrototypical(df, "embedding", "vec_id",
+      nClusters = 2, refineRounds = 2, epsNum = 1L, epsDen = 4L,
+      centroidsOpt = Some(cents)).localCheckpoint())
+  }
+
+  test("prototype pruning: floor share dropped, dropped dominate kept") {
+    // 12 vectors, k=2, eps=1/4 -> each cluster of 6 drops exactly 1.
+    val df = protoFixture
     val pruned = graft.ops.Prototypes.prunePrototypical(
       df, "embedding", "vec_id", nClusters = 2, refineRounds = 2,
       epsNum = 1L, epsDen = 4L).collect()
@@ -372,6 +387,31 @@ class WordPieceSpec extends SparkSpec {
     assert(env.getAs[Boolean]("drop_count_exact"))
     assert(env.getAs[Boolean]("dropped_are_most_prototypical"))
     assert(env.getAs[Boolean]("kept_drop_partition"))
+  }
+
+  test("prototype envelope: a dropped or duplicated id reads kept_drop_partition FALSE") {
+    val df = protoFixture
+    val (cents, pruned) = protoPruned(df)
+    def partition(p: org.apache.spark.sql.DataFrame): Boolean =
+      graft.ops.Prototypes.envelopeBools(df, cents, p, "embedding", "vec_id")
+        .head().getAs[Boolean]("kept_drop_partition")
+    assert(partition(pruned))
+    assert(!partition(pruned.where(col("vec_id") =!= 3L)), "dropped id")
+    assert(!partition(pruned.unionByName(pruned.where(col("vec_id") === 3L))),
+      "duplicated id")
+  }
+
+  test("prototype envelope: a swapped centroid_id reads assigned_argmax FALSE") {
+    val df = protoFixture
+    val (cents, pruned) = protoPruned(df)
+    def argmax(p: org.apache.spark.sql.DataFrame): Boolean =
+      graft.ops.Prototypes.envelopeBools(df, cents, p, "embedding", "vec_id")
+        .head().getAs[Boolean]("assigned_argmax")
+    assert(argmax(pruned))
+    val cid = pruned.select("vec_id", "centroid_id").as[(Long, Long)].collect().toMap
+    assert(cid(3L) != cid(9L), "ids 3 and 9 sit in different clusters")
+    assert(!argmax(pruned.withColumn("centroid_id",
+      when(col("vec_id") === 3L, lit(cid(9L))).otherwise(col("centroid_id")))))
   }
 
   // --------------------------------------- CCNet perplexity buckets
