@@ -499,7 +499,7 @@ object GraftFunctions {
       arity("d4_prune", args, 8)
       val embCol = strLit(args(1), "embCol")
       val tbl = tableOf(strLit(args(0), "table"))
-      val prefix = s"graft_idx_d4tvf_${SparkEntry.runToken}_" +
+      val prefix = s"graft_idx_d4tvf_${graft.suite.Shared.runToken}_" +
         d4TvfCalls.incrementAndGet()
       val base = s"${System.getProperty("java.io.tmpdir")}/$prefix"
       val kCap = math.min(math.max(1L, tbl.count()),

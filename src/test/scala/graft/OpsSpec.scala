@@ -2575,7 +2575,7 @@ class OpsSpec extends SparkSpec {
 
   test("session-shared family prior == a fresh unshared ensemble build") {
     // The q150/q156/q162 suite consumes ONE Caches.shared relation
-    // (SparkEntry.familyPrior) instead of rebuilding the corpus-only
+    // (suite.Shared.familyPrior) instead of rebuilding the corpus-only
     // q149 ensemble per query; this pins shared == unshared row for
     // row, and that a second call returns the SAME cached instance
     // (no rebuild).
@@ -2584,8 +2584,8 @@ class OpsSpec extends SparkSpec {
     // shared prior into every later test in the shared SparkSession.
     try {
       val d = "/root/testdata/sf0.001"
-      val shared = SparkEntry.familyPrior(spark, d)
-      val again = SparkEntry.familyPrior(spark, d)
+      val shared = graft.suite.Shared.familyPrior(spark, d)
+      val again = graft.suite.Shared.familyPrior(spark, d)
       assert(shared eq again, "second lookup must hit the shared cache")
       val docs = graft.core.Tables.documents(spark, d)
         .where(col("doc_id") % 10 < 8)
