@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.external.Embedder
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Load stage (SURVEY.md §3.2; reference build_vector_store.py):
@@ -51,39 +51,26 @@ object Load {
     chunks.join(existing.select("video_id", "start_time"),
       Seq("video_id", "start_time"), "left_anti")
 
-  /** Bloom-accelerated [[discoverNewChunks]] (opt-in fast path, exact):
-    * build a bloom filter over the store's composite keys once, then
-    * rows the filter DEFINITELY hasn't seen bypass the anti-join as a
-    * map-only filter — only the might-contain minority (true dups +
-    * fpp false positives) shuffles for exact verification. Same
-    * semantics as the plain anti-join (q142 pins it against q40's
-    * full-value oracle; the definite-new arm is join-free in the plan,
-    * pinned by EtlSpec's plan assert).
-    *
-    * MEASURED (sf10m, q40's shape, warm floors): bloom 16.7 s vs plain
-    * anti-join 7.8 s — the fast path LOSES when the filter is built
-    * in-query over a store comparable in size to the batch (the build
-    * scan + a ~1.2 bytes/key bitmap shipped to every task cost more
-    * than the shuffle they avoid). It WINS in the deployment shape it
-    * exists for: the store's filter is built ONCE per corpus version
-    * (or maintained incrementally) and reused every batch — pass it
-    * via the prebuilt overload — and the batch is miss-dominated
-    * (resumable load: most chunks are new). Same break-even logic as
-    * Spark's own runtime bloom injection thresholds.
+  /** Might `storeBloom` hold the row's key? The key is the one column
+    * of `keyCols`, or the struct of several; build the filter over the
+    * store's keys in the same shape
+    * ([[graft.ops.Sketches.bloomBuild]]).
     */
-  def discoverNewChunksBloom(
-      chunks: DataFrame,
-      existing: DataFrame,
-      expectedItems: Long,
-      fpp: Double = 0.01): DataFrame = {
-    val bloom = graft.ops.Sketches.bloomBuild(
-      existing.select(struct(col("video_id"), col("start_time")).as("__k")),
-      "__k", expectedItems, fpp)
-    discoverNewChunksBloom(chunks, existing, bloom)
-  }
+  def bloomHit(storeBloom: Array[Byte], keyCols: Seq[String]): Column =
+    graft.ops.Sketches.bloomMightContain(storeBloom,
+      if (keyCols.size == 1) col(keyCols.head) else struct(keyCols.map(col): _*))
 
-  /** [[discoverNewChunksBloom]] with a PREBUILT store filter — the
-    * amortized form: build the bitmap once per corpus version
+  /** Bloom-accelerated [[discoverNewChunks]] (opt-in fast path, exact)
+    * over any key: `keys` pairs each column of `rows` with the store
+    * column it matches. Rows the store's filter DEFINITELY hasn't seen
+    * ([[bloomHit]] false) bypass the anti-join as a map-only filter —
+    * only the might-contain minority (true dups + fpp false positives)
+    * shuffles for exact verification. Same semantics as the plain
+    * anti-join (q142 pins it against q40's full-value oracle, q93
+    * against its own; the definite-new arm is join-free in the plan,
+    * pinned by EtlSpec's and PlansSpec's plan asserts).
+    *
+    * Build the filter once per corpus version
     * ([[graft.ops.Sketches.bloomBuild]] over the store keys) and reuse
     * it across batches; on append, OR-merge the accepted batch's keys
     * in (bloom bitmaps with identical parameters union losslessly)
@@ -91,16 +78,27 @@ object Load {
     * false POSITIVE only costs a verified row, but a store key absent
     * from the filter would let its duplicate bypass verification — so
     * never probe with a filter that lags the store.
+    *
+    * MEASURED (sf10m, q40's shape, warm floors): bloom 16.7 s vs plain
+    * anti-join 7.8 s — the fast path LOSES when the filter is built
+    * in-query over a store comparable in size to the batch (the build
+    * scan + a ~1.2 bytes/key bitmap shipped to every task cost more
+    * than the shuffle they avoid). It WINS in the deployment shape it
+    * exists for: the store's filter is built ONCE per corpus version
+    * (or maintained incrementally) and reused every batch, and the
+    * batch is miss-dominated (resumable load: most chunks are new).
+    * Same break-even logic as Spark's own runtime bloom injection
+    * thresholds.
     */
-  def discoverNewChunksBloom(
-      chunks: DataFrame,
+  def bloomAntiJoin(
+      rows: DataFrame,
       existing: DataFrame,
-      storeBloom: Array[Byte]): DataFrame = {
-    val exKeys = existing.select(col("video_id"), col("start_time"))
-    val hit = graft.ops.Sketches.bloomMightContain(storeBloom,
-      struct(col("video_id"), col("start_time")))
-    chunks.where(!hit).unionByName(
-      chunks.where(hit).join(exKeys, Seq("video_id", "start_time"), "left_anti"))
+      storeBloom: Array[Byte],
+      keys: Seq[(String, String)]): DataFrame = {
+    val hit = bloomHit(storeBloom, keys.map(_._1))
+    val exKeys = existing.select(keys.map { case (k, e) => col(e).as(k) }: _*)
+    rows.where(!hit).unionByName(
+      rows.where(hit).join(exKeys, keys.map(_._1), "left_anti"))
   }
 
   /** G5: embed chunk texts through the external model in fixed-size

@@ -220,12 +220,10 @@ Hosts: %s
       val bloom = graft.ops.Sketches.bloomBuild(
         processed, "doc_id",
         expectedItems = parquetRowCount(s, s"$d/documents.parquet") / 2 + 1, fpp)
-      val hit = graft.ops.Sketches.bloomMightContain(bloom, col("doc_id"))
+      val hit = graft.etl.Load.bloomHit(bloom, Seq("doc_id"))
       // Output path — the scale shape: definite misses never join.
-      val definitelyNew = incoming.where(!hit)
-      val verifiedNew = incoming.where(hit)
-        .join(processed, Seq("doc_id"), "left_anti")
-      val newIds = definitelyNew.unionByName(verifiedNew)
+      val newIds = graft.etl.Load.bloomAntiJoin(incoming, processed, bloom,
+        Seq("doc_id" -> "doc_id"))
       // Envelope path — bounded instrumentation, the q62/q65 pattern:
       // label every incoming row (hit x truly-processed) in one join.
       val stats = incoming.withColumn("__hit", hit)

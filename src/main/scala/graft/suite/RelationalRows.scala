@@ -219,7 +219,7 @@ private[graft] object RelationalRows {
       // showcase: with the filter built in-query over a store ~half
       // the probe side, measured sf10m floors are 16.7s vs q40's 7.8s
       // — the win requires the amortized prebuilt-filter deployment
-      // (see Load.discoverNewChunksBloom's Scaladoc for the measured
+      // (see Load.bloomAntiJoin's Scaladoc for the measured
       // break-even).
       val li = lineitem(s, d)
       val existing = li.where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp"))
@@ -227,13 +227,8 @@ private[graft] object RelationalRows {
       val nKeys = math.max(1L, existing.count())
       val bloom = graft.ops.Sketches.bloomBuild(
         existing.select(struct(col("e_ok"), col("e_sk")).as("__k")), "__k", nKeys, 0.01)
-      val hit = graft.ops.Sketches.bloomMightContain(bloom,
-        struct(col("l_orderkey"), col("l_suppkey")))
-      val misses = li.where(!hit)
-      val verified = li.where(hit).join(existing,
-        col("l_orderkey") === col("e_ok") && col("l_suppkey") === col("e_sk"),
-        "left_anti")
-      misses.unionByName(verified.select(misses.columns.map(col): _*))
+      graft.etl.Load.bloomAntiJoin(li, existing, bloom,
+        Seq("l_orderkey" -> "e_ok", "l_suppkey" -> "e_sk"))
         .groupBy(col("l_orderkey"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("l_orderkey"))

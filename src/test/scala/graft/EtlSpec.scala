@@ -141,7 +141,10 @@ class EtlSpec extends SparkSpec {
     // Bloom fast path == plain anti-join, and its definite-new arm is
     // join-free: exactly ONE join in the whole plan (the might-contain
     // verification), with the bloom probe present as a map-side filter.
-    val viaBloom = Load.discoverNewChunksBloom(chunks.toDF(), existing, expectedItems = 1)
+    val keys = Seq("video_id", "start_time")
+    val bloom = graft.ops.Sketches.bloomBuild(
+      existing.select(struct(keys.map(col): _*).as("__k")), "__k", 1, 0.01)
+    val viaBloom = Load.bloomAntiJoin(chunks.toDF(), existing, bloom, keys.map(k => k -> k))
     assert(viaBloom.select("video_id", "start_time").as[(String, Double)].collect().toSet ==
       newOnes.select("video_id", "start_time").as[(String, Double)].collect().toSet)
     val plan = viaBloom.queryExecution.executedPlan.toString
