@@ -39,15 +39,6 @@ object Sampling {
 
   private def hex4(cut: Int): String = f"$cut%04x"
 
-  /** Keep rows whose draw falls below `keep`/65536 (e.g. 6554 ~ 10%). */
-  def hashSample(df: DataFrame, key: Column, keep: Int, salt: String): DataFrame = {
-    require(keep >= 0 && keep <= 0x10000, s"keep must be in [0, 65536], got $keep")
-    // keep = 65536 admits every draw; hex4(65536) would be the 5-char
-    // "10000", which sorts BELOW "2..."-prefixed draws lexicographically.
-    if (keep == 0x10000) df
-    else df.filter(hashHex16(key, salt) < lit(hex4(keep)))
-  }
-
   /** Split assignment from cumulative cut points in 1/65536 units:
     * `cuts = Seq("train" -> 52429, "val" -> 58982, "test" -> 65536)`
     * labels draws [0, 52429) train, [52429, 58982) val, the rest test.
@@ -83,7 +74,7 @@ object Sampling {
     * holds `targetFraction * N` docs allocated by the normalized
     * tempered weights; each source's keep RATE is that allocation over
     * n_s, capped at 1 (this operator never upsamples). The rate is
-    * quantized to `cut` 1/65536 units compatible with [[hashSample]]'s
+    * quantized to `cut` 1/65536 units compatible with [[hashHex16]]'s
     * md5 draw, so membership is stable, incremental, and recomputable
     * by any engine.
     *

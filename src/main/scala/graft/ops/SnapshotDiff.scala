@@ -18,11 +18,10 @@ import org.apache.spark.sql.functions._
   *
   * Content equality here compares the real column values (null-safe
   * `<=>` over the struct), which is exact and lets the oracle mirror it
-  * verbatim. At 100 TB the identical plan runs with each side reduced
+  * verbatim. At 100 TB the same plan can run with each side reduced
   * scan-side to `(key, xxhash64(content...))` so the shuffle carries 16
-  * bytes/row instead of documents — [[diffByHash]] is that form;
-  * equality-of-hash is then exact up to 64-bit collisions (~2^-64 per
-  * pair), the standard CDC trade.
+  * bytes/row instead of documents; equality-of-hash is then exact up
+  * to 64-bit collisions (~2^-64 per pair), the standard CDC trade.
   */
 object SnapshotDiff {
 
@@ -46,27 +45,6 @@ object SnapshotDiff {
         when(col("__prev_c").isNull, lit("added"))
           .when(col("__cur_c").isNull, lit("removed"))
           .when(col("__prev_c") <=> col("__cur_c"), lit("unchanged"))
-          .otherwise(lit("changed")).as("status"))
-  }
-
-  /** The 100 TB spelling: content collapses to one xxhash64 scan-side,
-    * so the join shuffles (key, int64) regardless of document width.
-    * Same output contract as [[diff]] up to 64-bit hash collisions.
-    */
-  def diffByHash(
-      prev: DataFrame,
-      cur: DataFrame,
-      keyCol: String,
-      contentCols: Seq[String]): DataFrame = {
-    require(contentCols.nonEmpty, "contentCols must be non-empty")
-    def hashed(df: DataFrame, as: String) =
-      df.select(col(keyCol).as("key"),
-        xxhash64(contentCols.map(col): _*).as(as))
-    hashed(prev, "__prev_h").join(hashed(cur, "__cur_h"), Seq("key"), "full_outer")
-      .select(col("key"),
-        when(col("__prev_h").isNull, lit("added"))
-          .when(col("__cur_h").isNull, lit("removed"))
-          .when(col("__prev_h") === col("__cur_h"), lit("unchanged"))
           .otherwise(lit("changed")).as("status"))
   }
 }

@@ -5,40 +5,105 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.tools.Sweep
 
-/** The shared pieces of the suite mains: the sweep harness's row loop
-  * and the JSON string escaper Bench and Verify write their output with;
-  * and the guard against public defs nothing but tests reaches.
+/** The shared pieces of the suite mains: the sweep harness's row loop,
+  * the JSON string escaper Bench and Verify write their output with and
+  * the query registry's duplicate-name check; and the source guards:
+  * no public def that nothing but tests reaches, no file over 1,500
+  * lines.
   */
 class HarnessSpec extends SparkSpec {
 
   /** Public defs in `src/main` that no other line of `src/main` or
-    * `perfbench/` names, kept on purpose: the "keep" rows of the
-    * decision table in COVERAGE.md ("Unreached public defs").
+    * `perfbench/` names outside a comment, kept on purpose: the "keep"
+    * rows of the decision table in COVERAGE.md ("Unreached public defs").
     */
   private val keepUnreached = Set(
     // reference implementations the tests compare the product paths to
     "jaccardPairsWithinBlock", "tokenEntropyMicroHof", "vecCosineHof",
-    "topNgramStatsStrings",
+    "topNgramStatsStrings", "topNgramStatsHashed", "tokenHashes",
+    "tokenizeFold", "chunkDF", "editDistanceJoin", "bm25TopK",
+    "tokenIdNgramOverlap", "repeatedSpans", "hardTripletsAnn",
+    "hardTripletsAnnAdc", "saltedJoin",
     // the reference repo's ETL and query surface
-    "readJdbcTable", "ensureSnapshot", "readSkipState",
+    "readJdbcTable", "ensureSnapshot", "readSkipState", "writeSkipState",
     "fetchTranscriptsDetailed", "writeStoreJdbc", "cleanVideosWithStats",
-    "parseQueryResponse", "toParsedQuery", "formatContext",
-    // the IVF index's append half (OpsSpec pins append then search)
-    "appendToIvfIndex")
+    "integrityCheck", "parseQueryResponse", "toParsedQuery", "formatContext",
+    // the multimodal decode, sampling and image near-dup surface
+    "decodeImages", "sampleFrames", "imageNearDuplicates",
+    // the append halves of the standing indexes (OpsSpec pins append
+    // then search, and append == rebuild)
+    "appendToIvfIndex", "appendToCorpusIndex")
 
-  test("every public def in src/main has a caller in src/main or perfbench, or a recorded keep") {
-    import java.nio.file.{Files, Path, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
+  private lazy val root: java.nio.file.Path = {
+    import java.nio.file.{Files, Paths}
+    Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
       .takeWhile(_ != null).find(d => Files.isDirectory(d.resolve("src/main/scala/graft")))
       .getOrElse(fail("no src/main/scala/graft above the working directory"))
-    def sources(dir: Path, exts: String*): Seq[Path] =
-      if (!Files.isDirectory(dir)) Nil
-      else Files.walk(dir).iterator().asScala
-        .filter(f => Files.isRegularFile(f) && exts.exists(f.toString.endsWith)).toSeq
-    val main = sources(root.resolve("src/main/scala"), ".scala")
-    val text = (main ++ sources(root.resolve("perfbench"), ".scala", ".py"))
-      .map(f => f -> Files.readString(f)).toMap
+  }
+
+  /** The files under `dir` (relative to the repo root) ending in one of `exts`. */
+  private def sources(dir: String, exts: String*): Seq[java.nio.file.Path] = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val d = root.resolve(dir)
+    if (!Files.isDirectory(d)) Nil
+    else Files.walk(d).iterator().asScala
+      .filter(f => Files.isRegularFile(f) && exts.exists(f.toString.endsWith)).toSeq
+  }
+
+  /** Scala source with its `//` and `/* */` comments blanked (newlines
+    * kept); string and char literals stay whole, so the `//` inside
+    * `"https://..."` is not taken for a comment.
+    */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder
+    val n = src.length
+    var i = 0
+    while (i < n) {
+      if (src.startsWith("\"\"\"", i)) {
+        var j = src.indexOf("\"\"\"", i + 3)
+        j = if (j < 0) n else j + 3
+        while (j < n && src(j) == '"') j += 1
+        out ++= src.substring(i, j); i = j
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < n && src(j) != '"' && src(j) != '\n') j += (if (src(j) == '\\') 2 else 1)
+        j = math.min(j + 1, n)
+        out ++= src.substring(i, j); i = j
+      } else if (src(i) == '\'' && i + 2 < n && (src(i + 2) == '\'' ||
+          (src(i + 1) == '\\' && i + 3 < n && src(i + 3) == '\''))) {
+        val j = i + (if (src(i + 1) == '\\') 4 else 3)
+        out ++= src.substring(i, j); i = j
+      } else if (src.startsWith("//", i)) {
+        val j = src.indexOf('\n', i)
+        i = if (j < 0) n else j
+      } else if (src.startsWith("/*", i)) {
+        var depth = 1
+        var j = i + 2
+        while (j < n && depth > 0) {
+          if (src.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (src.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        out.append("\n" * src.substring(i, j).count(_ == '\n')); i = j
+      } else { out.append(src(i)); i += 1 }
+    }
+    out.toString
+  }
+
+  test("stripComments blanks comments and keeps string and char literals") {
+    val src = "val u = \"https://x\" // note\n/* a\n b */ val q = '\"' // c\nval t = \"\"\"//raw\"\"\""
+    assert(stripComments(src) ==
+      "val u = \"https://x\" \n\n val q = '\"' \nval t = \"\"\"//raw\"\"\"")
+  }
+
+  test("every public def in src/main has a caller in src/main or perfbench, or a recorded keep") {
+    import java.nio.file.Files
+    val main = sources("src/main/scala", ".scala")
+    val text = (main ++ sources("perfbench", ".scala", ".py")).map { f =>
+      val src = Files.readString(f)
+      f -> (if (f.toString.endsWith(".scala")) stripComments(src) else src)
+    }.toMap
     val ident = "[A-Za-z_][A-Za-z0-9_]*".r
     val mentions = text.values.flatMap(ident.findAllIn).toSeq
       .groupMapReduce(identity)(_ => 1)(_ + _)
@@ -57,6 +122,24 @@ class HarnessSpec extends SparkSpec {
       unkept.map { case (n, f) => s"$f: $n" }.sorted.mkString("\n"))
     val stale = keepUnreached -- unreached.map(_._1)
     assert(stale.isEmpty, s"keepUnreached names that now have a caller or are gone: $stale")
+  }
+
+  test("no src/main Scala file is over 1,500 lines") {
+    import java.nio.file.Files
+    val long = sources("src/main/scala", ".scala")
+      .map(f => root.relativize(f).toString -> Files.readAllLines(f).size)
+      .filter(_._2 > 1500)
+    assert(long.isEmpty, s"split these files by family: ${long.sorted.mkString(", ")}")
+  }
+
+  test("the query registry fails on a name given to two rows") {
+    import graft.suite.QuerySpec
+    val a = QuerySpec("q_dup", (s, _) => s.range(1).toDF("id"), "SELECT 1 AS id")
+    val b = QuerySpec("q_dup", (s, _) => s.range(2).toDF("id"), "SELECT 2 AS id")
+    val c = QuerySpec("q_other", (s, _) => s.range(1).toDF("id"), "SELECT 1 AS id")
+    assert(QuerySpec.byName(Seq(a, c)).keySet == Set("q_dup", "q_other"))
+    val e = intercept[IllegalArgumentException](QuerySpec.byName(Seq(a, c, b)))
+    assert(e.getMessage.contains("q_dup") && !e.getMessage.contains("q_other"))
   }
 
   test("Sweep.overQueries: counts Left and thrown rows, prints the ERR message, releases between rows") {

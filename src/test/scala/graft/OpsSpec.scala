@@ -429,9 +429,6 @@ class OpsSpec extends SparkSpec {
       assert(math.abs(tr - 0.8) < 0.05 && math.abs(va - 0.1) < 0.03 &&
         math.abs(te - 0.1) < 0.03, s"stratum $st: $tr/$va/$te")
     }
-    // hashSample edges: keep-all and keep-none.
-    assert(Sampling.hashSample(ids, col("id"), 65536, "s").count() == 10000)
-    assert(Sampling.hashSample(ids, col("id"), 0, "s").count() == 0)
   }
 
   test("shard packing: exclusive prefix-sum shards across forced multi-partition layout") {
@@ -1480,10 +1477,6 @@ class OpsSpec extends SparkSpec {
       .as[(Long, String)].collect().toMap
     assert(out == Map(1L -> "unchanged", 2L -> "changed", 3L -> "removed",
       4L -> "unchanged", 5L -> "added"))
-    // The 100 TB hash spelling agrees row for row.
-    val byHash = SnapshotDiff.diffByHash(prev, cur, "doc_id", Seq("text", "source"))
-      .as[(Long, String)].collect().toMap
-    assert(byHash == out)
   }
 
   test("rank eval computes exact integer hits/recall/RR per query") {
