@@ -9,8 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `graft.suite`, each builder beside its oracle SQL.
   *
   * Determinism rules used throughout (so driver hash-compare is exact):
-  *  - money/measure sums go through `decimal` so the sum is exact and
-  *    order-independent, then cast back to double;
+  *  - money/measure sums snap each value onto a fixed decimal grid and
+  *    add exact longs (`suite.Shared.dsum`), so the sum is
+  *    order-independent;
   *  - every query ends in an ORDER BY on a unique key;
   *  - column names are identical between Spark and oracle SQL.
   */

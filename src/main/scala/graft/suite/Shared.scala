@@ -6,9 +6,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** The builder helpers more than one row family uses: the exact grid
-  * sums, the soundness envelopes, the run-scoped stores and the
-  * session-shared relations and trained tokenizers.
+/** The row builders' shared helpers, written once for every family:
+  * the exact grid sums, the soundness envelopes, the run-scoped stores
+  * and the session-shared relations and trained tokenizers.
   */
 private[graft] object Shared {
 
